@@ -27,6 +27,7 @@ from datafusion_impl_spark.sources.registry import (
     TABLES,
     load_table,
     read_csv,
+    read_parquet,
     register_all,
     values_table,
 )
@@ -45,11 +46,15 @@ class EngineContext:
     # --- sources (reference §2.2) ------------------------------------------
 
     def read_csv(self, path: str) -> DataFrame:
-        """CSV scan with schema inference (``ctx.read_csv``, readme.md:46)."""
+        """CSV scan with schema inference (``ctx.read_csv``, readme.md:46).
+        The schema is inferred once per session and file version, like a
+        source registered once on the reference's ``SessionContext``; every
+        call still returns a fresh lazy scan."""
         return read_csv(self.spark, path)
 
     def read_parquet(self, path: str) -> DataFrame:
-        return self.spark.read.parquet(path)
+        """Lazy parquet scan, its schema resolved like ``read_csv``'s."""
+        return read_parquet(self.spark, path)
 
     def values(self, rows: list[tuple], columns: list[str]) -> DataFrame:
         """Inline literal table (``FROM (VALUES ...)``, regexp-tests.rs:84)."""

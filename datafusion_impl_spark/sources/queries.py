@@ -5,9 +5,10 @@ plus JSON-lines, the one common ingest format that previously had no
 
 Both are full members of the driver correctness gate:
 
-- the CSV query reads the reference's own golden file and lets DuckDB read
-  the SAME file (``read_csv_auto``) — source parity checked end to end, not
-  just "the file opens";
+- the CSV query reads the reference's own golden file (vendored in
+  ``sources/data/``) and lets DuckDB read the SAME file
+  (``read_csv_auto``) — source parity checked end to end, not just "the
+  file opens";
 - the JSONL query round-trips ``documents`` through a Spark-written
   JSON-lines dataset and aggregates the read-back copy, while the oracle
   computes the same aggregate from the original parquet — any loss in the
@@ -35,8 +36,9 @@ from datafusion_impl_spark.sources.registry import load_table, read_csv
 
 __all__ = ["QUERIES", "ORACLES"]
 
-#: The reference's golden CSV (text,expected) — read-only input.
-_REF_CSV = "/root/reference/tests/test-data.csv"
+#: The reference's 8-row golden CSV (text,expected), vendored beside this
+#: module (transcribed in FIXTURES.md §F1) — read-only input.
+_REF_CSV = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data", "test-data.csv")
 
 #: Where the JSONL round-trip materializes. /tmp, never the read-only
 #: testdata tree; keyed by scale-factor directory name so concurrent

@@ -1,26 +1,32 @@
 """Source/sink surface tests closing the reference's own e2e shape
 (SURVEY.md §2.2): CSV scan feeding the regexp UDF against the golden fixture
-(/root/reference/tests/regexp-tests.rs:5-27 + tests/test-data.csv — asserting
-extracted == expected, which the reference only show()s), plus the show() /
-toPandas() sinks, plus parquet/json round-trips."""
+(the reference's tests/regexp-tests.rs:5-27 + tests/test-data.csv, vendored
+as ``sources/data/test-data.csv`` — asserting extracted == expected, which
+the reference only show()s), plus the show() / toPandas() sinks, plus
+parquet/json round-trips, plus the per-session schema resolver behind
+``read_csv`` / ``load_table``."""
 
 from __future__ import annotations
 
-import os
+import shutil
+import sys
+import threading
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from datafusion_impl_spark.functions.regexp import SAFE_UDF_NAME, register_regexp
+from datafusion_impl_spark.sources.queries import _REF_CSV
 from datafusion_impl_spark.sources.registry import read_csv, values_table
 
-_REF_CSV = "/root/reference/tests/test-data.csv"
 #: The fixture pairs each text with its expected extraction for the pattern
 #: the reference uses throughout (tests/regexp-tests.rs:21).
 _REF_PATTERN = r"(\d+)-(\d+)"
 
 
-@pytest.mark.skipif(not os.path.exists(_REF_CSV), reason="reference fixture absent")
 def test_csv_scan_golden_end_to_end(spark):
     """CSV scan (schema inference) → builtin fast path + parity UDF →
     golden comparison. Null expected cells = empty extraction (the fixture
@@ -43,6 +49,125 @@ def test_csv_scan_golden_end_to_end(spark):
     for row in got:
         assert row.fast == row.expected, row
         assert row.safe == row.expected, row
+
+
+@contextmanager
+def _jobs_started(spark, group: str):
+    """Collects the ids of the Spark jobs started in the block (this
+    thread's job group), after the listener bus has delivered their events."""
+    sc = spark.sparkContext
+    ids: list[int] = []
+    sc.setJobGroup(group, group)
+    try:
+        yield ids
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_warm_source_reads_start_no_job(spark, tmp_path):
+    """A repeat ``read_csv`` / ``load_table`` (the ``events.ts`` shape check
+    included) declares the cached schema: zero Spark jobs. The cold read of
+    a new file does start one, so the count is not vacuous."""
+    from datafusion_impl_spark.sources.registry import load_table
+    from tests.conftest import SF_DIR
+
+    fresh = tmp_path / "golden.csv"
+    shutil.copyfile(_REF_CSV, fresh)
+    with _jobs_started(spark, "resolver-cold") as cold:
+        read_csv(spark, str(fresh))
+    assert cold, "a cold CSV read infers its schema with a Spark job"
+
+    want = {
+        name: load_table(spark, SF_DIR, name).schema for name in ("nation", "events")
+    }
+    with _jobs_started(spark, "resolver-warm") as warm:
+        csv = read_csv(spark, str(fresh))
+        got = {name: load_table(spark, SF_DIR, name).schema for name in want}
+    assert warm == []
+    assert got == want
+    assert got["events"]["ts"].dataType == T.TimestampType()
+    assert csv.columns == ["text", "expected"] and csv.count() == 8
+
+
+def test_rewritten_csv_is_inferred_again(spark, tmp_path):
+    """Rewriting a file changes its (size, mtime) fingerprint: the next read
+    infers again and sees the column go from int to string."""
+    path = tmp_path / "evolving.csv"
+    path.write_text("id,v\n1,10\n2,20\n")
+    first = read_csv(spark, str(path))
+    assert first.schema["v"].dataType == T.IntegerType()
+    assert read_csv(spark, str(path)).schema == first.schema
+    path.write_text("id,v\n1,ten\n2,twenty\n")
+    again = read_csv(spark, str(path))
+    assert again.schema["v"].dataType == T.StringType()
+    assert sorted(tuple(r) for r in again.collect()) == [(1, "ten"), (2, "twenty")]
+
+
+def test_threads_on_one_context_resolve_the_same_schema(spark, tmp_path):
+    """Four threads racing on the cold read of one file through a shared
+    ``EngineContext`` each get plain inference's schema and rows."""
+    from datafusion_impl_spark.engine import EngineContext
+
+    path = tmp_path / "shared.csv"
+    path.write_text("k,x,label\n" + "".join(f"{i},{i * 0.5},r{i % 7}\n" for i in range(200)))
+    want = spark.read.csv(str(path), header=True, inferSchema=True)
+    want_rows = sorted(tuple(r) for r in want.collect())
+    ctx = EngineContext(spark)
+    start = threading.Barrier(4, timeout=60)
+
+    def read():
+        start.wait()
+        df = ctx.read_csv(str(path))
+        return df.schema, sorted(tuple(r) for r in df.collect())
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(4) as ex:
+            futures = [ex.submit(read) for _ in range(4)]
+            results = [f.result(timeout=120) for f in futures]
+    finally:
+        sys.setswitchinterval(interval)
+    assert len(results) == 4
+    for schema, rows in results:
+        assert schema == want.schema
+        assert rows == want_rows
+
+
+def test_self_join_scans_get_fresh_attribute_ids(spark):
+    """Only schemas are shared, never DataFrames: two ``nation`` scans join
+    as two relations (25 x 25 pairs), not as one column compared with
+    itself."""
+    from datafusion_impl_spark.sources.registry import load_table
+    from tests.conftest import SF_DIR
+
+    a = load_table(spark, SF_DIR, "nation")
+    b = load_table(spark, SF_DIR, "nation")
+    pairs = a.crossJoin(b).select(
+        a.n_nationkey.alias("x"), b.n_nationkey.alias("y")
+    )
+    assert pairs.distinct().count() == 625
+    assert pairs.filter("x != y").count() == 600
+
+
+def test_directory_sources_are_inferred_every_call(spark, tmp_path):
+    """A directory is not fingerprinted (one stat cannot see a file inside
+    it change): every read infers, and sees a file added between reads."""
+    from datafusion_impl_spark.engine import EngineContext
+
+    ctx = EngineContext(spark)
+    csv_dir, pq_dir = str(tmp_path / "csv_dir"), str(tmp_path / "pq_dir")
+    values_table(spark, [(1, "a")], ["id", "name"]).write.csv(csv_dir, header=True)
+    values_table(spark, [(1, "a")], ["id", "name"]).write.parquet(pq_dir)
+    for attempt in range(2):
+        with _jobs_started(spark, f"resolver-dir-{attempt}") as jobs:
+            df = read_csv(spark, csv_dir)
+            ctx.read_parquet(pq_dir)
+        assert len(jobs) >= 2, attempt
+        assert df.count() == attempt + 1
+        (tmp_path / "csv_dir" / "part-extra.csv").write_text("id,name\n2,b\n")
 
 
 def test_show_sink(spark, capsys):
