@@ -144,7 +144,7 @@ _MODULES = [
 #       then the 47 r6-evidence pads (window overflows 50 by design; the
 #       driver takes the head, leftovers stay next in line). Evidence
 #       floor moves to r7.
-_PRIORITY = [
+_ROTATION = [
     # --- r17 (optimization round 2): MATERIALLY-CHANGED queries first —
     # every query whose plan this round rewrote (array-packed exact
     # verifies + grouped pair expansion, struct-min argmin assignments,
@@ -196,7 +196,8 @@ _PRIORITY = [
     "stream_bloom_ingest_filter",
     "stream_quantile_histogram",
     "stream_cms_heavy_hitters",
-    # --- oldest-evidence pads (r7; head of the 25 queued in r16) ---
+    # --- oldest-evidence pads (r7; the 25 queued in r16 — the window
+    # takes their head, the rest queue for the next round) ---
     "q14_promo_effect",
     "q15_top_supplier",
     "q16_supplier_part_counts",
@@ -205,11 +206,6 @@ _PRIORITY = [
     "q21_waiting_suppliers",
     "q22_idle_rich_customers",
     "q4_order_priority",
-]
-
-# Beyond the 50-query window: the 17 remaining r7-evidence pads queue
-# here for r18 (still ahead of everything else in queries() order).
-_NEXT_ROTATION: list[str] = [
     "q5_local_supplier_volume",
     "q7_nation_volume",
     "q8_market_share",
@@ -229,11 +225,16 @@ _NEXT_ROTATION: list[str] = [
     "zorder_layout_effectiveness",
 ]
 
+# The correctness window is the first 50 queries(); both halves are cut
+# from the one rotation list so the window cannot drift from that size.
+_PRIORITY = _ROTATION[:50]
+_NEXT_ROTATION = _ROTATION[50:]
+
 
 def _ordered(merged: dict, *, complete: bool = True) -> dict:
-    """Priority names first (in _PRIORITY order), then _NEXT_ROTATION, then
-    everything else in module order — so the driver's 50-query window is
-    exactly the head of _PRIORITY while the full registry stays complete.
+    """Rotation names first (in _ROTATION order), then everything else in
+    module order — so the 50-query correctness window is exactly _PRIORITY
+    while the full registry stays complete.
 
     A rotation name that doesn't resolve in the merged QUERIES registry
     fails LOUDLY (r12 advice): a typo would otherwise silently shrink the
@@ -241,11 +242,10 @@ def _ordered(merged: dict, *, complete: bool = True) -> dict:
     gate. The ORACLES registry is legitimately sparser (rows-only-by-design
     queries carry no oracle — r15 stages two of them), so its ordering
     passes ``complete=False`` and just skips absent names."""
-    rotation = [n for n in (*_PRIORITY, *_NEXT_ROTATION)]
     if complete:
-        missing = [n for n in rotation if n not in merged]
+        missing = [n for n in _ROTATION if n not in merged]
         assert not missing, f"rotation names not in registry: {missing}"
-    out = {name: merged[name] for name in rotation if name in merged}
+    out = {name: merged[name] for name in _ROTATION if name in merged}
     out.update((k, v) for k, v in merged.items() if k not in out)
     return out
 

@@ -15,8 +15,19 @@ Layout:
     operators   composed operators (dedup, similarity, multimodal, relational)
     plans       declarative query definitions (tpch-ish, analytics)
     streaming   Structured Streaming operators over the events table
+    worker_daemon  Spark's Python worker daemon, started warm
+
+Importing the package imports no pyspark: ``python -m
+datafusion_impl_spark.worker_daemon`` runs this file first and must fix the
+workers' ``sys.path`` before pyspark loads. ``get_spark`` resolves lazily.
 """
 
-from datafusion_impl_spark.session import get_spark  # noqa: F401
-
 __version__ = "0.1.0"
+
+
+def __getattr__(name: str):
+    if name == "get_spark":
+        from datafusion_impl_spark.session import get_spark
+
+        return get_spark
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

@@ -24,7 +24,9 @@ Two implementations, by design:
   the full reference contract, including per-row patterns and
   error-swallowing. Compiled patterns are memoized per Python worker
   (fixing the reference's per-row ``Regex::new`` recompile anti-pattern,
-  rs:97).
+  rs:97). The package's worker daemon imports this module before it forks
+  (``datafusion_impl_spark.worker_daemon``), so workers start with it,
+  pandas and pyarrow already loaded.
 
 Dialect note: the reference uses Rust ``regex`` (linear-time, no
 backreferences/lookaround), the fast path uses Java regex, the safe UDF uses
