@@ -39,6 +39,8 @@ from contextlib import contextmanager
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
+from datafusion_impl_spark.session import scoped_conf
+
 
 def md5_long(col: Column) -> Column:
     """Portable 60-bit non-negative hash of a string column.
@@ -81,17 +83,9 @@ def bounded_iteration(spark: SparkSession, n_rows: int):
     that sizes the pin is one cheap job over that checkpoint. Measured at
     sf0.1 (r13, graph family): components 5.7 s → ~2 s, PageRank 6.4 s → ~2 s.
 
-    NOTE: this mutates the session-global shuffle-partition conf for the
-    duration of the loop (restored in ``finally``) and therefore assumes no
-    CONCURRENT queries plan on the same SparkSession while the loop runs —
-    true for the sequential bench/driver harness. A threaded harness would
-    need the override scoped per-frame (``df.repartition(n)`` on the
-    iteration frames) instead."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(_iteration_partitions(n_rows))
-    )
+    The pin goes through ``session.scoped_conf``: overlapping pins from
+    concurrent clients take turns and always restore the session's values.
+    """
     # AQE's job inside this zone — re-planning partition counts at runtime —
     # is already done better here: the partition count IS derived from the
     # measured row count. Left on, AQE materializes every exchange of every
@@ -99,12 +93,14 @@ def bounded_iteration(spark: SparkSession, n_rows: int):
     # stage), which on these bounded frames is pure scheduling overhead at
     # any scale; the skew/coalesce protections it buys matter on corpus-scale
     # shuffles, which are all checkpointed BEFORE entering the zone.
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with scoped_conf(
+        spark,
+        {
+            "spark.sql.shuffle.partitions": str(_iteration_partitions(n_rows)),
+            "spark.sql.adaptive.enabled": "false",
+        },
+    ):
         yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
 
 
 def materialize(df):

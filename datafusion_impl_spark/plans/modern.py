@@ -774,7 +774,6 @@ def sql_scripting_threshold_search(spark: SparkSession, sf_dir: str) -> DataFram
         F.floor(F.col("o_totalprice") / _SCRIPT_BAND).cast("long").alias("band")
     ).agg(F.count(F.lit(1)).alias("cnt"))
     hist.createOrReplaceTempView("order_band_hist_script")
-    spark.conf.set("spark.sql.scripting.enabled", "true")
     return spark.sql(f"""
 BEGIN
   DECLARE n BIGINT;

@@ -28,11 +28,23 @@ before it forks. It starts, as Spark's does, only when a task first needs
 Python. ``get_spark`` also puts the package's parent directory on the
 workers' ``PYTHONPATH``, so workers (and the daemon) import the package
 whatever the driver's working directory is.
+
+Config pins: every stage that needs other runtime confs
+(``operators.bounded_iteration``, the streaming shuffle and state-store
+pins) runs under ``scoped_conf``, the one place in the package that sets and
+restores runtime confs on a live session. Pins take turns under one
+process-wide lock, so overlapping pins from concurrent clients always put
+back the values from before any pin. A ``spark.newSession()`` child would
+isolate the confs but cannot carry a pin: frames built from the caller's
+session plan with the caller's confs, and the caller cannot see a
+memory-sink view that a stream in the child registered.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -107,3 +119,33 @@ def get_spark(app_name: str = "datafusion_impl_spark", master: str | None = None
     spark = configure(builder).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+_CONF_LOCK = threading.RLock()
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, confs: dict[str, str]):
+    """Set the runtime ``confs`` on ``spark`` for the ``with`` body, then put
+    each key back: a key that had a value gets it again, a key left at its
+    default is unset.
+
+    Pins take turns: the body runs under one process-wide re-entrant lock,
+    so a pin that overlaps another waits for it, and each restore puts back
+    the values from before any pin. A thread may nest pins; the inner one
+    restores first. What the lock does not cover: a query that another
+    thread plans without a pin, while a pin is held, sees the pinned values.
+    The package only pins plan-shape confs (partition counts, AQE, the state
+    store provider), which change how that query runs, never its result."""
+    with _CONF_LOCK:
+        saved = {key: spark.conf.get(key, None) for key in confs}
+        try:
+            for key, value in confs.items():
+                spark.conf.set(key, value)
+            yield
+        finally:
+            for key, value in saved.items():
+                if value is None:
+                    spark.conf.unset(key)
+                else:
+                    spark.conf.set(key, value)

@@ -33,6 +33,7 @@ from pyspark.sql.types import (
 )
 
 from datafusion_impl_spark.operators import duck_md5_long, md5_long
+from datafusion_impl_spark.session import scoped_conf
 
 #: DuckDB fragment matching md5_long over the document text column.
 _DUCK_MD5 = duck_md5_long("text")
@@ -927,6 +928,17 @@ ORDER BY event_type
 #: would be sized to key cardinality; queries restore the session value.
 _TWS_SHUFFLE = "16"
 
+#: Confs every TWS query runs under: transformWithState needs a state store
+#: with multiple column families, which the default HDFS-backed provider
+#: refuses and the bundled RocksDB provider supports.
+_TWS_CONF = {
+    "spark.sql.streaming.stateStore.providerClass": (
+        "org.apache.spark.sql.execution.streaming.state."
+        "RocksDBStateStoreProvider"
+    ),
+    "spark.sql.shuffle.partitions": _TWS_SHUFFLE,
+}
+
 #: Shuffle/state-partition pin for the plain streaming aggregations (the
 #: non-TWS file-feed streams: sketch maintenance, quality gate, CDC apply).
 #: Their state is tiny (a counter grid, a histogram, per-key registers)
@@ -935,28 +947,17 @@ _TWS_SHUFFLE = "16"
 #: multiplies fixed costs by ~8x for zero parallelism gain. r16 A/B on the
 #: CMS stream (alternating, 2 rounds, sf0.1): 32 -> 5.6 s, 16 -> 3.9 s,
 #: 8 -> 5.3 s, 4 -> 3.3 s, 2 -> 3.2 s, 1 -> erratic (serialized commits).
-#: On a real deployment this is sized to state volume / key cardinality —
-#: override via SPARK_GRAFT_STREAM_SHUFFLE; queries restore the session
-#: value after the stream completes.
-_STREAM_AGG_SHUFFLE = __import__("os").environ.get(
-    "SPARK_GRAFT_STREAM_SHUFFLE", "4"
-)
+#: On a real deployment this is sized to state volume / key cardinality;
+#: queries restore the session value after the stream completes.
+_STREAM_AGG_SHUFFLE = "4"
 
 
 def _run_pinned(spark: SparkSession, writer) -> None:
     """Start ``writer`` (a fully-configured DataStreamWriter) under the
     stream shuffle pin and block until the availableNow run completes,
     restoring the session's shuffle-partition conf after."""
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, _STREAM_AGG_SHUFFLE)
-    try:
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": _STREAM_AGG_SHUFFLE}):
         writer.start().awaitTermination()
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 
 #: Session timeout for the event-time TWS operator: a user idle for this
@@ -1225,20 +1226,9 @@ def _tws_composite_view(spark: SparkSession, sf_dir: str) -> str:
             StructField("fired", LongType()),
         ]
     )
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    shuffle_key = "spark.sql.shuffle.partitions"
-    prev_shuffle = spark.conf.get(shuffle_key, None)
-    spark.conf.set(shuffle_key, _TWS_SHUFFLE)
-
-    feed = _tws_shared_split_feed(sf_dir)
-    view = f"tws_composite_{uuid.uuid4().hex}"
-    try:
+    with scoped_conf(spark, _TWS_CONF):
+        feed = _tws_shared_split_feed(sf_dir)
+        view = f"tws_composite_{uuid.uuid4().hex}"
         src = (
             spark.readStream.schema(
                 "user_id bigint, event_id bigint, event_type string, "
@@ -1263,15 +1253,6 @@ def _tws_composite_view(spark: SparkSession, sf_dir: str) -> str:
             .start()
         )
         q.awaitTermination()
-    finally:
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
-        if prev_shuffle is None:
-            spark.conf.unset(shuffle_key)
-        else:
-            spark.conf.set(shuffle_key, prev_shuffle)
         # shared feed: kept for reuse (process-memoized)
     _TWS_COMPOSITE_VIEWS[(app_id, sf_dir)] = view
     return view
@@ -1540,34 +1521,24 @@ def stream_tws_warm_start(spark: SparkSession, sf_dir: str) -> DataFrame:
             StructField("value_micros", LongType()),
         ]
     )
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    shuffle_key = "spark.sql.shuffle.partitions"
-    prev_shuffle = spark.conf.get(shuffle_key, None)
-    spark.conf.set(shuffle_key, _TWS_SHUFFLE)
-
     import os
 
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "value"
-    )
-    micros = F.floor(F.col("value") * 1_000_000 + F.lit(0.5)).cast("long")
-    history = (
-        ev.filter(F.col("event_id") % 2 == 0)
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum(micros).alias("s"))
-    )
-    # Shared staged feed (r9): the live stream is exactly the shared split's
-    # odd file; history is the even half, aggregated batch-side above.
-    feed = os.path.join(_tws_shared_split_feed(sf_dir), "odd.parquet")
+    with scoped_conf(spark, _TWS_CONF):
+        ev = load_table(spark, sf_dir, "events").select(
+            "event_id", "user_id", "value"
+        )
+        micros = F.floor(F.col("value") * 1_000_000 + F.lit(0.5)).cast("long")
+        history = (
+            ev.filter(F.col("event_id") % 2 == 0)
+            .groupBy("user_id")
+            .agg(F.count(F.lit(1)).alias("n"), F.sum(micros).alias("s"))
+        )
+        # Shared staged feed (r9): the live stream is exactly the shared
+        # split's odd file; history is the even half, aggregated batch-side
+        # above.
+        feed = os.path.join(_tws_shared_split_feed(sf_dir), "odd.parquet")
 
-    view = "tws_warm_start_drv"
-    try:
+        view = "tws_warm_start_drv"
         src = (
             spark.readStream.schema("user_id bigint, value double")
             .option("recursiveFileLookup", "true")
@@ -1588,16 +1559,7 @@ def stream_tws_warm_start(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
-        if prev_shuffle is None:
-            spark.conf.unset(shuffle_key)
-        else:
-            spark.conf.set(shuffle_key, prev_shuffle)
-        pass  # shared feed: kept for reuse by the other TWS queries
+        # shared feed: kept for reuse by the other TWS queries
     per_user = spark.table(view).groupBy("user_id").agg(
         F.max(F.struct("n_events", "value_micros")).alias("fin")
     ).select(
@@ -1886,16 +1848,13 @@ def stream_ann_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             papq.write_table(qt.slice(half), os.path.join(feed, "q1.parquet"))
         _ANN_FEEDS[sf_dir] = feed
 
-    shuffle_key = "spark.sql.shuffle.partitions"
-    prev_shuffle = spark.conf.get(shuffle_key, None)
     # This is a PLAIN streaming aggregation (one collect_list per query id,
     # ~256 tiny keys), not a transformWithState stream — its state-store
     # commit cost profile matches the sketch-maintenance streams, so it
     # takes the measured stream-agg pin (r16 A/B: 4) rather than the TWS
     # pin of 16 that it inherited (r17).
-    spark.conf.set(shuffle_key, _STREAM_AGG_SHUFFLE)
-    view = "stream_ann_adc_topk_sink"
-    try:
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": _STREAM_AGG_SHUFFLE}):
+        view = "stream_ann_adc_topk_sink"
         stream = (
             spark.readStream.schema(
                 "vec_id bigint, embedding array<float>, label int"
@@ -1922,11 +1881,6 @@ def stream_ann_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         handle.awaitTermination()
-    finally:
-        if prev_shuffle is None:
-            spark.conf.unset(shuffle_key)
-        else:
-            spark.conf.set(shuffle_key, prev_shuffle)
         # feed kept for reuse (process-memoized, see _ANN_FEEDS)
     res = (
         spark.table(view)
@@ -2089,19 +2043,9 @@ def stream_contribution_capping(spark: SparkSession, sf_dir: str) -> DataFrame:
             StructField("event_type", StringType()),
         ]
     )
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    shuffle_key = "spark.sql.shuffle.partitions"
-    prev_shuffle = spark.conf.get(shuffle_key, None)
-    spark.conf.set(shuffle_key, _TWS_SHUFFLE)
-    feed = _tws_shared_split_feed(sf_dir)
-    view = "stream_cap_gate_drv"
-    try:
+    with scoped_conf(spark, _TWS_CONF):
+        feed = _tws_shared_split_feed(sf_dir)
+        view = "stream_cap_gate_drv"
         src = (
             spark.readStream.schema(
                 "event_id bigint, user_id bigint, event_type string, "
@@ -2125,15 +2069,6 @@ def stream_contribution_capping(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
-        if prev_shuffle is None:
-            spark.conf.unset(shuffle_key)
-        else:
-            spark.conf.set(shuffle_key, prev_shuffle)
         # shared feed: kept for reuse by the other TWS queries
     from datafusion_impl_spark.sources.registry import load_table
 

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from datafusion_impl_spark import scale
+from datafusion_impl_spark.session import scoped_conf
 from datafusion_impl_spark.sources.registry import load_table
 from tests.conftest import SF_DIR
 
@@ -339,10 +340,7 @@ def test_cbo_stats_inform_the_plan(spark):
         load_table(spark, SF_DIR, t).select(*cols).write.mode(
             "overwrite"
         ).saveAsTable(f"cbo_{t}")
-    old = {
-        c: spark.conf.get(c, None)
-        for c in ("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled")
-    }
+    cbo_keys = ("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled")
     try:
         scale.analyze_tables(spark, "cbo_customer", "cbo_orders", "cbo_nation")
         # table-level stats recorded in the catalog
@@ -351,9 +349,7 @@ def test_cbo_stats_inform_the_plan(spark):
         n_cust = load_table(spark, SF_DIR, "customer").count()
         assert stats_rows and f"{n_cust} rows" in stats_rows[0]
 
-        def _stats(cbo: bool):
-            spark.conf.set("spark.sql.cbo.enabled", str(cbo).lower())
-            spark.conf.set("spark.sql.cbo.joinReorder.enabled", str(cbo).lower())
+        def _stats():
             o, c, n = (
                 spark.table("cbo_orders"),
                 spark.table("cbo_customer"),
@@ -367,25 +363,22 @@ def test_cbo_stats_inform_the_plan(spark):
             )
             return j, j._jdf.queryExecution().optimizedPlan().stats()
 
-        j_on, st_on = _stats(True)
-        assert st_on.rowCount().isDefined()
-        # 25 = nation.n_name NDV from ANALYZE ... FOR ALL COLUMNS: the
-        # estimate is column-stat-derived, not a size heuristic
-        assert st_on.rowCount().get() == 25
-        assert st_on.attributeStats().size() > 0
-        assert "BroadcastHashJoin" in _plan(j_on)
-        rows_on = sorted((r.n_name, r["count"]) for r in j_on.collect())
+        with scoped_conf(spark, dict.fromkeys(cbo_keys, "true")):
+            j_on, st_on = _stats()
+            assert st_on.rowCount().isDefined()
+            # 25 = nation.n_name NDV from ANALYZE ... FOR ALL COLUMNS: the
+            # estimate is column-stat-derived, not a size heuristic
+            assert st_on.rowCount().get() == 25
+            assert st_on.attributeStats().size() > 0
+            assert "BroadcastHashJoin" in _plan(j_on)
+            rows_on = sorted((r.n_name, r["count"]) for r in j_on.collect())
 
-        j_off, st_off = _stats(False)
-        assert not st_off.rowCount().isDefined()
-        # CBO changes estimates, never results
-        assert rows_on == sorted((r.n_name, r["count"]) for r in j_off.collect())
+        with scoped_conf(spark, dict.fromkeys(cbo_keys, "false")):
+            j_off, st_off = _stats()
+            assert not st_off.rowCount().isDefined()
+            # CBO changes estimates, never results
+            assert rows_on == sorted((r.n_name, r["count"]) for r in j_off.collect())
     finally:
-        for c, v in old.items():
-            if v is None:
-                spark.conf.unset(c)
-            else:
-                spark.conf.set(c, v)
         for t in ("cbo_customer", "cbo_orders", "cbo_nation"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
@@ -578,10 +571,7 @@ def test_runtime_bloom_filter_prunes_shuffle_join_probe(spark):
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
         "spark.sql.autoBroadcastJoinThreshold": "-1",  # force a shuffle join
     }
-    saved = {c: spark.conf.get(c, None) for c in confs}
-    try:
-        for c, v in confs.items():
-            spark.conf.set(c, v)
+    with scoped_conf(spark, confs):
         li = load_table(spark, SF_DIR, "lineitem")
         orders = load_table(spark, SF_DIR, "orders").filter(
             F.col("o_orderpriority") == "1-URGENT"
@@ -602,9 +592,3 @@ def test_runtime_bloom_filter_prunes_shuffle_join_probe(spark):
             .collect()
         )
         assert j.collect() == expected
-    finally:
-        for c, v in saved.items():
-            if v is None:
-                spark.conf.unset(c)
-            else:
-                spark.conf.set(c, v)

@@ -9,12 +9,12 @@ sink, and compares against the identical batch plan.
 from __future__ import annotations
 
 import shutil
-from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import functions as F
 
 from datafusion_impl_spark import streaming as stx
+from datafusion_impl_spark.session import scoped_conf
 from datafusion_impl_spark.sources.registry import load_table
 from tests.conftest import SF_DIR
 
@@ -403,26 +403,20 @@ def test_stream_near_dup_flags_equals_batch(spark, tmp_path):
     assert batch_flagged > 0
 
 
-@contextmanager
 def _rocksdb_state(spark):
     """transformWithState needs a state store with multiple column
     families — the default HDFSBackedStateStoreProvider refuses; RocksDB
     (bundled rocksdbjni) supports it. Scoped to the TWS tests so every
     other streaming test keeps exercising the default provider."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
+    return scoped_conf(
+        spark,
+        {
+            "spark.sql.streaming.stateStore.providerClass": (
+                "org.apache.spark.sql.execution.streaming.state."
+                "RocksDBStateStoreProvider"
+            )
+        },
     )
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 
 def _has_protobuf() -> bool:
