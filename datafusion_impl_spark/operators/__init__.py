@@ -78,7 +78,7 @@ def bounded_iteration(spark: SparkSession, n_rows: int):
     prefix doubling) loop over BOUNDED frames (thousands of rows at sf0.1),
     but with the session's core-count shuffle partitions every round schedules
     32-task stages whose fixed scheduling cost dwarfs the actual work. Heavy
-    upstream plans are localCheckpoint-ed at full parallelism BEFORE entering
+    upstream plans are materialized at full parallelism BEFORE entering
     this context, so only the tiny iterative stages are pinned, and the count
     that sizes the pin is one cheap job over that checkpoint. Measured at
     sf0.1 (r13, graph family): components 5.7 s → ~2 s, PageRank 6.4 s → ~2 s.
@@ -106,9 +106,11 @@ def bounded_iteration(spark: SparkSession, n_rows: int):
 def materialize(df):
     """Truncate lineage for a subtree consumed by multiple downstream
     branches (LSH tables self-joined for candidates, shingle sets reused by
-    the verify pass, ...). Without this Catalyst re-executes the whole
-    subtree once per consumer — the MinHash plan scanned its parquet source
-    18 times. On a cluster this is ``checkpoint()`` to reliable storage; the
-    materialized frame is always the *bounded sketch* (signatures, buckets,
-    shingle sets), never the raw corpus."""
+    the verify pass, ...) or carried across the rounds of an iterative loop.
+    Without this Catalyst re-executes the whole subtree once per consumer —
+    the MinHash plan scanned its parquet source 18 times. On a cluster this
+    is ``checkpoint()`` to reliable storage; the materialized frame is always
+    the *bounded sketch* (signatures, buckets, shingle sets), never the raw
+    corpus. This is the package's only checkpoint call, so that choice is
+    made here and nowhere else."""
     return df.localCheckpoint(eager=True)

@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from datafusion_impl_spark.operators import duck_md5_long, md5_long
+from datafusion_impl_spark.operators import duck_md5_long, materialize, md5_long
 from datafusion_impl_spark.operators.text import _DUCK_TOKENS, tokens
 from datafusion_impl_spark.sources.registry import load_table
 
@@ -1296,7 +1296,7 @@ def corpus_novelty_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     sh = _shingles(docs)
     # the shingle table feeds the first-occurrence index AND the join probe
-    sh = sh.localCheckpoint(eager=True)
+    sh = materialize(sh)
     fo = sh.groupBy("shingle").agg(F.min("doc_id").alias("fo"))
     per_doc = (
         sh.join(fo, "shingle")

@@ -316,8 +316,8 @@ def dedup_documents_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
       band md5 key → self-join on (band, key) → exact Jaccard on candidates.
     """
     corpus = near_dup_corpus(spark, sf_dir)
-    # the shingle table feeds four branches (signatures, sizes, both sides of
-    # the Jaccard verify) — materialize it once (see operators.materialize)
+    # the shingle table feeds two branches (the signatures in _sig_wide and
+    # the shingle sets of the Jaccard verify) — materialize it once
     sh = materialize(_shingles(corpus))
     cand = _band_candidates(_band_table(sh))
     return _exact_jaccard_verify(cand, sh)

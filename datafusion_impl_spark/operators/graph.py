@@ -9,7 +9,7 @@ node's label to its label's label — so reachable distance DOUBLES per round
 and ⌈log₂(diameter)⌉ rounds resolve any component. The loop stops when a
 round changes no label (one count() per round over the bounded label table —
 the standard iterate-and-check pattern; the count is against the same
-localCheckpoint the next round needs anyway, so the extra driver action
+checkpoint the next round needs anyway, so the extra driver action
 costs one job over a tiny frame, never a corpus scan). A ``max_rounds``
 backstop (default 16 ⇒ diameter 65536) bounds the loop on adversarial
 graphs; hitting it raises rather than returning silently-truncated
@@ -20,6 +20,13 @@ At 100 TB: each round is a shuffle keyed by doc_id over the *pair graph*
 (bounded by near-dup volume, orders of magnitude smaller than the corpus);
 log-diameter rounds via compression is exactly the large/small-star
 connected-components recipe.
+
+Every query here reads the pair graph through :func:`_pair_graph`, which
+materializes it once. The four kernels (:func:`connected_components`,
+:func:`kcore_edges`, :func:`pagerank`, :func:`label_propagation`) share one
+input contract: the frame they are handed is a checkpoint or a cheap view
+of one (:func:`_symmetric`), they never checkpoint it, and they materialize
+only their per-round state.
 """
 
 from __future__ import annotations
@@ -31,6 +38,7 @@ from datafusion_impl_spark.operators import (
     _ROWS_PER_ITER_PARTITION,
     _iteration_partitions,
     bounded_iteration as _bounded_iteration,
+    materialize,
 )
 from datafusion_impl_spark.operators.dedup import (
     _CORPUS_SQL,
@@ -43,27 +51,38 @@ __all__ = ["QUERIES", "ORACLES", "connected_components", "label_propagation"]
 _MAX_ROUNDS = 16
 
 
+def _pair_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The MinHash near-dup pairs (``doc_a`` < ``doc_b``), materialized once:
+    each graph query reads them more than once, and every read of the lazy
+    frame would re-run the whole MinHash pipeline."""
+    return materialize(dedup_documents_minhash(spark, sf_dir).select("doc_a", "doc_b"))
+
+
+def _symmetric(pairs: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+    """Both orientations of every pair as (``src``, ``dst``): a lazy explode
+    that reads ``pairs`` in one scan."""
+    return pairs.select(
+        F.inline(
+            F.array(
+                F.struct(F.col("doc_a").alias(src), F.col("doc_b").alias(dst)),
+                F.struct(F.col("doc_b").alias(src), F.col("doc_a").alias(dst)),
+            )
+        )
+    )
+
+
 def connected_components(pairs: DataFrame, max_rounds: int = _MAX_ROUNDS) -> DataFrame:
     """Min-label propagation with path compression over an undirected pair
     list (``doc_a``, ``doc_b``) → (``doc_id``, ``component``) where component
     is the minimum doc_id in the node's connected component (exact: iterated
     until no label changes; raises if ``max_rounds`` is hit first)."""
-    edges = pairs.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    ).union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-    # Truncate lineage before iterating: without this every round re-embeds
-    # the upstream pair-generation DAG and the plan tree grows multiplicatively
-    # (Catalyst analysis alone blows up). The edge list is the bounded
-    # near-dup graph, so materializing it is the iterative-algorithm pattern —
-    # on a cluster this would be checkpoint() to reliable storage.
-    edges = edges.localCheckpoint(eager=True)
+    edges = _symmetric(pairs)
     with _bounded_iteration(edges.sparkSession, edges.count()):
         labels = (
             edges.select(F.col("src").alias("doc_id"))
             .distinct()
             .withColumn("label", F.col("doc_id"))
         )
-        labels = labels.localCheckpoint(eager=True)
         for _ in range(max_rounds):
             prev = labels
             # (a) one-hop propagation: each node also keeps its own label via
@@ -77,13 +96,13 @@ def connected_components(pairs: DataFrame, max_rounds: int = _MAX_ROUNDS) -> Dat
                 .groupBy("doc_id")
                 .agg(F.min("label").alias("label"))
             )
-            labels = labels.localCheckpoint(eager=True)
+            labels = materialize(labels)
             # Fixed-point check BEFORE paying the compression join: if one-hop
             # propagation changed nothing, then for every edge (u,v)
             # label(u) = label(v), i.e. each component already shares one label
             # and compression would be the identity — return prev and skip the
             # final round's self-join + checkpoint entirely. Both sides are
-            # checkpointed, so this is one tiny join+count job.
+            # bounded label tables, so this is one tiny join+count job.
             changed = (
                 labels.select("doc_id", F.col("label").alias("new_label"))
                 .join(prev, "doc_id")
@@ -109,7 +128,7 @@ def connected_components(pairs: DataFrame, max_rounds: int = _MAX_ROUNDS) -> Dat
             labels = labels.join(lmap, labels.label == F.col("m_id")).select(
                 "doc_id", F.col("m_label").alias("label")
             )
-            labels = labels.localCheckpoint(eager=True)
+            labels = materialize(labels)
     raise RuntimeError(
         f"connected_components did not converge in {max_rounds} rounds "
         "(component diameter exceeds 2**max_rounds)"
@@ -120,14 +139,7 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH pairs → connected components → cluster assignment
     (component id = minimum doc_id in the cluster, i.e. the canonical
     survivor an exact-keep-first policy would retain)."""
-    # materialize the bounded pair list once: it feeds both union branches of
-    # the edge build (and would re-run the whole MinHash pipeline per branch)
-    pairs = (
-        dedup_documents_minhash(spark, sf_dir)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
-    )
-    return connected_components(pairs).orderBy("doc_id")
+    return connected_components(_pair_graph(spark, sf_dir)).orderBy("doc_id")
 
 
 # Oracle: true transitive closure of the same pair graph via recursive CTE.
@@ -162,12 +174,7 @@ def dedup_near_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datafusion_impl_spark.operators.dedup import near_dup_corpus
 
     corpus = near_dup_corpus(spark, sf_dir).select("doc_id", "lang")
-    pairs = (
-        dedup_documents_minhash(spark, sf_dir)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
-    )
-    comp = connected_components(pairs)
+    comp = connected_components(_pair_graph(spark, sf_dir))
     dropped = comp.filter(F.col("doc_id") != F.col("component")).select("doc_id")
     return (
         corpus.join(dropped, "doc_id", "left_anti")
@@ -231,8 +238,7 @@ def kcore_edges(spark: SparkSession, edges_sym: DataFrame, k: int,
     surviving symmetric edges. Each round is one groupBy + two semi-joins
     over the BOUNDED pair graph; the loop runs under the measured-size
     iteration-partition context like every fixed-point loop here."""
-    edges = edges_sym.localCheckpoint(eager=True)
-    n_edges = edges.count()
+    edges, n_edges = edges_sym, edges_sym.count()
     with _bounded_iteration(spark, n_edges):
         for _ in range(max_rounds):
             keep = (
@@ -241,11 +247,10 @@ def kcore_edges(spark: SparkSession, edges_sym: DataFrame, k: int,
                 .filter(F.col("deg") >= k)
                 .select("s")
             )
-            nxt = (
+            nxt = materialize(
                 edges.join(keep, "s", "left_semi")
                 .join(keep.withColumnRenamed("s", "d"), "d", "left_semi")
                 .select("s", "d")
-                .localCheckpoint(eager=True)
             )
             n_nxt = nxt.count()
             if n_nxt == n_edges:
@@ -281,16 +286,7 @@ def dedup_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus is never touched after candidate generation); each round is a
     degree count + two semi-joins, log-ish rounds on real graphs, with the
     same raise-don't-truncate convergence contract as components."""
-    pairs = (
-        dedup_documents_minhash(spark, sf_dir)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
-    )
-    edges = pairs.select(
-        F.col("doc_a").alias("s"), F.col("doc_b").alias("d")
-    ).unionByName(
-        pairs.select(F.col("doc_b").alias("s"), F.col("doc_a").alias("d"))
-    )
+    edges = _symmetric(_pair_graph(spark, sf_dir), "s", "d")
     n_nodes_total = edges.select("s").distinct().count()
     outs = []
     for k in _KCORE_KS:
@@ -389,11 +385,7 @@ def split_group_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     corpus = near_dup_corpus(spark, sf_dir).select("doc_id", "lang")
-    pairs = (
-        dedup_documents_minhash(spark, sf_dir)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
-    )
+    pairs = _pair_graph(spark, sf_dir)
     comp = connected_components(pairs)
     grouped = corpus.join(comp, "doc_id", "left").select(
         "doc_id",
@@ -504,12 +496,7 @@ def dedup_token_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = near_dup_corpus(spark, sf_dir).select(
         "doc_id", "lang", F.size(tokens("text")).cast("long").alias("n_tok")
     )
-    pairs = (
-        dedup_documents_minhash(spark, sf_dir)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
-    )
-    comp = connected_components(pairs)
+    comp = connected_components(_pair_graph(spark, sf_dir))
     keep = corpus.join(comp, "doc_id", "left").withColumn(
         "survives",
         F.coalesce("component", "doc_id") == F.col("doc_id"),
@@ -599,46 +586,41 @@ def pagerank(edges_sym: DataFrame, iters: int = _PR_ITERS,
     """Fixed-iteration PageRank over a symmetric (``src``, ``dst``) edge
     list → (``doc_id``, ``degree``, ``rank``).
 
-    Spark shape per iteration: one equi-join of the rank table with the
-    degree-annotated edge list on ``src`` and one groupBy on ``dst`` — both
-    keyed on the bounded pair graph (near-dup volume, not corpus volume),
-    with the rank table localCheckpoint-ed per round so lineage stays flat
-    (on a cluster: ``checkpoint()``). The iteration count is a fixed small
-    constant, so the oracle can unroll the exact same recurrence as chained
-    CTEs — no convergence test, no engine-specific stopping rule. A
-    symmetric graph has no dangling nodes, so no teleport-mass correction
+    Spark shape per iteration: one equi-join of the (``doc_id``,
+    ``degree``, ``rank``) table with the edge list on ``src`` and one
+    groupBy on ``dst`` — both keyed on the bounded pair graph (near-dup
+    volume, not corpus volume). The groupBy also counts each node's
+    in-edges, which on a symmetric graph is its degree, so the table carries
+    the degree into the next round without a join. The iteration count is a
+    fixed small constant, so the oracle can unroll the exact same recurrence
+    as chained CTEs — no convergence test, no engine-specific stopping rule.
+    A symmetric graph has no dangling nodes, so no teleport-mass correction
     term is needed."""
     with _bounded_iteration(edges_sym.sparkSession, edges_sym.count()):
-        deg = edges_sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+        deg = edges_sym.groupBy(F.col("src").alias("doc_id")).agg(
+            F.count(F.lit(1)).alias("degree")
+        )
         # n (node count) is a driver scalar: one job over the bounded node
         # table, same pattern as connected_components' convergence count.
         n = deg.count()
-        edges = edges_sym.join(deg, "src").localCheckpoint(eager=True)
-        ranks = deg.select(
         # div-safe: n = COUNT of pair-graph nodes, > 0 (planted dups
         # guarantee a non-empty graph); Python-side raise, not a NULL/inf
-            F.col("src").alias("doc_id"), F.lit(1.0 / n).alias("rank")
-        ).localCheckpoint(eager=True)
+        ranks = deg.withColumn("rank", F.lit(1.0 / n))
         # div-safe: same n > 0 invariant as the rank seed above
         base = (1.0 - damping) / n
         for _ in range(iters):
-            contrib = edges.join(ranks, edges.src == ranks.doc_id).select(
-                # div-safe: deg >= 1 — a node enters the graph only with
+            contrib = edges_sym.join(ranks, edges_sym.src == ranks.doc_id).select(
+                # div-safe: degree >= 1 — a node enters the graph only with
                 # at least one incident edge
-                "dst", (F.col("rank") / F.col("deg")).alias("c")
+                "dst", (F.col("rank") / F.col("degree")).alias("c")
             )
-            ranks = (
-                contrib.groupBy("dst")
-                .agg(F.sum("c").alias("s"))
-                .select(
-                    F.col("dst").alias("doc_id"),
-                    (F.lit(base) + F.lit(damping) * F.col("s")).alias("rank"),
+            ranks = materialize(
+                contrib.groupBy(F.col("dst").alias("doc_id")).agg(
+                    F.count(F.lit(1)).alias("degree"),
+                    (F.lit(base) + F.lit(damping) * F.sum("c")).alias("rank"),
                 )
-                .localCheckpoint(eager=True)
             )
-    return ranks.join(deg, ranks.doc_id == deg.src).select(
-        "doc_id", F.col("deg").alias("degree"), "rank"
-    )
+    return ranks
 
 
 def dedup_pagerank_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -647,15 +629,7 @@ def dedup_pagerank_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     each duplicate cluster as canonical (a doc near-duplicating many others
     is the template; the one-off variants hang off it). Output: every node
     of the pair graph with its degree and 5-iteration PageRank."""
-    pairs = (
-        dedup_documents_minhash(spark, sf_dir)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
-    )
-    edges = pairs.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    ).union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-    pr = pagerank(edges.localCheckpoint(eager=True))
+    pr = pagerank(_symmetric(_pair_graph(spark, sf_dir)))
     return pr.select(
         "doc_id", "degree", F.round("rank", 6).alias("rank")
     ).orderBy("doc_id")
@@ -719,15 +693,13 @@ def label_propagation(edges_sym: DataFrame, iters: int = _LPA_ITERS) -> DataFram
     exact recurrence as chained CTEs (no convergence race, the classic LPA
     non-determinism source). Per round: one equi-join of the label table
     with the edge list and one (src, label) count — both keyed on the
-    bounded pair graph, with the label table checkpointed per round
-    (cluster equivalent: ``checkpoint()``)."""
+    bounded pair graph."""
     spark = edges_sym.sparkSession
     with _bounded_iteration(spark, edges_sym.count()):
         labels = (
             edges_sym.select(F.col("src").alias("doc_id"))
             .distinct()
             .withColumn("label", F.col("doc_id"))
-            .localCheckpoint(eager=True)
         )
         for _ in range(iters):
             votes = (
@@ -739,7 +711,7 @@ def label_propagation(edges_sym: DataFrame, iters: int = _LPA_ITERS) -> DataFram
             # rank-1 window it replaces): max cnt wins, ties resolve to the
             # max NEGATED label = the minimum label; aggregates map-side
             # instead of exchanging + sorting the vote table every round
-            labels = (
+            labels = materialize(
                 votes.groupBy("src")
                 .agg(
                     F.max(
@@ -751,7 +723,6 @@ def label_propagation(edges_sym: DataFrame, iters: int = _LPA_ITERS) -> DataFram
                     ).alias("mx")
                 )
                 .select(F.col("src").alias("doc_id"), F.col("mx.label").alias("label"))
-                .localCheckpoint(eager=True)
             )
     return labels.select("doc_id", F.col("label").alias("community"))
 
@@ -762,15 +733,7 @@ def dedup_label_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     connected components when borderline LSH edges chain unrelated docs
     together: LPA keeps densely-linked clone groups in one community while
     a thin bridge between two groups does not merge them."""
-    pairs = (
-        dedup_documents_minhash(spark, sf_dir)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
-    )
-    edges = pairs.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    ).union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-    return label_propagation(edges.localCheckpoint(eager=True)).orderBy("doc_id")
+    return label_propagation(_symmetric(_pair_graph(spark, sf_dir))).orderBy("doc_id")
 
 
 def dedup_community_bridges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -781,17 +744,8 @@ def dedup_community_bridges(spark: SparkSession, sf_dir: str) -> DataFrame:
     unrelated content (low isolation → tighten the LSH threshold before
     deduping). Composes :func:`label_propagation` with one edge⋈community
     join; a bridging edge counts toward BOTH endpoint communities."""
-    pairs = (
-        dedup_documents_minhash(spark, sf_dir)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
-    )
-    edges = pairs.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    ).union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-    comm = label_propagation(edges.localCheckpoint(eager=True)).localCheckpoint(
-        eager=True
-    )
+    pairs = _pair_graph(spark, sf_dir)
+    comm = label_propagation(_symmetric(pairs))
     ca = comm.select(F.col("doc_id").alias("doc_a"), F.col("community").alias("c_a"))
     cb = comm.select(F.col("doc_id").alias("doc_b"), F.col("community").alias("c_b"))
     tagged = pairs.join(ca, "doc_a").join(cb, "doc_b")
@@ -915,11 +869,7 @@ def graph_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     *bounded pair table* (near-dup volume, not corpus volume); wedge counts
     come from the symmetric degree table, sum of C(deg, 2). No step touches
     the corpus — this runs entirely on the dedup pipeline's output."""
-    pairs = (
-        dedup_documents_minhash(spark, sf_dir)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
-    )
+    pairs = _pair_graph(spark, sf_dir)
     e1 = pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
     e2 = pairs.select(F.col("doc_a").alias("b2"), F.col("doc_b").alias("c"))
     e3 = pairs.select(F.col("doc_a").alias("a3"), F.col("doc_b").alias("c3"))
@@ -928,12 +878,7 @@ def graph_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(e3, (F.col("a") == F.col("a3")) & (F.col("c") == F.col("c3")))
         .agg(F.count(F.lit(1)).alias("n_triangles"))
     )
-    deg = (
-        pairs.select(F.col("doc_a").alias("v"))
-        .union(pairs.select(F.col("doc_b").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
+    deg = _symmetric(pairs).groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     wedge = deg.agg(
         F.count(F.lit(1)).alias("n_nodes"),
         (F.sum(F.col("deg") * (F.col("deg") - 1)) / 2)
@@ -1013,41 +958,33 @@ def graph_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: level-synchronous BFS — {r} rounds of (frontier ⋈ edges)
     equi-joins on the BOUNDED pair graph, each followed by an anti-join
     against the visited set (so the frontier can only shrink toward the
-    fringe) and a (seed, node) dedup aggregate; every intermediate is
-    localCheckpoint'ed to keep lineage flat. The oracle replays the same
+    fringe) and a (seed, node) dedup aggregate; every round's state is
+    materialized to keep lineage flat. The oracle replays the same
     horizon with a depth-bounded recursive CTE and takes MIN(d).
 
     No division anywhere; counts are exact integers."""
-    pairs = (
-        dedup_documents_minhash(spark, sf_dir)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
-    )
-    edges = (
-        pairs.select(F.col("doc_a").alias("s"), F.col("doc_b").alias("d"))
-        .union(pairs.select(F.col("doc_b").alias("s"), F.col("doc_a").alias("d")))
-        .localCheckpoint(eager=True)
-    )
+    edges = _symmetric(_pair_graph(spark, sf_dir), "s", "d")
     seeds = (
         edges.select(F.col("s").alias("node"))
         .distinct()
         .filter(F.col("node") % _BFS_SEED_MOD == 0)
     )
-    dist = seeds.select(
-        F.col("node").alias("seed"), F.col("node").alias("node"),
-        F.lit(0).alias("dd"),
-    ).localCheckpoint(eager=True)
+    dist = materialize(
+        seeds.select(
+            F.col("node").alias("seed"), F.col("node").alias("node"),
+            F.lit(0).alias("dd"),
+        )
+    )
     frontier = dist
     for r in range(1, _BFS_ROUNDS + 1):
-        nxt = (
+        nxt = materialize(
             frontier.join(edges, frontier["node"] == edges["s"])
             .select("seed", F.col("d").alias("node"), F.lit(r).alias("dd"))
             .join(dist.select("seed", "node"), ["seed", "node"], "left_anti")
             .groupBy("seed", "node")
             .agg(F.min("dd").alias("dd"))
-            .localCheckpoint(eager=True)
         )
-        dist = dist.unionByName(nxt).localCheckpoint(eager=True)
+        dist = materialize(dist.unionByName(nxt))
         frontier = nxt
     node_min = dist.groupBy("node").agg(F.min("dd").alias("dmin"))
     per_pair = dist.groupBy("dd").agg(F.count(F.lit(1)).alias("n_pairs"))

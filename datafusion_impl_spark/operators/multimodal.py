@@ -34,7 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from datafusion_impl_spark.operators import duck_md5_long
+from datafusion_impl_spark.operators import duck_md5_long, materialize
 from datafusion_impl_spark.sources.registry import load_table
 
 __all__ = [
@@ -527,14 +527,15 @@ def multimodal_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
             (L - F.length(F.expr(f"replace(h, '{c}', '')"))).alias(f"f{i}")
             for i, c in enumerate(_PHASH_CHARS)
         ],
-    ).localCheckpoint(eager=True)
+    )
+    freqs = materialize(freqs)
     sig = F.lit(0).cast("long")
     for i in range(len(_PHASH_CHARS)):
         for t, pct in enumerate(_PHASH_THRESHOLDS):
             bit = (F.col(f"f{i}") * 16 * 100 > F.col("len") * pct).cast("long")
             sig = sig + bit * F.lit(2 ** (i * 4 + t)).cast("long")
     hashed = freqs.select("doc_id", sig.alias("sig"))
-    hashed = hashed.localCheckpoint(eager=True)
+    hashed = materialize(hashed)
     chunks = hashed.select(
         "doc_id",
         "sig",
@@ -3019,8 +3020,6 @@ def audio_constellation_near_dup(
     f1/f2 + 12-bit dt), keeping bucket fan-out flat."""
     from pyspark.sql import Window
 
-    from datafusion_impl_spark.operators import materialize
-
     docs = (
         load_table(spark, sf_dir, "documents")
         .select("doc_id")
@@ -3365,8 +3364,6 @@ def video_fingerprint_near_dup(
     votes one groupBy, verdicts one aggregate; frames never shuffle (the
     fingerprint leaves the decode kernel at 1 row per frame)."""
     from pyspark.sql import Window
-
-    from datafusion_impl_spark.operators import materialize
 
     docs = (
         load_table(spark, sf_dir, "documents")

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from datafusion_impl_spark.operators import duck_md5_long, md5_long
+from datafusion_impl_spark.operators import duck_md5_long, materialize, md5_long
 from datafusion_impl_spark.sources.registry import load_table
 
 __all__ = ["QUERIES", "ORACLES"]
@@ -277,8 +277,8 @@ def pack_documents_by_token_budget(spark: SparkSession, sf_dir: str) -> DataFram
     by one source (web crawl). Instead:
 
     1. the per-doc token-count table (3 narrow columns, no text) is
-       materialized once via localCheckpoint — the expensive text
-       tokenization runs exactly one corpus pass;
+       materialized once — the expensive text tokenization runs exactly
+       one corpus pass;
     2. the exclusive running sum is computed within bounded shards of
        ``(source, doc_id // {shard})`` — every window task scans ≤ {shard}
        rows regardless of corpus size;
@@ -313,7 +313,8 @@ def pack_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.floor(F.col("doc_id") / _PACK_SHARD_DOCS).cast("long").alias("shard"),
         tok_n.cast("long").alias("n_tok"),
-    ).localCheckpoint(eager=False)
+    )
+    base = materialize(base)
 
     w_local = (
         Window.partitionBy("source", "shard")

@@ -503,7 +503,7 @@ def benchmark_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", F.explode(grams).alias("gram")
     ).distinct()
     # the gram table feeds the DF filter and both join sides — materialize once
-    g = g.localCheckpoint(eager=True)
+    g = materialize(g)
     rare = (
         g.groupBy("gram").agg(F.count(F.lit(1)).alias("df")).filter(F.col("df") <= 10)
     ).select("gram")

@@ -1745,7 +1745,8 @@ def bradley_terry_source_ranking(spark: SparkSession,
     pair_tbl = m.groupBy("sa", "sb").agg(
         F.count(F.lit(1)).cast("long").alias("n_ij"),
         F.sum("a_won").alias("w_a"),
-    ).localCheckpoint(eager=True)  # 190-row model table; cut the lineage
+    )
+    pair_tbl = materialize(pair_tbl)  # 190-row model table; cut the lineage
     # per-item totals (wins and matches) from both orientations
     items = (
         pair_tbl.select(
@@ -1771,7 +1772,8 @@ def bradley_terry_source_ranking(spark: SparkSession,
         pair_tbl.select(
             F.col("sb").alias("i"), F.col("sa").alias("j"), "n_ij"
         )
-    ).localCheckpoint(eager=True)
+    )
+    opp = materialize(opp)
 
     dec = f"decimal(28,{_BT_ROUND})"
     cur = items.select("source", F.lit(1.0).alias("p"))
@@ -1820,11 +1822,12 @@ def bradley_terry_source_ranking(spark: SparkSession,
                 / F.greatest(F.col("t").cast("double"), F.lit(1e-9)),
                 _BT_ROUND,
             ).alias("p"),
+        )
         # materialize the 20-row strengths per iteration: without the cut,
         # five stacked join+agg+crossJoin generations compound into a plan
         # Catalyst re-optimizes end-to-end (140 s at sf0.1 in the first
         # r14 recording); with it each MM step plans against a leaf
-        ).localCheckpoint(eager=True)
+        cur = materialize(cur)
     # the strengths table is |sources|-bounded by construction; the limit
     # restates that bound on the checkpoint leaf (the lineage cut above
     # erases the Aggregate node the plan audit would otherwise see)

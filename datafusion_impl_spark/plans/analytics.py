@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from datafusion_impl_spark.operators import duck_md5_long
+from datafusion_impl_spark.operators import duck_md5_long, materialize
 from datafusion_impl_spark.sources.registry import load_table
 
 __all__ = ["QUERIES", "ORACLES"]
@@ -956,7 +956,7 @@ def brand_affinity_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_orderkey", F.col("p_brand").alias("brand"))
         .distinct()
     )
-    baskets = baskets.localCheckpoint(eager=True)
+    baskets = materialize(baskets)
     n_orders = baskets.select("l_orderkey").distinct().count()
     per_brand = baskets.groupBy("brand").agg(
         F.count(F.lit(1)).alias("n_brand")
@@ -1081,7 +1081,7 @@ def rfm_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("m"),
         )
     )
-    per_cust = per_cust.localCheckpoint(eager=True)
+    per_cust = materialize(per_cust)
     rb = _equal_freq_bin(per_cust, "r", _RFM_BINS)
     fb = _equal_freq_bin(per_cust, "f", _RFM_BINS)
     mb = _equal_freq_bin(per_cust, "m", _RFM_BINS)
@@ -2313,7 +2313,7 @@ def events_user_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.hll_sketch_agg("user_id").alias("sk")
     )
     # the stored rollup table: bounded (types x days), reused by any period
-    daily = daily.localCheckpoint(eager=True)
+    daily = materialize(daily)
     return (
         daily.groupBy("event_type")
         .agg(
@@ -2349,7 +2349,7 @@ def bitmap_user_distinct_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.bitmap_construct_agg(F.bitmap_bit_position("user_id")).alias("bm")
     )
     # the stored rollup table (types x days x buckets), merged per period
-    daily = daily.localCheckpoint(eager=True)
+    daily = materialize(daily)
     per_bucket = daily.groupBy("event_type", "bkt").agg(
         F.bitmap_count(F.bitmap_or_agg("bm")).alias("n_in_bucket")
     )

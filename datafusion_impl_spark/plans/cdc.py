@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from datafusion_impl_spark.operators import materialize
 from datafusion_impl_spark.sources.registry import load_table
 
 __all__ = ["QUERIES", "ORACLES"]
@@ -295,9 +296,7 @@ def incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # materialized state: in production this is a table on disk; the
     # localCheckpoint stands in for "already computed, never rescanned"
-    state = partials(orders.filter(F.col("o_day") < cutoff)).localCheckpoint(
-        eager=True
-    )
+    state = materialize(partials(orders.filter(F.col("o_day") < cutoff)))
     batch = partials(orders.filter(F.col("o_day") >= cutoff))
     merged = (
         state.unionByName(batch)
@@ -567,9 +566,7 @@ def incremental_join_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    state = joined_partials(
-        orders.filter(F.col("o_day") < cutoff)
-    ).localCheckpoint(eager=True)
+    state = materialize(joined_partials(orders.filter(F.col("o_day") < cutoff)))
     batch = joined_partials(orders.filter(F.col("o_day") >= cutoff))
     return (
         state.unionByName(batch)

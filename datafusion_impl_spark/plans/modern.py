@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datafusion_impl_spark.operators import materialize
 from datafusion_impl_spark.sources.registry import load_table
 
 __all__ = ["QUERIES", "ORACLES"]
@@ -57,14 +58,14 @@ def recursive_cte_revenue_ema(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical), cutting iteration count by the block factor. The block
     seed is pre-aggregated once (one ordinary groupBy shuffle over orders —
     the only part that touches the fact table), ``coalesce(1)`` +
-    ``localCheckpoint``-ed so no step re-scans the source. r4 measured:
+    materialized so no step re-scans the source. r4 measured:
     25.3 s → ~2 s at sf0.1.
 
     See also :func:`ema_revenue_closed_form` — the same recurrence as a
     closed-form exponentially-weighted prefix sum (one window, no
     iteration), the shape to prefer when a closed form exists."""
     months = _monthly_revenue(spark, sf_dir)
-    blocks = (
+    blocks = materialize(
         months.withColumn(
             # div-safe: _EMA_BLOCK is a nonzero module constant
             "b", ((F.col("i") - 1) / _EMA_BLOCK).cast("int") + 1
@@ -73,7 +74,6 @@ def recursive_cte_revenue_ema(spark: SparkSession, sf_dir: str) -> DataFrame:
         # struct sorts by leading field i → months inside a block in order
         .agg(F.sort_array(F.collect_list(F.struct("i", "month", "revenue"))).alias("ms"))
         .coalesce(1)
-        .localCheckpoint(eager=True)
     )
     blocks.createOrReplaceTempView("blocks_rcte")
 
@@ -636,7 +636,7 @@ def holt_winters_monthly_forecast(spark: SparkSession, sf_dir: str) -> DataFrame
         "revenue",
         F.row_number().over(Window.orderBy("month")).alias("i"),
     )
-    blocks = (
+    blocks = materialize(
         months.withColumn(
             # div-safe: _HW_BLOCK is a nonzero module constant
             "b", ((F.col("i") - 1) / _HW_BLOCK).cast("int") + 1
@@ -648,7 +648,6 @@ def holt_winters_monthly_forecast(spark: SparkSession, sf_dir: str) -> DataFrame
             ).alias("ms")
         )
         .coalesce(1)
-        .localCheckpoint(eager=True)
     )
     blocks.createOrReplaceTempView("blocks_hw")
 

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from datafusion_impl_spark.operators import duck_md5_long, md5_long
+from datafusion_impl_spark.operators import duck_md5_long, materialize, md5_long
 from datafusion_impl_spark.sources.registry import load_table
 
 __all__ = ["QUERIES", "ORACLES"]
@@ -232,7 +232,7 @@ def data_quality_constraint_report(spark: SparkSession, sf_dir: str) -> DataFram
     ).withColumn("n_orphans", F.lit(n_orphans))
     # the metric frame is ONE row; materialize it so the 7 verdict rows
     # project from it without re-running the scan per constraint
-    m = m.localCheckpoint(eager=True)
+    m = materialize(m)
     checks = [
         ("orderkey_unique", F.col("n_keys") == F.col("n_rows"),
          F.col("n_keys").cast("double")),
@@ -758,7 +758,7 @@ def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     by_size = classes.groupBy("class_size").agg(
         F.count(F.lit(1)).alias("n_classes")
     )
-    by_size = by_size.localCheckpoint(eager=True)
+    by_size = materialize(by_size)
     total = by_size.agg(
         F.sum(F.col("class_size") * F.col("n_classes")).cast("long").alias("n_rows"),
         F.sum("n_classes").cast("long").alias("n_classes_total"),
@@ -1348,7 +1348,7 @@ def t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("term") / (2.0 * F.col("n_c") * F.col("n_total")), 6
         ).alias("t_dist")
     )
-    dist = dist.localCheckpoint(eager=True)
+    dist = materialize(dist)
     base = dist.agg(
         F.sum("n_c").cast("long").alias("n_customers_total"),
         F.count(F.lit(1)).cast("long").alias("n_classes_total"),

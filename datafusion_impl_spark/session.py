@@ -53,6 +53,16 @@ from pyspark.sql import SparkSession
 # counts at runtime.
 _LOCAL_CORES = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
+
+def _default_driver_mem() -> str:
+    """Half the machine's physical memory, in MiB: the driver JVM also needs
+    room outside its heap, and so do the Python workers it starts."""
+    mib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{mib // 2}m"
+
+
+_DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_mem())
+
 _WORKER_DAEMON = "datafusion_impl_spark.worker_daemon"
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -109,7 +119,7 @@ def get_spark(app_name: str = "datafusion_impl_spark", master: str | None = None
         os.environ["PYTHONPATH"] = (pypath + os.pathsep if pypath else "") + _PACKAGE_PARENT
     builder = SparkSession.builder.appName(app_name)
     builder = builder.master(master or f"local[{_LOCAL_CORES}]")
-    builder = builder.config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+    builder = builder.config("spark.driver.memory", _DRIVER_MEM)
     builder = builder.config("spark.ui.enabled", "false")
     # Console progress bars interleave carriage-return frames with stdout;
     # any consumer that captures a bounded output tail (the bench driver)

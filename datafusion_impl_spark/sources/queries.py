@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from datafusion_impl_spark.operators import duck_md5_long, md5_long
+from datafusion_impl_spark.operators import duck_md5_long, materialize, md5_long
 from datafusion_impl_spark.sources.registry import load_table, read_csv
 
 __all__ = ["QUERIES", "ORACLES"]
@@ -1757,7 +1757,7 @@ _warc_build_compliance_shard.__doc__ = (
 def _robots_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared byte-honest record extraction for the compliance gate and
     its streaming twin: build the compliance WARC shards, scan them, and
-    return the mixed rule/page record frame (localCheckpointed —
+    return the mixed rule/page record frame (materialized —
     metadata-only rows, scanned once, consumed by several plans)."""
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "source",
@@ -1833,12 +1833,13 @@ def _robots_records(spark: SparkSession, sf_dir: str) -> DataFrame:
                         ))
             yield pd.DataFrame(rows, columns=list(cols))
 
-    return shards.mapInPandas(
+    records = shards.mapInPandas(
         scan,
         "kind string, host int, agent string, is_allow int, prefix string, "
         "doc_id bigint, source string, path string, "
         "noindex_hdr int, noindex_meta int",
-    ).localCheckpoint()  # metadata-only rows; scanned once, consumed twice
+    )
+    return materialize(records)  # metadata-only rows; scanned once, consumed twice
 
 
 def _robots_selected_rules(records: DataFrame) -> DataFrame:

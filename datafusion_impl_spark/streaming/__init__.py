@@ -32,7 +32,7 @@ from pyspark.sql.types import (
     TimestampNTZType,
 )
 
-from datafusion_impl_spark.operators import duck_md5_long, md5_long
+from datafusion_impl_spark.operators import duck_md5_long, materialize, md5_long
 from datafusion_impl_spark.session import scoped_conf
 
 #: DuckDB fragment matching md5_long over the document text column.
@@ -1743,7 +1743,6 @@ def _ann_serve_index(spark: SparkSession, sf_dir: str):
     got = _ANN_SERVE_INDEX.get((app_id, sf_dir))
     if got is not None:
         return got
-    from datafusion_impl_spark.operators import materialize
     from datafusion_impl_spark.operators.similarity import (
         _N_CENTROIDS,
         _dot,
@@ -2171,9 +2170,9 @@ def stream_quality_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars", "text"
     )
-    train_feats = quality_feature_frame(
-        docs.filter(F.col("doc_id") % 2 == 0), []
-    ).localCheckpoint(eager=True)
+    train_feats = materialize(
+        quality_feature_frame(docs.filter(F.col("doc_id") % 2 == 0), [])
+    )
     w = _logreg_fit(train_feats)
 
     tag = os.path.basename(sf_dir.rstrip("/"))
@@ -2260,7 +2259,7 @@ def stream_robots_compliance_gate(spark: SparkSession,
     )
 
     records = _robots_records(spark, sf_dir)
-    sel_rules = _robots_selected_rules(records).localCheckpoint()
+    sel_rules = materialize(_robots_selected_rules(records))
     pages = records.filter(F.col("kind") == "page").select(
         "doc_id", "source", "host", "path", "noindex_hdr", "noindex_meta"
     )

@@ -145,16 +145,15 @@ def main() -> None:
     ssm.BASE = base  # build() replicates from this dir
     from pyspark.sql import SparkSession
 
-    from datafusion_impl_spark.session import configure
+    from datafusion_impl_spark.session import _DRIVER_MEM, _LOCAL_CORES, configure
 
     # get_spark's conf, except: UI ON (the REST API is where app-level
     # shuffle deltas come from) with retention raised far above any run's
     # stage count (eviction would corrupt before/after deltas).
     spark = configure(
         SparkSession.builder.appName("datafusion_impl_spark-scale-smoke")
-        .master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .master(f"local[{_LOCAL_CORES}]")
+        .config("spark.driver.memory", _DRIVER_MEM)
         .config("spark.ui.enabled", "true")
         .config("spark.ui.showConsoleProgress", "false")
     ).config("spark.ui.retainedStages", "100000") \

@@ -17,6 +17,15 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def registry_audit(spark) -> dict[str, list[str]]:
+    """Plan-audit problems over every registered query, each query built once
+    per session and shared by the registry-wide audit tests."""
+    from tests.test_plan_audit import audit_registry
+
+    return audit_registry(spark)
+
+
+@pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
 

@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import os
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import functions as F
@@ -183,3 +184,14 @@ def test_checksum_buckets_localize_the_damage(spark):
     for r in rows:
         if r.match:
             assert r.n_a == r.n_b and r.sum_a == r.sum_b
+
+
+def test_default_driver_heap_fits_the_machine():
+    """Without ``SPARK_GRAFT_DRIVER_MEM`` the driver heap is sized from the
+    machine, never past its physical memory."""
+    from datafusion_impl_spark.session import _default_driver_mem
+
+    heap = _default_driver_mem()
+    assert heap.endswith("m")
+    physical = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    assert 0 < int(heap[:-1]) * 2**20 <= physical

@@ -6,7 +6,6 @@ conf (static guard, in the style of ``test_paths.py``)."""
 from __future__ import annotations
 
 import ast
-import pathlib
 import sys
 import threading
 
@@ -14,9 +13,7 @@ import pytest
 
 from datafusion_impl_spark.operators import bounded_iteration
 from datafusion_impl_spark.session import scoped_conf
-
-_REPO = pathlib.Path(__file__).resolve().parent.parent
-_PACKAGE = _REPO / "datafusion_impl_spark"
+from tests.static_scan import method_calls, package_hits
 
 _SHUFFLE = "spark.sql.shuffle.partitions"
 _AQE = "spark.sql.adaptive.enabled"
@@ -167,14 +164,9 @@ def conf_writes(source: str) -> list[tuple[int, str, str | None]]:
     """(line, method, first argument if a string constant) for each
     ``<x>.conf.set(...)`` / ``<x>.conf.unset(...)`` call in ``source``."""
     found = []
-    for node in ast.walk(ast.parse(source)):
-        if (
-            isinstance(node, ast.Call)
-            and isinstance(node.func, ast.Attribute)
-            and node.func.attr in ("set", "unset")
-            and isinstance(node.func.value, ast.Attribute)
-            and node.func.value.attr == "conf"
-        ):
+    for node in method_calls(source, ("set", "unset")):
+        owner = node.func.value
+        if isinstance(owner, ast.Attribute) and owner.attr == "conf":
             arg = node.args[0] if node.args else None
             key = arg.value if isinstance(arg, ast.Constant) else None
             found.append((node.lineno, node.func.attr, key))
@@ -188,9 +180,8 @@ def test_audit_catches_a_planted_conf_write():
 
 def test_runtime_confs_are_set_only_through_scoped_conf():
     writes = {
-        str(f.relative_to(_REPO)): [(m, k) for _, m, k in hits]
-        for f in sorted(_PACKAGE.rglob("*.py"))
-        if f != _PACKAGE / "session.py"
-        if (hits := conf_writes(f.read_text()))
+        path: [(m, k) for _, m, k in hits]
+        for path, hits in package_hits(conf_writes).items()
+        if path != "datafusion_impl_spark/session.py"
     }
     assert writes == _ALLOWED
