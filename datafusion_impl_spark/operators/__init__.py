@@ -10,14 +10,15 @@
                        temperature-scaled source mixing, int8 embedding
                        quantization
 - :mod:`.structured` — JSON/struct column handling (events.props)
-- :mod:`.multimodal` — binary media columns + Arrow-batched feature
-                       extraction plumbing (decoders stubbed; no image/audio
-                       libs in this container)
+- :mod:`.multimodal` — binary media columns + Arrow-batched decode and
+                       feature kernels (BMP, PNG, GIF, JPEG, WAV and Y4M
+                       decode natively, no image/audio libs needed)
 
 Every operator is a declarative DataFrame plan (JVM-side, Catalyst-optimized)
-unless the semantics genuinely need Python (`multimodal` uses mapInPandas —
-that IS the operator's contract). Each has a DuckDB oracle; cross-engine
-determinism rests on two portable primitives verified bit-exact:
+unless the semantics genuinely need Python (`multimodal` runs per-blob
+kernels through ``mapInArrow`` — that IS the operator's contract). Each has
+a DuckDB oracle; cross-engine determinism rests on portable primitives
+verified bit-exact, each defined once here:
 
 - **md5-derived 60-bit hashes** (`md5_long` here ≡ the DuckDB fragment
   ``CAST(('0x' || substr(md5(x),1,15)) AS BIGINT)``): both engines implement
@@ -25,11 +26,13 @@ determinism rests on two portable primitives verified bit-exact:
   signed BIGINT. All sketches (MinHash seeds, SimHash bits, SRP hyperplanes,
   fingerprints) derive from this, never from engine-native hash functions
   (Spark xxhash64 and DuckDB ``hash()`` differ).
-- **double-precision sequential folds**: `aggregate(zip_with(...))` in Spark
-  and `list_cosine_similarity(::DOUBLE[], ...)` in DuckDB reduce 64-element
-  vectors left-to-right in float64 — empirically bit-identical; results are
-  still ROUND()ed before any comparison or ranking so a last-bit divergence
-  can never flip a top-k order on either side.
+- **double-precision sequential folds** (`_dot`): `aggregate(zip_with(...))`
+  in Spark and `list_cosine_similarity(::DOUBLE[], ...)` in DuckDB reduce
+  64-element vectors left-to-right in float64 — empirically bit-identical;
+  results are still ROUND()ed before any comparison or ranking so a last-bit
+  divergence can never flip a top-k order on either side.
+- **half-away-from-zero rounding** (`_round_half_up`) for driver- and
+  kernel-side Python math that must land on the engines' ``ROUND``.
 """
 
 from __future__ import annotations
@@ -54,6 +57,25 @@ def md5_long(col: Column) -> Column:
 def duck_md5_long(expr: str) -> str:
     """DuckDB SQL fragment computing the same 60-bit hash as :func:`md5_long`."""
     return f"CAST(('0x' || substr(md5({expr}),1,15)) AS BIGINT)"
+
+
+def _dot(a: Column, b: Column) -> Column:
+    """Dot product as a sequential left-to-right fold (matches DuckDB
+    bit-for-bit; not unrolled, see ``similarity._norm``)."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
+    )
+
+
+def _round_half_up(x: float, nd: int) -> float:
+    """Round half AWAY FROM ZERO — matching Spark's ``F.round`` and DuckDB's
+    ``ROUND`` (Python's builtin ``round`` is banker's rounding and would
+    diverge exactly on .5 boundaries)."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return float(
+        Decimal(repr(x)).quantize(Decimal(f"1e-{nd}"), rounding=ROUND_HALF_UP)
+    )
 
 
 #: one iteration-stage shuffle partition per this many rows — sized so a

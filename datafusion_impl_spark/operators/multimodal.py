@@ -1,25 +1,31 @@
 """Multimodal columns: opaque ``binary`` media payloads with typed metadata,
-processed by Arrow-batched ``mapInPandas``.
+processed by Arrow-batched Python kernels.
 
 This is the one operator family where Python in the dataflow is the design,
 not a compromise: decoding/feature-extracting media is imperative per-blob
 work, so the Spark-side contract is
 
     media table (id, source, kind, media BINARY, meta STRUCT)
-        → mapInPandas(feature_fn, FEATURES_SCHEMA)   # Arrow batches
+        → mapInArrow(kernel, SCHEMA)   # Arrow batches
         → typed feature rows → normal relational ops
 
-The *plumbing* — schema, Arrow batch shape, partitioning, output contract —
-is real and oracle-checked end-to-end. General image/audio decoding is
-env-gated (this container ships no PIL/av): :func:`decode_image` raises
-``NotImplementedError`` unless pillow appears, and the byte-level feature
-extractor computes deterministic features DuckDB reproduces from the same
-bytes. Since r6 one REAL decode path needs no external libs at all:
-:func:`decode_bmp` parses genuine 24-bit BMP payloads (header, bottom-up
-rows, BGR order, row padding) inside the ``mapInArrow`` kernel, and
-``multimodal_bmp_decode_stats`` oracle-checks the decoded pixel statistics.
+Every planted-media query and every per-blob kernel goes through one
+helper, :func:`_map_rows`: it runs a per-row function over the Arrow
+batches and types the output rows from the declared schema. Only the
+four API demos — :func:`extract_media_features` (``mapInPandas``), its
+``mapInArrow`` twin :func:`extract_media_features_arrow`,
+:func:`sample_frames` and the tar/webdataset shard scan — call the batch
+APIs themselves.
 
-At 100 TB: mapInPandas streams Arrow batches (bounded by
+The decoders are real and need no external libs: BMP, PNG, GIF, JPEG,
+WAV and YUV4MPEG2 payloads are parsed from their bytes alone (e.g.
+:func:`decode_bmp`: header, bottom-up rows, BGR order, row padding), and
+each ``multimodal_*_decode_stats`` query oracle-checks the decoded values
+against a DuckDB replay of the planted formula. Only other image formats
+fall back to pillow in :func:`decode_image`, which raises
+``NotImplementedError`` where pillow is absent.
+
+At 100 TB: the kernels stream Arrow batches (bounded by
 ``spark.sql.execution.arrow.maxRecordsPerBatch``) through long-lived Python
 workers — per-executor parallelism with no driver involvement; the binary
 column never shuffles (features are extracted before any wide operation).
@@ -34,7 +40,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from datafusion_impl_spark.operators import duck_md5_long, materialize
+from datafusion_impl_spark.operators import (
+    _round_half_up,
+    duck_md5_long,
+    materialize,
+)
 from datafusion_impl_spark.sources.registry import load_table
 
 __all__ = [
@@ -71,6 +81,47 @@ def media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("utf-8").alias("encoding"),
             F.length("text").alias("n_chars"),
         ).alias("meta"),
+    )
+
+
+def _map_rows(df: DataFrame, schema: str, fn) -> DataFrame:
+    """Run ``fn(*values of one input row)`` over ``df``'s Arrow batches with
+    ``mapInArrow``. ``fn`` returns an iterable of output tuples in
+    ``schema`` order: one tuple for a 1:1 kernel, any number (none
+    included) for a 1:n kernel. The output Arrow types are resolved once,
+    on the driver, from ``schema``."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    out = to_arrow_schema(StructType.fromDDL(schema))
+
+    def kernel(batches):
+        import pyarrow as pa
+
+        for b in batches:
+            rows = [
+                r for vals in zip(*b.to_pydict().values()) for r in fn(*vals)
+            ]
+            cols = list(zip(*rows)) or [()] * len(out)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, type=f.type) for c, f in zip(cols, out)],
+                schema=out,
+            )
+
+    return df.mapInArrow(kernel, schema)
+
+
+def _planted(spark: SparkSession, sf_dir: str, mod: int, res: int,
+             encode) -> DataFrame:
+    """``(doc_id bigint, media binary)``: the ``documents`` sample
+    ``doc_id % mod == res``, each payload planted as ``encode(doc_id)``."""
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .select("doc_id")
+        .filter(F.col("doc_id") % mod == res)
+    )
+    return _map_rows(
+        docs, "doc_id bigint, media binary", lambda d: [(d, encode(d))]
     )
 
 
@@ -713,34 +764,13 @@ def decode_bmp_stats(images: DataFrame) -> DataFrame:
     decoded dimensions and exact per-channel pixel sums. Per-blob Python is
     the design here (decoding is inherently scalar work); the per-pixel
     arithmetic is vectorized numpy inside each blob."""
-    import pyarrow as pa
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            doc_ids = b.column(b.schema.get_field_index("doc_id"))
-            blobs = b.column(b.schema.get_field_index("media"))
-            ws, hs, sr, sg, sb = [], [], [], [], []
-            for v in blobs:
-                w, h, px = decode_bmp(v.as_py())
-                s = px.astype("int64").sum(axis=0)
-                ws.append(w)
-                hs.append(h)
-                sr.append(int(s[0]))
-                sg.append(int(s[1]))
-                sb.append(int(s[2]))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    doc_ids,
-                    pa.array(ws, type=pa.int32()),
-                    pa.array(hs, type=pa.int32()),
-                    pa.array(sr, type=pa.int64()),
-                    pa.array(sg, type=pa.int64()),
-                    pa.array(sb, type=pa.int64()),
-                ],
-                names=["doc_id", "width", "height", "sum_r", "sum_g", "sum_b"],
-            )
+    def stats(doc_id, blob):
+        w, h, px = decode_bmp(blob)
+        s = px.astype("int64").sum(axis=0)
+        return [(doc_id, w, h, int(s[0]), int(s[1]), int(s[2]))]
 
-    return images.mapInArrow(fn, BMP_STATS_SCHEMA)
+    return _map_rows(images, BMP_STATS_SCHEMA, stats)
 
 
 def multimodal_bmp_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -755,22 +785,7 @@ def multimodal_bmp_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: map-only until the final tiny groupBy (15 shape groups);
     blobs are built and decoded inside the scan stage and never shuffle."""
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media": pdf["doc_id"].map(lambda d: _bmp_encode(int(d))),
-                }
-            )
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(F.col("doc_id") % _BMP_SAMPLE_MOD == 0)
-    )
-    images = docs.mapInPandas(build, "doc_id bigint, media binary")
+    images = _planted(spark, sf_dir, _BMP_SAMPLE_MOD, 0, _bmp_encode)
     stats = decode_bmp_stats(images)
     n_px = F.sum(F.col("width").cast("long") * F.col("height"))
     return (
@@ -952,54 +967,25 @@ def audio_peak_normalize_stats(spark: SparkSession,
     Scale shape: map-only decode + rescale; one row per rate."""
     import numpy as np
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media": pdf["doc_id"].map(
-                        lambda d: _wav_encode(int(d))
-                    ),
-                }
-            )
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(F.col("doc_id") % _WAV_SAMPLE_MOD == _WAV_SAMPLE_RES)
+    clips = _planted(
+        spark, sf_dir, _WAV_SAMPLE_MOD, _WAV_SAMPLE_RES, _wav_encode
     )
-    clips = docs.mapInPandas(build, "doc_id bigint, media binary")
 
-    def kernel(batches):
-        import pyarrow as pa
+    def normalize(_doc_id, blob):
+        rate, s = decode_wav(blob)
+        s = s.astype(np.int64)
+        peak = int(np.abs(s).max())
+        if peak == 0:
+            raise ValueError("silent clip cannot be normalized")
+        mag = (np.abs(s) * _PEAK_TARGET + peak // 2) // peak
+        scaled = np.where(s >= 0, mag, -mag)
+        return [(rate, peak, int(np.abs(scaled).max()),
+                 int((scaled * scaled).sum()))]
 
-        for b in batches:
-            blobs = b.column(b.schema.get_field_index("media"))
-            rates, pre, post, energy = [], [], [], []
-            for v in blobs:
-                rate, s = decode_wav(v.as_py())
-                s = s.astype(np.int64)
-                peak = int(np.abs(s).max())
-                if peak == 0:
-                    raise ValueError("silent clip cannot be normalized")
-                mag = (np.abs(s) * _PEAK_TARGET + peak // 2) // peak
-                scaled = np.where(s >= 0, mag, -mag)
-                rates.append(rate)
-                pre.append(peak)
-                post.append(int(np.abs(scaled).max()))
-                energy.append(int((scaled * scaled).sum()))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(rates, type=pa.int32()),
-                    pa.array(pre, type=pa.int64()),
-                    pa.array(post, type=pa.int64()),
-                    pa.array(energy, type=pa.int64()),
-                ],
-                names=["rate", "pre_peak", "post_peak", "energy"],
-            )
-
-    stats = clips.mapInArrow(
-        kernel, "rate int, pre_peak bigint, post_peak bigint, energy bigint"
+    stats = _map_rows(
+        clips,
+        "rate int, pre_peak bigint, post_peak bigint, energy bigint",
+        normalize,
     )
     return (
         stats.groupBy("rate")
@@ -1069,36 +1055,21 @@ def decode_wav_stats(clips: DataFrame) -> DataFrame:
     ``sample < 0`` convention). Per-blob Python is the design (decoding is
     inherently scalar work); per-sample arithmetic is vectorized numpy."""
     import numpy as np
-    import pyarrow as pa
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            doc_ids = b.column(b.schema.get_field_index("doc_id"))
-            blobs = b.column(b.schema.get_field_index("media"))
-            rates, ns, sq, pk, zc = [], [], [], [], []
-            for v in blobs:
-                rate, s = decode_wav(v.as_py())
-                s64 = s.astype("int64")
-                neg = s64 < 0
-                rates.append(rate)
-                ns.append(len(s64))
-                sq.append(int((s64 * s64).sum()))
-                pk.append(int(np.abs(s64).max()) if len(s64) else 0)
-                zc.append(int((neg[1:] != neg[:-1]).sum()))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    doc_ids,
-                    pa.array(rates, type=pa.int32()),
-                    pa.array(ns, type=pa.int32()),
-                    pa.array(sq, type=pa.int64()),
-                    pa.array(pk, type=pa.int32()),
-                    pa.array(zc, type=pa.int64()),
-                ],
-                names=["doc_id", "sample_rate", "n_samples", "sum_sq",
-                       "peak", "zero_cross"],
-            )
+    def stats(doc_id, blob):
+        rate, s = decode_wav(blob)
+        s64 = s.astype("int64")
+        neg = s64 < 0
+        return [(
+            doc_id,
+            rate,
+            len(s64),
+            int((s64 * s64).sum()),
+            int(np.abs(s64).max()) if len(s64) else 0,
+            int((neg[1:] != neg[:-1]).sum()),
+        )]
 
-    return clips.mapInArrow(fn, WAV_STATS_SCHEMA)
+    return _map_rows(clips, WAV_STATS_SCHEMA, stats)
 
 
 def multimodal_wav_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1113,22 +1084,9 @@ def multimodal_wav_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: map-only until the final tiny groupBy (3 rate groups);
     blobs are built and decoded inside the scan stage and never shuffle."""
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media": pdf["doc_id"].map(lambda d: _wav_encode(int(d))),
-                }
-            )
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(F.col("doc_id") % _WAV_SAMPLE_MOD == _WAV_SAMPLE_RES)
+    clips = _planted(
+        spark, sf_dir, _WAV_SAMPLE_MOD, _WAV_SAMPLE_RES, _wav_encode
     )
-    clips = docs.mapInPandas(build, "doc_id bigint, media binary")
     stats = decode_wav_stats(clips)
     total_n = F.sum(F.col("n_samples").cast("long"))
     return (
@@ -1309,40 +1267,20 @@ def decode_y4m_stats(videos: DataFrame) -> DataFrame:
     """``mapInArrow`` decode kernel: (doc_id, media BINARY) → per-clip
     geometry, exact per-plane sums over ALL frames, and the middle frame's
     luma sum (the frame-sampling path)."""
-    import pyarrow as pa
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            doc_ids = b.column(b.schema.get_field_index("doc_id"))
-            blobs = b.column(b.schema.get_field_index("media"))
-            ws, hs, nf, sy, su, sv, mid = [], [], [], [], [], [], []
-            for v in blobs:
-                w, h, frames = decode_y4m(v.as_py())
-                ws.append(w)
-                hs.append(h)
-                nf.append(len(frames))
-                sy.append(sum(int(f[0].astype("int64").sum()) for f in frames))
-                su.append(sum(int(f[1].astype("int64").sum()) for f in frames))
-                sv.append(sum(int(f[2].astype("int64").sum()) for f in frames))
-                mid.append(
-                    int(frames[len(frames) // 2][0].astype("int64").sum())
-                )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    doc_ids,
-                    pa.array(ws, type=pa.int32()),
-                    pa.array(hs, type=pa.int32()),
-                    pa.array(nf, type=pa.int32()),
-                    pa.array(sy, type=pa.int64()),
-                    pa.array(su, type=pa.int64()),
-                    pa.array(sv, type=pa.int64()),
-                    pa.array(mid, type=pa.int64()),
-                ],
-                names=["doc_id", "width", "height", "n_frames", "sum_y",
-                       "sum_u", "sum_v", "mid_frame_sum_y"],
-            )
+    def stats(doc_id, blob):
+        w, h, frames = decode_y4m(blob)
+        return [(
+            doc_id,
+            w,
+            h,
+            len(frames),
+            *(sum(int(f[p].astype("int64").sum()) for f in frames)
+              for p in range(3)),
+            int(frames[len(frames) // 2][0].astype("int64").sum()),
+        )]
 
-    return videos.mapInArrow(fn, Y4M_STATS_SCHEMA)
+    return _map_rows(videos, Y4M_STATS_SCHEMA, stats)
 
 
 def multimodal_y4m_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1359,22 +1297,9 @@ def multimodal_y4m_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     blobs are built and decoded inside the scan stage and never shuffle —
     and the middle-frame column shows the kernel can sample frames without
     materializing per-frame rows."""
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media": pdf["doc_id"].map(lambda d: _y4m_encode(int(d))),
-                }
-            )
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(F.col("doc_id") % _Y4M_SAMPLE_MOD == _Y4M_SAMPLE_RES)
+    videos = _planted(
+        spark, sf_dir, _Y4M_SAMPLE_MOD, _Y4M_SAMPLE_RES, _y4m_encode
     )
-    videos = docs.mapInPandas(build, "doc_id bigint, media binary")
     stats = decode_y4m_stats(videos)
     n_luma = F.sum(
         F.col("width").cast("long") * F.col("height") * F.col("n_frames")
@@ -1663,45 +1588,24 @@ PNG_STATS_SCHEMA = (
 )
 
 
+def _rgb_stats(doc_id: int, w: int, h: int, px) -> list[tuple]:
+    """One ``(doc_id, width, height, sum_r, sum_g, sum_b, mid_row_sum_r)``
+    row for an image decoded to ``(w, h, px)`` (row-major RGB pixels)."""
+    s = px.astype("int64").sum(axis=0)
+    mrow = px.reshape(h, w, 3)[h // 2, :, 0].astype("int64")
+    return [(doc_id, w, h, int(s[0]), int(s[1]), int(s[2]), int(mrow.sum()))]
+
+
 def decode_png_stats(images: DataFrame) -> DataFrame:
     """``mapInArrow`` decode kernel: (doc_id, media BINARY) → per-image
     decoded dimensions, exact per-channel pixel sums, and the MIDDLE row's
     red sum (proves top-down row order survives filter reversal — a
     decoder that reverses rows would still get the totals right)."""
-    import pyarrow as pa
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            doc_ids = b.column(b.schema.get_field_index("doc_id"))
-            blobs = b.column(b.schema.get_field_index("media"))
-            ws, hs, sr, sg, sb, mid = [], [], [], [], [], []
-            for v in blobs:
-                w, h, px = decode_png(v.as_py())
-                s = px.astype("int64").sum(axis=0)
-                mrow = px.reshape(h, w, 3)[h // 2, :, 0].astype("int64")
-                ws.append(w)
-                hs.append(h)
-                sr.append(int(s[0]))
-                sg.append(int(s[1]))
-                sb.append(int(s[2]))
-                mid.append(int(mrow.sum()))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    doc_ids,
-                    pa.array(ws, type=pa.int32()),
-                    pa.array(hs, type=pa.int32()),
-                    pa.array(sr, type=pa.int64()),
-                    pa.array(sg, type=pa.int64()),
-                    pa.array(sb, type=pa.int64()),
-                    pa.array(mid, type=pa.int64()),
-                ],
-                names=[
-                    "doc_id", "width", "height",
-                    "sum_r", "sum_g", "sum_b", "mid_row_sum_r",
-                ],
-            )
-
-    return images.mapInArrow(fn, PNG_STATS_SCHEMA)
+    return _map_rows(
+        images,
+        PNG_STATS_SCHEMA,
+        lambda d, blob: _rgb_stats(d, *decode_png(blob)),
+    )
 
 
 def multimodal_png_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1719,22 +1623,9 @@ def multimodal_png_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: map-only until the final tiny groupBy (30 shape groups);
     blobs are built and decoded inside the scan stage and never shuffle."""
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media": pdf["doc_id"].map(lambda d: _png_encode(int(d))),
-                }
-            )
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(F.col("doc_id") % _PNG_SAMPLE_MOD == _PNG_SAMPLE_RES)
+    images = _planted(
+        spark, sf_dir, _PNG_SAMPLE_MOD, _PNG_SAMPLE_RES, _png_encode
     )
-    images = docs.mapInPandas(build, "doc_id bigint, media binary")
     stats = decode_png_stats(images)
     n_px = F.sum(F.col("width").cast("long") * F.col("height"))
     return (
@@ -1989,24 +1880,9 @@ def multimodal_png_encode_roundtrip(spark: SparkSession,
 
     Scale shape: identical to the decode twin — map-only encode + decode
     in the scan stage (blobs never shuffle), tiny shape-group aggregate."""
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media": pdf["doc_id"].map(
-                        lambda d: _pngw_encode(int(d))
-                    ),
-                }
-            )
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(F.col("doc_id") % _PNG_SAMPLE_MOD == _PNG_SAMPLE_RES)
+    images = _planted(
+        spark, sf_dir, _PNG_SAMPLE_MOD, _PNG_SAMPLE_RES, _pngw_encode
     )
-    images = docs.mapInPandas(build, "doc_id bigint, media binary")
     stats = decode_png_stats(images)
     n_px = F.sum(F.col("width").cast("long") * F.col("height"))
     return (
@@ -2346,40 +2222,11 @@ def decode_gif_stats(images: DataFrame) -> DataFrame:
     """``mapInArrow`` decode kernel: (doc_id, media BINARY) → decoded
     dimensions, exact per-channel sums, and the middle row's red sum
     (proves pixel ORDER survives the LZW round-trip, not just totals)."""
-    import pyarrow as pa
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            doc_ids = b.column(b.schema.get_field_index("doc_id"))
-            blobs = b.column(b.schema.get_field_index("media"))
-            ws, hs, sr, sg, sb, mid = [], [], [], [], [], []
-            for v in blobs:
-                w, h, px = decode_gif(v.as_py())
-                s = px.astype("int64").sum(axis=0)
-                mrow = px.reshape(h, w, 3)[h // 2, :, 0].astype("int64")
-                ws.append(w)
-                hs.append(h)
-                sr.append(int(s[0]))
-                sg.append(int(s[1]))
-                sb.append(int(s[2]))
-                mid.append(int(mrow.sum()))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    doc_ids,
-                    pa.array(ws, type=pa.int32()),
-                    pa.array(hs, type=pa.int32()),
-                    pa.array(sr, type=pa.int64()),
-                    pa.array(sg, type=pa.int64()),
-                    pa.array(sb, type=pa.int64()),
-                    pa.array(mid, type=pa.int64()),
-                ],
-                names=[
-                    "doc_id", "width", "height",
-                    "sum_r", "sum_g", "sum_b", "mid_row_sum_r",
-                ],
-            )
-
-    return images.mapInArrow(fn, GIF_STATS_SCHEMA)
+    return _map_rows(
+        images,
+        GIF_STATS_SCHEMA,
+        lambda d, blob: _rgb_stats(d, *decode_gif(blob)),
+    )
 
 
 def multimodal_gif_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2397,22 +2244,9 @@ def multimodal_gif_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: map-only until the final tiny groupBy (20 shape groups);
     blobs are built and decoded inside the scan stage and never shuffle."""
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media": pdf["doc_id"].map(lambda d: _gif_encode(int(d))),
-                }
-            )
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(F.col("doc_id") % _GIF_SAMPLE_MOD == _GIF_SAMPLE_RES)
+    images = _planted(
+        spark, sf_dir, _GIF_SAMPLE_MOD, _GIF_SAMPLE_RES, _gif_encode
     )
-    images = docs.mapInPandas(build, "doc_id bigint, media binary")
     stats = decode_gif_stats(images)
     n_px = F.sum(F.col("width").cast("long") * F.col("height"))
     return (
@@ -2527,52 +2361,21 @@ def multimodal_y4m_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes in one blob — no shuffle sees a frame); the aggregate is 4
     rows."""
     import numpy as np
-    import pyarrow as pa
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media": pdf["doc_id"].map(
-                        lambda d: _y4m_encode_cut(int(d))
-                    ),
-                }
+    def diffs(_doc_id, blob):
+        _w, _h, frames = decode_y4m(blob)
+        for i in range(1, len(frames)):
+            d = np.abs(
+                frames[i][0].astype(np.int64)
+                - frames[i - 1][0].astype(np.int64)
             )
+            yield len(frames), i, int(d.sum()), int(d.size)
 
-    def diffs(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            blobs = b.column(b.schema.get_field_index("media"))
-            nf, pair, sad, npx = [], [], [], []
-            for v in blobs:
-                w, h, frames = decode_y4m(v.as_py())
-                for i in range(1, len(frames)):
-                    d = np.abs(
-                        frames[i][0].astype(np.int64)
-                        - frames[i - 1][0].astype(np.int64)
-                    )
-                    nf.append(len(frames))
-                    pair.append(i)
-                    sad.append(int(d.sum()))
-                    npx.append(int(d.size))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(nf, type=pa.int32()),
-                    pa.array(pair, type=pa.int32()),
-                    pa.array(sad, type=pa.int64()),
-                    pa.array(npx, type=pa.int64()),
-                ],
-                names=["n_frames", "pair", "sad", "n_px"],
-            )
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(F.col("doc_id") % _Y4M_SAMPLE_MOD == _Y4M_SAMPLE_RES)
+    clips = _planted(
+        spark, sf_dir, _Y4M_SAMPLE_MOD, _Y4M_SAMPLE_RES, _y4m_encode_cut
     )
-    clips = docs.mapInPandas(build, "doc_id bigint, media binary")
-    pairs = clips.mapInArrow(
-        diffs, "n_frames int, pair int, sad long, n_px long"
+    pairs = _map_rows(
+        clips, "n_frames int, pair int, sad long, n_px long", diffs
     )
     # div-safe: n_px = decoded width x height of a planted frame, positive
     mad = F.col("sad") / F.col("n_px")
@@ -2665,6 +2468,25 @@ _SPEC_BINS = 3
 _SPEC_ROUND = 2
 
 
+def _dft_powers(s, n_bins: int, nd: int) -> list[float]:
+    """DFT powers ``|Σ s_i·e^{-2πik·i/N}|²`` of the samples ``s`` at bins
+    k = 1..n_bins, each rounded to ``nd`` dp."""
+    import math
+
+    n = len(s)
+    powers = []
+    for k in range(1, n_bins + 1):
+        re = im = 0.0
+        for i in range(n):
+            # div-safe: decode_wav yields >= 1 sample here (the
+            # loop body only runs when n >= 1)
+            th = 2 * math.pi * k * i / n
+            re += float(s[i]) * math.cos(th)
+            im += float(s[i]) * math.sin(th)
+        powers.append(_round_half_up(re * re + im * im, nd))
+    return powers
+
+
 def wav_spectrum(clips: DataFrame) -> DataFrame:
     """``mapInArrow`` DFT kernel: decode each WAV and compute the exact
     DFT power ``|Σ s_i·e^{-2πik·i/N}|²`` at bins k=1..{bins} with a scalar
@@ -2672,63 +2494,19 @@ def wav_spectrum(clips: DataFrame) -> DataFrame:
     SIMD-vectorized trig variant could differ beyond the rounding margin).
     Emits per-clip rounded bin powers and the dominant bin (argmax on the
     ROUNDED powers, smaller k on ties — deterministic cross-engine)."""
-    import math
 
-    import pyarrow as pa
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            doc_ids = b.column(b.schema.get_field_index("doc_id"))
-            blobs = b.column(b.schema.get_field_index("media"))
-            rates, powers, doms = [], [[] for _ in range(_SPEC_BINS)], []
-            for v in blobs:
-                rate, s = decode_wav(v.as_py())
-                n = len(s)
-                pk = []
-                for k in range(1, _SPEC_BINS + 1):
-                    re = im = 0.0
-                    for i in range(n):
-                        # div-safe: decode_wav yields >= 1 sample here (the
-                        # loop body only runs when n >= 1)
-                        th = 2 * math.pi * k * i / n
-                        re += float(s[i]) * math.cos(th)
-                        im += float(s[i]) * math.sin(th)
-                    p = re * re + im * im
-                    pk.append(_round_half_up_f(p, _SPEC_ROUND))
-                rates.append(rate)
-                for j in range(_SPEC_BINS):
-                    powers[j].append(pk[j])
-                doms.append(1 + max(range(_SPEC_BINS),
-                                    key=lambda j: (pk[j], -j)))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    doc_ids,
-                    pa.array(rates, type=pa.int32()),
-                    *[pa.array(powers[j], type=pa.float64())
-                      for j in range(_SPEC_BINS)],
-                    pa.array(doms, type=pa.int32()),
-                ],
-                names=["doc_id", "sample_rate",
-                       *[f"p{k}" for k in range(1, _SPEC_BINS + 1)],
-                       "dominant_bin"],
-            )
+    def spectrum(doc_id, blob):
+        rate, s = decode_wav(blob)
+        pk = _dft_powers(s, _SPEC_BINS, _SPEC_ROUND)
+        dom = 1 + max(range(_SPEC_BINS), key=lambda j: (pk[j], -j))
+        return [(doc_id, rate, *pk, dom)]
 
     schema = (
         "doc_id bigint, sample_rate int, "
         + ", ".join(f"p{k} double" for k in range(1, _SPEC_BINS + 1))
         + ", dominant_bin int"
     )
-    return clips.mapInArrow(fn, schema)
-
-
-def _round_half_up_f(x: float, nd: int) -> float:
-    """Half-away-from-zero rounding matching Spark F.round / DuckDB ROUND
-    (Python's builtin round is banker's and diverges on exact halves)."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    return float(
-        Decimal(repr(x)).quantize(Decimal(f"1e-{nd}"), rounding=ROUND_HALF_UP)
-    )
+    return _map_rows(clips, schema, spectrum)
 
 
 def multimodal_wav_spectrum_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2743,22 +2521,9 @@ def multimodal_wav_spectrum_stats(spark: SparkSession, sf_dir: str) -> DataFrame
 
     Scale shape: the O(N·K) per-clip transform runs inside the map-only
     decode kernel (no shuffle sees a sample); the aggregate is 3 rows."""
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media": pdf["doc_id"].map(lambda d: _wav_encode(int(d))),
-                }
-            )
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(F.col("doc_id") % _WAV_SAMPLE_MOD == _WAV_SAMPLE_RES)
+    clips = _planted(
+        spark, sf_dir, _WAV_SAMPLE_MOD, _WAV_SAMPLE_RES, _wav_encode
     )
-    clips = docs.mapInPandas(build, "doc_id bigint, media binary")
     spec = wav_spectrum(clips)
     return (
         spec.groupBy("sample_rate")
@@ -2950,46 +2715,17 @@ def _const_peaks(clips: DataFrame) -> DataFrame:
     per-frame PEAK bin — argmax on the {rnd}-dp-rounded powers, smaller k
     on ties. One (clip, frame, peak) row per frame; samples never leave
     the kernel."""
-    import math
 
-    import pyarrow as pa
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            ids = b.column(b.schema.get_field_index("clip_id"))
-            blobs = b.column(b.schema.get_field_index("media"))
-            out_id, out_t, out_f = [], [], []
-            for cid, v in zip(ids, blobs):
-                _rate, s = decode_wav(v.as_py())
-                nf = len(s) // _CONST_FLEN
-                for t in range(nf):
-                    base = t * _CONST_FLEN
-                    best_k, best_p = 0, None
-                    for k in range(1, _CONST_BINS + 1):
-                        re = im = 0.0
-                        for j in range(_CONST_FLEN):
-                            # div-safe: _CONST_FLEN is a positive constant
-                            th = 2 * math.pi * k * j / _CONST_FLEN
-                            x = float(s[base + j])
-                            re += x * math.cos(th)
-                            im += x * math.sin(th)
-                        p = _round_half_up_f(re * re + im * im,
-                                             _CONST_ROUND)
-                        if best_p is None or p > best_p:
-                            best_k, best_p = k, p
-                    out_id.append(cid.as_py())
-                    out_t.append(t)
-                    out_f.append(best_k)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_id, type=pa.int64()),
-                    pa.array(out_t, type=pa.int32()),
-                    pa.array(out_f, type=pa.int32()),
-                ],
-                names=["clip_id", "t", "f"],
+    def peaks(clip_id, blob):
+        _rate, s = decode_wav(blob)
+        for t in range(len(s) // _CONST_FLEN):
+            frame = s[t * _CONST_FLEN:(t + 1) * _CONST_FLEN]
+            pk = _dft_powers(frame, _CONST_BINS, _CONST_ROUND)
+            yield clip_id, t, 1 + max(
+                range(_CONST_BINS), key=lambda j: (pk[j], -j)
             )
 
-    return clips.mapInArrow(fn, "clip_id bigint, t int, f int")
+    return _map_rows(clips, "clip_id bigint, t int, f int", peaks)
 
 
 _const_peaks.__doc__ = _const_peaks.__doc__.format(
@@ -3028,24 +2764,15 @@ def audio_constellation_near_dup(
             & (F.col("doc_id") % _CONST_MOD == _CONST_RES)
         )
     )
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"]:
-                src = int(d)
-                rows.append(
-                    (src, _const_wav_bytes(_const_clip_samples(src, False)))
-                )
-                rows.append(
-                    (
-                        src + _CONST_TWIN_OFF,
-                        _const_wav_bytes(_const_clip_samples(src, True)),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=["clip_id", "media"])
-
-    clips = docs.mapInPandas(build, "clip_id bigint, media binary")
+    clips = _map_rows(
+        docs,
+        "clip_id bigint, media binary",
+        lambda src: [
+            (src, _const_wav_bytes(_const_clip_samples(src, False))),
+            (src + _CONST_TWIN_OFF,
+             _const_wav_bytes(_const_clip_samples(src, True))),
+        ],
+    )
     peaks = materialize(_const_peaks(clips))
     dts = spark.range(1, _CONST_DT + 1).select(
         F.col("id").cast("int").alias("dt")
@@ -3308,42 +3035,26 @@ def _vid_fingerprints(clips: DataFrame) -> DataFrame:
     block-mean i in raster order (brightness-shift invariant; exact
     integer block means, so both engines agree bit-for-bit)."""
     import numpy as np
-    import pyarrow as pa
 
     nbx, nby = _VID_W // _VID_BLK, _VID_H // _VID_BLK
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            ids = b.column(b.schema.get_field_index("clip_id"))
-            blobs = b.column(b.schema.get_field_index("media"))
-            out_id, out_t, out_fp = [], [], []
-            for cid, v in zip(ids, blobs):
-                w, h, frames = decode_y4m(v.as_py())
-                if (w, h) != (_VID_W, _VID_H):
-                    raise ValueError("unexpected planted geometry")
-                for t, fr in enumerate(frames):
-                    y = np.asarray(fr[0], dtype=np.int64).reshape(h, w)
-                    means = (
-                        y.reshape(nby, _VID_BLK, nbx, _VID_BLK)
-                        .sum(axis=(1, 3)) // (_VID_BLK * _VID_BLK)
-                    ).reshape(-1)
-                    fp = 0
-                    for i in range(len(means) - 1):
-                        if means[i + 1] > means[i]:
-                            fp |= 1 << i
-                    out_id.append(cid.as_py())
-                    out_t.append(t)
-                    out_fp.append(fp)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_id, type=pa.int64()),
-                    pa.array(out_t, type=pa.int32()),
-                    pa.array(out_fp, type=pa.int64()),
-                ],
-                names=["clip_id", "t", "fp"],
-            )
+    def fingerprints(clip_id, blob):
+        w, h, frames = decode_y4m(blob)
+        if (w, h) != (_VID_W, _VID_H):
+            raise ValueError("unexpected planted geometry")
+        for t, fr in enumerate(frames):
+            y = np.asarray(fr[0], dtype=np.int64).reshape(h, w)
+            means = (
+                y.reshape(nby, _VID_BLK, nbx, _VID_BLK)
+                .sum(axis=(1, 3)) // (_VID_BLK * _VID_BLK)
+            ).reshape(-1)
+            fp = 0
+            for i in range(len(means) - 1):
+                if means[i + 1] > means[i]:
+                    fp |= 1 << i
+            yield clip_id, t, fp
 
-    return clips.mapInArrow(fn, "clip_id bigint, t int, fp bigint")
+    return _map_rows(clips, "clip_id bigint, t int, fp bigint", fingerprints)
 
 
 def video_fingerprint_near_dup(
@@ -3374,18 +3085,14 @@ def video_fingerprint_near_dup(
         )
     )
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"]:
-                src = int(d)
-                rows.append((src, _vid_y4m_bytes(src, False)))
-                rows.append(
-                    (src + _VID_TWIN_OFF, _vid_y4m_bytes(src, True))
-                )
-            yield pd.DataFrame(rows, columns=["clip_id", "media"])
-
-    clips = docs.mapInPandas(build, "clip_id bigint, media binary")
+    clips = _map_rows(
+        docs,
+        "clip_id bigint, media binary",
+        lambda src: [
+            (src, _vid_y4m_bytes(src, False)),
+            (src + _VID_TWIN_OFF, _vid_y4m_bytes(src, True)),
+        ],
+    )
     fps = materialize(_vid_fingerprints(clips))
     tw = fps.filter(F.col("clip_id") >= _VID_TWIN_OFF).select(
         F.col("clip_id").alias("twin_doc"),
@@ -3565,7 +3272,7 @@ def _mel_weights() -> list[list[float]]:
                 v = (e2 - mk) / (e2 - e1)
             else:
                 v = 0.0
-            row.append(_round_half_up_f(v, 6))
+            row.append(_round_half_up(v, 6))
         w.append(row)
     return w
 
@@ -3575,47 +3282,16 @@ def wav_spectrum_bins(clips: DataFrame, n_bins: int) -> DataFrame:
     generalized to ``n_bins`` bins: per clip, decode and emit the rounded
     DFT powers ``p1..p{n_bins}`` (same scalar ``math.cos/sin`` loop — the
     libm path the SQL replay takes)."""
-    import math
 
-    import pyarrow as pa
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            doc_ids = b.column(b.schema.get_field_index("doc_id"))
-            blobs = b.column(b.schema.get_field_index("media"))
-            rates: list[int] = []
-            powers: list[list[float]] = [[] for _ in range(n_bins)]
-            for v in blobs:
-                rate, s = decode_wav(v.as_py())
-                n = len(s)
-                rates.append(rate)
-                for k in range(1, n_bins + 1):
-                    re = im = 0.0
-                    for i in range(n):
-                        # div-safe: decode_wav yields >= 1 sample here (the
-                        # loop body only runs when n >= 1)
-                        th = 2 * math.pi * k * i / n
-                        re += float(s[i]) * math.cos(th)
-                        im += float(s[i]) * math.sin(th)
-                    powers[k - 1].append(
-                        _round_half_up_f(re * re + im * im, _SPEC_ROUND)
-                    )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    doc_ids,
-                    pa.array(rates, type=pa.int32()),
-                    *[pa.array(powers[j], type=pa.float64())
-                      for j in range(n_bins)],
-                ],
-                names=["doc_id", "sample_rate",
-                       *[f"p{k}" for k in range(1, n_bins + 1)]],
-            )
+    def spectrum(doc_id, blob):
+        rate, s = decode_wav(blob)
+        return [(doc_id, rate, *_dft_powers(s, n_bins, _SPEC_ROUND))]
 
     schema = (
         "doc_id bigint, sample_rate int, "
         + ", ".join(f"p{k} double" for k in range(1, n_bins + 1))
     )
-    return clips.mapInArrow(fn, schema)
+    return _map_rows(clips, schema, spectrum)
 
 
 def audio_mel_filterbank_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3637,22 +3313,9 @@ def audio_mel_filterbank_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the O(N·K) transform runs inside the map-only decode
     kernel; the filterbank is a JVM-side codegen projection over the
     kernel's {b} bin columns; the aggregate is 3 rows."""
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media": pdf["doc_id"].map(lambda d: _wav_encode(int(d))),
-                }
-            )
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(F.col("doc_id") % _WAV_SAMPLE_MOD == _WAV_SAMPLE_RES)
+    clips = _planted(
+        spark, sf_dir, _WAV_SAMPLE_MOD, _WAV_SAMPLE_RES, _wav_encode
     )
-    clips = docs.mapInPandas(build, "doc_id bigint, media binary")
     spec = wav_spectrum_bins(clips, _MEL_BINS)
     w = _mel_weights()
     mel_cols = []
@@ -3798,65 +3461,34 @@ def audio_resample_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: decode + resample run inside the scan-stage kernel (blobs
     and samples never shuffle); the aggregate is 3 rate groups."""
-    import pyarrow as pa
+    import math
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media": pdf["doc_id"].map(lambda d: _wav_encode(int(d))),
-                }
-            )
+    def resample(doc_id, blob):
+        rate, s = decode_wav(blob)
+        n = len(s)
+        m = (n - 1) * _RESAMPLE_RATE // rate + 1
+        amp = ener = 0.0
+        for j in range(m):
+            # div-safe: _RESAMPLE_RATE is a positive constant
+            pos = j * rate / float(_RESAMPLE_RATE)
+            i = int(math.floor(pos))
+            frac = pos - math.floor(pos)
+            i2 = min(i + 1, n - 1)
+            val = float(s[i]) + (float(s[i2]) - float(s[i])) * frac
+            amp += val
+            ener += val * val
+        # div-safe: m = (n-1)*R//r + 1 >= 1
+        return [(doc_id, rate, m, _round_half_up(amp / m, _RESAMPLE_ROUND),
+                 _round_half_up(ener / m, _RESAMPLE_ROUND))]
 
-    def resample(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import math
-
-        for b in batches:
-            doc_ids = b.column(b.schema.get_field_index("doc_id"))
-            blobs = b.column(b.schema.get_field_index("media"))
-            rates, ms, amps, eners = [], [], [], []
-            for v in blobs:
-                rate, s = decode_wav(v.as_py())
-                n = len(s)
-                m = (n - 1) * _RESAMPLE_RATE // rate + 1
-                amp = ener = 0.0
-                for j in range(m):
-                    # div-safe: _RESAMPLE_RATE is a positive constant
-                    pos = j * rate / float(_RESAMPLE_RATE)
-                    i = int(math.floor(pos))
-                    frac = pos - math.floor(pos)
-                    i2 = min(i + 1, n - 1)
-                    val = float(s[i]) + (float(s[i2]) - float(s[i])) * frac
-                    amp += val
-                    ener += val * val
-                rates.append(rate)
-                ms.append(m)
-                # div-safe: m = (n-1)*R//r + 1 >= 1
-                amps.append(_round_half_up_f(amp / m, _RESAMPLE_ROUND))
-                eners.append(_round_half_up_f(ener / m, _RESAMPLE_ROUND))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    doc_ids,
-                    pa.array(rates, type=pa.int32()),
-                    pa.array(ms, type=pa.int32()),
-                    pa.array(amps, type=pa.float64()),
-                    pa.array(eners, type=pa.float64()),
-                ],
-                names=["doc_id", "sample_rate", "n_out", "mean_amp",
-                       "mean_energy"],
-            )
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(F.col("doc_id") % _WAV_SAMPLE_MOD == _WAV_SAMPLE_RES)
+    clips = _planted(
+        spark, sf_dir, _WAV_SAMPLE_MOD, _WAV_SAMPLE_RES, _wav_encode
     )
-    clips = docs.mapInPandas(build, "doc_id bigint, media binary")
-    out = clips.mapInArrow(
-        resample,
+    out = _map_rows(
+        clips,
         "doc_id bigint, sample_rate int, n_out int, mean_amp double, "
         "mean_energy double",
+        resample,
     )
     return (
         out.groupBy("sample_rate")
@@ -3992,41 +3624,21 @@ def wav_frame_energies(clips: DataFrame) -> DataFrame:
     by nature; the framing/energy math is vectorized numpy (reshape +
     row-sum). Emitting frame rows (not segments) keeps the stateful part
     of VAD — the island merge — in JVM window functions downstream."""
-    import numpy as np
-    import pyarrow as pa
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            doc_ids = b.column(b.schema.get_field_index("doc_id"))
-            blobs = b.column(b.schema.get_field_index("media"))
-            dids, rates, fidx, sq = [], [], [], []
-            for d, v in zip(doc_ids, blobs):
-                rate, s = decode_wav(v.as_py())
-                if len(s) % _VAD_FRAME:
-                    raise ValueError(
-                        "clip length not frame-aligned: "
-                        f"{len(s)} % {_VAD_FRAME} != 0"
-                    )
-                e = (
-                    s.astype("int64").reshape(-1, _VAD_FRAME) ** 2
-                ).sum(axis=1)
-                dids.extend([d.as_py()] * len(e))
-                rates.extend([rate] * len(e))
-                fidx.extend(range(len(e)))
-                sq.extend(int(x) for x in e)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(dids, type=pa.int64()),
-                    pa.array(rates, type=pa.int32()),
-                    pa.array(fidx, type=pa.int32()),
-                    pa.array(sq, type=pa.int64()),
-                ],
-                names=["doc_id", "sample_rate", "frame_idx", "sum_sq"],
+    def energies(doc_id, blob):
+        rate, s = decode_wav(blob)
+        if len(s) % _VAD_FRAME:
+            raise ValueError(
+                "clip length not frame-aligned: "
+                f"{len(s)} % {_VAD_FRAME} != 0"
             )
+        e = (s.astype("int64").reshape(-1, _VAD_FRAME) ** 2).sum(axis=1)
+        return [(doc_id, rate, i, int(x)) for i, x in enumerate(e)]
 
-    return clips.mapInArrow(
-        fn,
+    return _map_rows(
+        clips,
         "doc_id bigint, sample_rate int, frame_idx int, sum_sq bigint",
+        energies,
     )
 
 
@@ -4059,21 +3671,9 @@ def audio_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-phase segment census: per-clip windows, then a tiny rollup."""
     from pyspark.sql import Window
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media": pdf["doc_id"].map(lambda d: _vad_encode(int(d))),
-                }
-            )
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(F.col("doc_id") % _WAV_SAMPLE_MOD == _WAV_SAMPLE_RES)
+    clips = _planted(
+        spark, sf_dir, _WAV_SAMPLE_MOD, _WAV_SAMPLE_RES, _vad_encode
     )
-    clips = docs.mapInPandas(build, "doc_id bigint, media binary")
     frames = wav_frame_energies(clips).withColumn(
         "voiced", F.col("sum_sq") > _VAD_THRESH_SUMSQ
     )
@@ -4204,68 +3804,49 @@ def resize_bilinear_means(images: DataFrame) -> DataFrame:
     and only the 12-term mean ordering needs the {r}-dp round."""
     import math
 
-    import pyarrow as pa
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            doc_ids = b.column(b.schema.get_field_index("doc_id"))
-            blobs = b.column(b.schema.get_field_index("media"))
-            ws, hs = [], []
-            means: list[list[float]] = [[], [], []]
-            for v in blobs:
-                w, h, flat = decode_bmp(v.as_py())
-                px = flat.reshape(h, w, 3)
-                sums = [0.0, 0.0, 0.0]
-                for y2 in range(_RESIZE_H):
-                    # div-safe: _RESIZE_H is a positive constant
-                    sy = (y2 + 0.5) * h / float(_RESIZE_H) - 0.5
-                    y0 = math.floor(sy)
-                    fy = sy - y0
-                    ya = min(max(int(y0), 0), h - 1)
-                    yb = min(max(int(y0) + 1, 0), h - 1)
-                    for x2 in range(_RESIZE_W):
-                        # div-safe: _RESIZE_W is a positive constant
-                        sx = (x2 + 0.5) * w / float(_RESIZE_W) - 0.5
-                        x0 = math.floor(sx)
-                        fx = sx - x0
-                        xa = min(max(int(x0), 0), w - 1)
-                        xb = min(max(int(x0) + 1, 0), w - 1)
-                        for c in range(3):
-                            pa_v = float(px[ya, xa, c])
-                            pb_v = float(px[ya, xb, c])
-                            pc_v = float(px[yb, xa, c])
-                            pd_v = float(px[yb, xb, c])
-                            sums[c] += (
-                                (pa_v * (1 - fx)) * (1 - fy)
-                                + (pb_v * fx) * (1 - fy)
-                                + (pc_v * (1 - fx)) * fy
-                                + (pd_v * fx) * fy
-                            )
-                ws.append(w)
-                hs.append(h)
+    def means(doc_id, blob):
+        w, h, flat = decode_bmp(blob)
+        px = flat.reshape(h, w, 3)
+        sums = [0.0, 0.0, 0.0]
+        for y2 in range(_RESIZE_H):
+            # div-safe: _RESIZE_H is a positive constant
+            sy = (y2 + 0.5) * h / float(_RESIZE_H) - 0.5
+            y0 = math.floor(sy)
+            fy = sy - y0
+            ya = min(max(int(y0), 0), h - 1)
+            yb = min(max(int(y0) + 1, 0), h - 1)
+            for x2 in range(_RESIZE_W):
+                # div-safe: _RESIZE_W is a positive constant
+                sx = (x2 + 0.5) * w / float(_RESIZE_W) - 0.5
+                x0 = math.floor(sx)
+                fx = sx - x0
+                xa = min(max(int(x0), 0), w - 1)
+                xb = min(max(int(x0) + 1, 0), w - 1)
                 for c in range(3):
-                    means[c].append(
-                        _round_half_up_f(
-                            # div-safe: fixed positive target-pixel count
-                            sums[c] / float(_RESIZE_W * _RESIZE_H),
-                            _RESIZE_ROUND,
-                        )
+                    pa_v = float(px[ya, xa, c])
+                    pb_v = float(px[ya, xb, c])
+                    pc_v = float(px[yb, xa, c])
+                    pd_v = float(px[yb, xb, c])
+                    sums[c] += (
+                        (pa_v * (1 - fx)) * (1 - fy)
+                        + (pb_v * fx) * (1 - fy)
+                        + (pc_v * (1 - fx)) * fy
+                        + (pd_v * fx) * fy
                     )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    doc_ids,
-                    pa.array(ws, type=pa.int32()),
-                    pa.array(hs, type=pa.int32()),
-                    *[pa.array(means[c], type=pa.float64()) for c in range(3)],
-                ],
-                names=["doc_id", "width", "height", "r_mean", "g_mean",
-                       "b_mean"],
+        return [(doc_id, w, h, *(
+            _round_half_up(
+                # div-safe: fixed positive target-pixel count
+                sums[c] / float(_RESIZE_W * _RESIZE_H),
+                _RESIZE_ROUND,
             )
+            for c in range(3)
+        ))]
 
-    return images.mapInArrow(
-        fn,
+    return _map_rows(
+        images,
         "doc_id bigint, width int, height int, "
         "r_mean double, g_mean double, b_mean double",
+        means,
     )
 
 
@@ -4287,22 +3868,7 @@ def multimodal_resize_bilinear_stats(spark: SparkSession, sf_dir: str) -> DataFr
 
     Scale shape: decode + resize run inside the scan-stage kernel (blobs
     never shuffle); the aggregate is 15 shape groups."""
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media": pdf["doc_id"].map(lambda d: _bmp_encode(int(d))),
-                }
-            )
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(F.col("doc_id") % _BMP_SAMPLE_MOD == 0)
-    )
-    images = docs.mapInPandas(build, "doc_id bigint, media binary")
+    images = _planted(spark, sf_dir, _BMP_SAMPLE_MOD, 0, _bmp_encode)
     resized = resize_bilinear_means(images)
     return (
         resized.groupBy("width", "height")
@@ -4426,65 +3992,29 @@ def multimodal_hist_equalization_stats(spark: SparkSession, sf_dir: str) -> Data
     shape groups. The oracle's window cdf partitions by doc_id — bounded
     per-image groups."""
     import numpy as np
-    import pyarrow as pa
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media": pdf["doc_id"].map(lambda d: _bmp_encode(int(d))),
-                }
-            )
+    def equalize(doc_id, blob):
+        w, h, px = decode_bmp(blob)
+        r = px[:, 0].astype(np.int64)
+        n = int(r.size)
+        counts = np.bincount(r, minlength=256)
+        cdf = np.cumsum(counts)
+        occupied = counts > 0
+        cdf_min = int(cdf[occupied.argmax()])  # darkest level count
+        den = max(n - cdf_min, 1)
+        num = (cdf - cdf_min) * 255
+        # integer half-up rounding: (num*2 + den) // (2*den)
+        levels = (num * 2 + den) // (2 * den)
+        out = levels[r]
+        return [(doc_id, w, h, int(r.sum()), int(out.sum()),
+                 int(occupied.sum()), int(np.unique(levels[occupied]).size))]
 
-    def equalize(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            doc_ids = b.column(b.schema.get_field_index("doc_id"))
-            blobs = b.column(b.schema.get_field_index("media"))
-            ws, hs, pre, post, dpre, dpost = [], [], [], [], [], []
-            for v in blobs:
-                w, h, px = decode_bmp(v.as_py())
-                r = px[:, 0].astype(np.int64)
-                n = int(r.size)
-                counts = np.bincount(r, minlength=256)
-                cdf = np.cumsum(counts)
-                occupied = counts > 0
-                cdf_min = int(cdf[occupied.argmax()])  # darkest level count
-                den = max(n - cdf_min, 1)
-                num = (cdf - cdf_min) * 255
-                # integer half-up rounding: (num*2 + den) // (2*den)
-                levels = (num * 2 + den) // (2 * den)
-                out = levels[r]
-                ws.append(w)
-                hs.append(h)
-                pre.append(int(r.sum()))
-                post.append(int(out.sum()))
-                dpre.append(int(occupied.sum()))
-                dpost.append(int(np.unique(levels[occupied]).size))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    doc_ids,
-                    pa.array(ws, type=pa.int32()),
-                    pa.array(hs, type=pa.int32()),
-                    pa.array(pre, type=pa.int64()),
-                    pa.array(post, type=pa.int64()),
-                    pa.array(dpre, type=pa.int64()),
-                    pa.array(dpost, type=pa.int64()),
-                ],
-                names=["doc_id", "width", "height", "sum_pre", "sum_post",
-                       "levels_pre", "levels_post"],
-            )
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(F.col("doc_id") % _BMP_SAMPLE_MOD == 0)
-    )
-    images = docs.mapInPandas(build, "doc_id bigint, media binary")
-    eq = images.mapInArrow(
-        equalize,
+    images = _planted(spark, sf_dir, _BMP_SAMPLE_MOD, 0, _bmp_encode)
+    eq = _map_rows(
+        images,
         "doc_id bigint, width int, height int, sum_pre bigint, "
         "sum_post bigint, levels_pre bigint, levels_post bigint",
+        equalize,
     )
     return (
         eq.groupBy("width", "height")
@@ -4642,7 +4172,7 @@ def multimodal_tar_webdataset_scan(spark: SparkSession, sf_dir: str) -> DataFram
         (F.col("doc_id") % _TAR_SHARDS).cast("int").alias("shard_id"),
     )
 
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
+    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("doc_id")
         members: list[tuple[str, bytes]] = []
         for r in pdf.itertuples():
@@ -4654,7 +4184,7 @@ def multimodal_tar_webdataset_scan(spark: SparkSession, sf_dir: str) -> DataFram
         )
 
     shards = docs.groupBy("shard_id").applyInPandas(
-        build, "shard_id int, tar binary"
+        assemble, "shard_id int, tar binary"
     )
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -5151,37 +4681,14 @@ def decode_jpeg_stats(images: DataFrame) -> DataFrame:
     dimensions, the exact pixel sum, and the middle row's / middle
     column's sums (pixel ORDER must survive Huffman + IDCT + crop in both
     axes, not just totals)."""
-    import pyarrow as pa
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            doc_ids = b.column(b.schema.get_field_index("doc_id"))
-            blobs = b.column(b.schema.get_field_index("media"))
-            ws, hs, tot, mrow, mcol = [], [], [], [], []
-            for v in blobs:
-                w, h, px = decode_jpeg(v.as_py())
-                p64 = px.astype("int64")
-                ws.append(w)
-                hs.append(h)
-                tot.append(int(p64.sum()))
-                mrow.append(int(p64[h // 2, :].sum()))
-                mcol.append(int(p64[:, w // 2].sum()))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    doc_ids,
-                    pa.array(ws, type=pa.int32()),
-                    pa.array(hs, type=pa.int32()),
-                    pa.array(tot, type=pa.int64()),
-                    pa.array(mrow, type=pa.int64()),
-                    pa.array(mcol, type=pa.int64()),
-                ],
-                names=[
-                    "doc_id", "width", "height",
-                    "sum_px", "mid_row_sum", "mid_col_sum",
-                ],
-            )
+    def stats(doc_id, blob):
+        w, h, px = decode_jpeg(blob)
+        p64 = px.astype("int64")
+        return [(doc_id, w, h, int(p64.sum()), int(p64[h // 2, :].sum()),
+                 int(p64[:, w // 2].sum()))]
 
-    return images.mapInArrow(fn, JPEG_STATS_SCHEMA)
+    return _map_rows(images, JPEG_STATS_SCHEMA, stats)
 
 
 def multimodal_jpeg_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5202,22 +4709,9 @@ def multimodal_jpeg_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: map-only until the final tiny groupBy (width×height shape
     groups); blobs are built and decoded inside the scan stage and never
     shuffle."""
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media": pdf["doc_id"].map(lambda d: _jpeg_encode(int(d))),
-                }
-            )
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(F.col("doc_id") % _JPEG_SAMPLE_MOD == _JPEG_SAMPLE_RES)
+    images = _planted(
+        spark, sf_dir, _JPEG_SAMPLE_MOD, _JPEG_SAMPLE_RES, _jpeg_encode
     )
-    images = docs.mapInPandas(build, "doc_id bigint, media binary")
     stats = decode_jpeg_stats(images)
     n_px = F.sum(F.col("width").cast("long") * F.col("height"))
     return (
@@ -5386,67 +4880,32 @@ def multimodal_jpeg_quality_estimate(spark: SparkSession,
 
     Scale shape: map-only encode + parse in the scan stage; the aggregate
     is one row per distinct QF (≤ {mod})."""
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media": pdf["doc_id"].map(
-                        lambda d: _jpegq_encode(int(d))
-                    ),
-                }
-            )
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(F.col("doc_id") % _JPEG_SAMPLE_MOD == _JPEG_SAMPLE_RES)
+    images = _planted(
+        spark, sf_dir, _JPEG_SAMPLE_MOD, _JPEG_SAMPLE_RES, _jpegq_encode
     )
-    images = docs.mapInPandas(build, "doc_id bigint, media binary")
 
-    def estimate(batches):
-        import pyarrow as pa
+    candidates = {
+        qf: tuple(
+            _ijg_qtable_natural(qf)[u * 8 + v] for (u, v) in _JPEG_ZIGZAG
+        )
+        for qf in range(1, 101)
+    }
 
-        candidates = {
-            qf: tuple(
-                _ijg_qtable_natural(qf)[u * 8 + v]
-                for (u, v) in _JPEG_ZIGZAG
-            )
-            for qf in range(1, 101)
-        }
-        for b in batches:
-            doc_ids = b.column(b.schema.get_field_index("doc_id"))
-            blobs = b.column(b.schema.get_field_index("media"))
-            dids, qfs, qsums, ws, hs = [], [], [], [], []
-            for d, v in zip(doc_ids, blobs):
-                zz = tuple(_jpeg_read_dqt0(v.as_py()))
-                est = -1
-                for qf, cand in candidates.items():
-                    if cand == zz:
-                        est = qf
-                        break
-                wdec, hdec, _px = decode_jpeg(v.as_py())
-                dids.append(d.as_py())
-                qfs.append(est)
-                qsums.append(int(sum(zz)))
-                ws.append(wdec)
-                hs.append(hdec)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(dids, type=pa.int64()),
-                    pa.array(qfs, type=pa.int32()),
-                    pa.array(qsums, type=pa.int64()),
-                    pa.array(ws, type=pa.int32()),
-                    pa.array(hs, type=pa.int32()),
-                ],
-                names=["doc_id", "qf_est", "qtable_sum", "width", "height"],
-            )
+    def estimate(doc_id, blob):
+        zz = tuple(_jpeg_read_dqt0(blob))
+        est = -1
+        for qf, cand in candidates.items():
+            if cand == zz:
+                est = qf
+                break
+        wdec, hdec, _px = decode_jpeg(blob)
+        return [(doc_id, est, int(sum(zz)), wdec, hdec)]
 
-    stats = images.mapInArrow(
-        estimate,
+    stats = _map_rows(
+        images,
         "doc_id bigint, qf_est int, qtable_sum bigint, "
         "width int, height int",
+        estimate,
     )
     return (
         stats.groupBy("qf_est")
@@ -5680,65 +5139,20 @@ def multimodal_exif_metadata_census(spark: SparkSession,
 
     Scale shape: map-only encode + parse in the scan stage; the aggregate
     is one row per orientation (<= 8)."""
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media": pdf["doc_id"].map(
-                        lambda d: _exif_encode(int(d))
-                    ),
-                }
-            )
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(F.col("doc_id") % _JPEG_SAMPLE_MOD == _EXIF_SAMPLE_RES)
+    images = _planted(
+        spark, sf_dir, _JPEG_SAMPLE_MOD, _EXIF_SAMPLE_RES, _exif_encode
     )
-    images = docs.mapInPandas(build, "doc_id bigint, media binary")
 
-    def parse(batches):
-        import pyarrow as pa
+    def parse(_doc_id, blob):
+        m = _exif_parse(blob)
+        return [(m["byte_order"], m["orientation"], m["width"], m["height"],
+                 int(m["dt"][:4]), m["dt"], m["dt_offset"], m["app1_len"])]
 
-        for b in batches:
-            blobs = b.column(b.schema.get_field_index("media"))
-            cols = {k: [] for k in (
-                "byte_order", "orientation", "width", "height",
-                "year", "dt", "dt_offset", "app1_len",
-            )}
-            for v in blobs:
-                m = _exif_parse(v.as_py())
-                cols["byte_order"].append(m["byte_order"])
-                cols["orientation"].append(m["orientation"])
-                cols["width"].append(m["width"])
-                cols["height"].append(m["height"])
-                cols["year"].append(int(m["dt"][:4]))
-                cols["dt"].append(m["dt"])
-                cols["dt_offset"].append(m["dt_offset"])
-                cols["app1_len"].append(m["app1_len"])
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(cols["byte_order"], type=pa.string()),
-                    pa.array(cols["orientation"], type=pa.int32()),
-                    pa.array(cols["width"], type=pa.int32()),
-                    pa.array(cols["height"], type=pa.int32()),
-                    pa.array(cols["year"], type=pa.int32()),
-                    pa.array(cols["dt"], type=pa.string()),
-                    pa.array(cols["dt_offset"], type=pa.int64()),
-                    pa.array(cols["app1_len"], type=pa.int64()),
-                ],
-                names=[
-                    "byte_order", "orientation", "width", "height",
-                    "year", "dt", "dt_offset", "app1_len",
-                ],
-            )
-
-    meta = images.mapInArrow(
-        parse,
+    meta = _map_rows(
+        images,
         "byte_order string, orientation int, width int, height int, "
         "year int, dt string, dt_offset bigint, app1_len bigint",
+        parse,
     )
     return (
         meta.groupBy("orientation")
@@ -5850,66 +5264,26 @@ def multimodal_exif_orientation_normalize(spark: SparkSession,
     transform all diverge the checksum.
 
     Scale shape: map-only decode + remap; one row per orientation."""
+    import numpy as np
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media": pdf["doc_id"].map(
-                        lambda d: _exif_encode(int(d))
-                    ),
-                }
-            )
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(F.col("doc_id") % _JPEG_SAMPLE_MOD == _EXIF_SAMPLE_RES)
+    images = _planted(
+        spark, sf_dir, _JPEG_SAMPLE_MOD, _EXIF_SAMPLE_RES, _exif_encode
     )
-    images = docs.mapInPandas(build, "doc_id bigint, media binary")
 
-    def normalize(batches):
-        import numpy as np
-        import pyarrow as pa
+    def normalize(_doc_id, blob):
+        o = _exif_parse(blob)["orientation"]
+        _w, _h, px = decode_jpeg(blob)
+        up = _exif_upright(px.astype(np.int64), o)
+        oh, ow = up.shape
+        pos = np.arange(1, oh * ow + 1).reshape(oh, ow)
+        return [(o, ow, oh, int(up.sum()), int((up * pos).sum()),
+                 int(up[0, 0]), int(up[-1, -1]))]
 
-        for b in batches:
-            blobs = b.column(b.schema.get_field_index("media"))
-            orients, ows, ohs, sums, poss, c00, cll = (
-                [], [], [], [], [], [], []
-            )
-            for v in blobs:
-                raw = v.as_py()
-                o = _exif_parse(raw)["orientation"]
-                _w, _h, px = decode_jpeg(raw)
-                up = _exif_upright(px.astype(np.int64), o)
-                oh, ow = up.shape
-                pos = np.arange(1, oh * ow + 1).reshape(oh, ow)
-                orients.append(o)
-                ows.append(ow)
-                ohs.append(oh)
-                sums.append(int(up.sum()))
-                poss.append(int((up * pos).sum()))
-                c00.append(int(up[0, 0]))
-                cll.append(int(up[-1, -1]))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(orients, type=pa.int32()),
-                    pa.array(ows, type=pa.int32()),
-                    pa.array(ohs, type=pa.int32()),
-                    pa.array(sums, type=pa.int64()),
-                    pa.array(poss, type=pa.int64()),
-                    pa.array(c00, type=pa.int64()),
-                    pa.array(cll, type=pa.int64()),
-                ],
-                names=["orientation", "out_w", "out_h", "px_sum",
-                       "pos_checksum", "corner00", "corner_last"],
-            )
-
-    stats = images.mapInArrow(
-        normalize,
+    stats = _map_rows(
+        images,
         "orientation int, out_w int, out_h int, px_sum bigint, "
         "pos_checksum bigint, corner00 bigint, corner_last bigint",
+        normalize,
     )
     return (
         stats.groupBy("orientation")
@@ -6170,55 +5544,23 @@ def multimodal_jpeg_dc_thumbnail(spark: SparkSession,
     positional checksum, and the corner pixel sums — the oracle replays
     the planted DC lattice ``128 + 2·((doc_id + 5bx + 3by) mod 32 − 16)``
     per block, so a DC-prediction slip in ANY block diverges it."""
+    import numpy as np
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media": pdf["doc_id"].map(
-                        lambda d: _jpeg_encode(int(d))
-                    ),
-                }
-            )
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(F.col("doc_id") % _JPEG_SAMPLE_MOD == _JPEG_SAMPLE_RES)
+    images = _planted(
+        spark, sf_dir, _JPEG_SAMPLE_MOD, _JPEG_SAMPLE_RES, _jpeg_encode
     )
-    images = docs.mapInPandas(build, "doc_id bigint, media binary")
 
-    def kernel(batches):
-        import numpy as np
-        import pyarrow as pa
+    def thumbnail(_doc_id, blob):
+        tw, th, thumb = decode_jpeg_dc(blob)
+        pos = np.arange(1, th * tw + 1).reshape(th, tw)
+        return [(tw, th, int(thumb.sum()), int((thumb * pos).sum()),
+                 int(thumb[0, 0]))]
 
-        for b in batches:
-            blobs = b.column(b.schema.get_field_index("media"))
-            tws, ths, sums, poss, c00 = [], [], [], [], []
-            for v in blobs:
-                tw, th, thumb = decode_jpeg_dc(v.as_py())
-                pos = np.arange(1, th * tw + 1).reshape(th, tw)
-                tws.append(tw)
-                ths.append(th)
-                sums.append(int(thumb.sum()))
-                poss.append(int((thumb * pos).sum()))
-                c00.append(int(thumb[0, 0]))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(tws, type=pa.int32()),
-                    pa.array(ths, type=pa.int32()),
-                    pa.array(sums, type=pa.int64()),
-                    pa.array(poss, type=pa.int64()),
-                    pa.array(c00, type=pa.int64()),
-                ],
-                names=["tw", "th", "px_sum", "pos_checksum", "corner00"],
-            )
-
-    stats = images.mapInArrow(
-        kernel,
+    stats = _map_rows(
+        images,
         "tw int, th int, px_sum bigint, pos_checksum bigint, "
         "corner00 bigint",
+        thumbnail,
     )
     return (
         stats.groupBy("tw", "th")
@@ -6410,41 +5752,14 @@ def decode_jpeg_color_stats(images: DataFrame) -> DataFrame:
     sums plus the middle row's R sum and middle column's G sum (pixel
     order must survive the interleaved MCU scan, chroma upsampling, and
     color conversion in both axes)."""
-    import pyarrow as pa
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            doc_ids = b.column(b.schema.get_field_index("doc_id"))
-            blobs = b.column(b.schema.get_field_index("media"))
-            ws, hs, sr, sg, sb, mrow, mcol = [], [], [], [], [], [], []
-            for v in blobs:
-                w, h, px = decode_jpeg(v.as_py())
-                p64 = px.astype("int64")
-                ws.append(w)
-                hs.append(h)
-                sr.append(int(p64[:, :, 0].sum()))
-                sg.append(int(p64[:, :, 1].sum()))
-                sb.append(int(p64[:, :, 2].sum()))
-                mrow.append(int(p64[h // 2, :, 0].sum()))
-                mcol.append(int(p64[:, w // 2, 1].sum()))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    doc_ids,
-                    pa.array(ws, type=pa.int32()),
-                    pa.array(hs, type=pa.int32()),
-                    pa.array(sr, type=pa.int64()),
-                    pa.array(sg, type=pa.int64()),
-                    pa.array(sb, type=pa.int64()),
-                    pa.array(mrow, type=pa.int64()),
-                    pa.array(mcol, type=pa.int64()),
-                ],
-                names=[
-                    "doc_id", "width", "height", "sum_r", "sum_g", "sum_b",
-                    "mid_row_sum_r", "mid_col_sum_g",
-                ],
-            )
+    def stats(doc_id, blob):
+        w, h, px = decode_jpeg(blob)
+        p64 = px.astype("int64")
+        return [(doc_id, w, h, *(int(p64[:, :, c].sum()) for c in range(3)),
+                 int(p64[h // 2, :, 0].sum()), int(p64[:, w // 2, 1].sum()))]
 
-    return images.mapInArrow(fn, JPEGC_STATS_SCHEMA)
+    return _map_rows(images, JPEGC_STATS_SCHEMA, stats)
 
 
 def multimodal_jpeg_color_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6461,24 +5776,9 @@ def multimodal_jpeg_color_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: map-only until the final tiny groupBy; blobs never
     shuffle."""
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media": pdf["doc_id"].map(
-                        lambda d: _jpegc_encode(int(d))
-                    ),
-                }
-            )
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(F.col("doc_id") % _JPEGC_SAMPLE_MOD == _JPEGC_SAMPLE_RES)
+    images = _planted(
+        spark, sf_dir, _JPEGC_SAMPLE_MOD, _JPEGC_SAMPLE_RES, _jpegc_encode
     )
-    images = docs.mapInPandas(build, "doc_id bigint, media binary")
     stats = decode_jpeg_color_stats(images)
     n_px = F.sum(F.col("width").cast("long") * F.col("height"))
     return (

@@ -35,6 +35,8 @@ from pyspark.sql import functions as F
 
 from datafusion_impl_spark.operators.dedup import _grouped_pairs
 from datafusion_impl_spark.operators import (
+    _dot,
+    _round_half_up,
     bounded_iteration,
     materialize,
     md5_long,
@@ -71,14 +73,6 @@ def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
     )
     return e.withColumn("nrm", _norm(F.col("v")))
-
-
-def _dot(a: Column, b: Column) -> Column:
-    """Sequential left-to-right fold (matches DuckDB bit-for-bit; see the
-    codegen note on :func:`_norm` for why this is not unrolled)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
 
 
 def _cos(a: Column, b: Column) -> Column:
@@ -1588,6 +1582,33 @@ def _pq_adc_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _exact_l2_truth(e: DataFrame):
+    """Exact L2 ground truth of the ANN-recall queries over ``e``
+    (:func:`_vectors`). Returns ``(full, qfull, sq, top)``: ``full`` is
+    (vec_id, v, n2), ``qfull`` the query rows (q_id, qv, q_n2) with
+    ``vec_id % _QUERY_MOD = 0``, ``sq`` the squared distance between a
+    ``full`` and a ``qfull`` row, and ``top`` the exact top-``_TOPK``
+    (q_id, vec_id, rk) per query, ranked by ``round(sq, 4)`` then vec_id."""
+    full = e.select("vec_id", "v", _dot(F.col("v"), F.col("v")).alias("n2"))
+    qfull = full.filter(F.col("vec_id") % _QUERY_MOD == 0).select(
+        F.col("vec_id").alias("q_id"),
+        F.col("v").alias("qv"),
+        F.col("n2").alias("q_n2"),
+    )
+    sq = F.col("q_n2") + F.col("n2") - 2 * _dot(F.col("qv"), F.col("v"))
+    w_ex = Window.partitionBy("q_id").orderBy(
+        F.round(sq, 4).asc(), F.col("vec_id").asc()
+    )
+    top = (
+        full.crossJoin(F.broadcast(qfull))
+        .filter(F.col("vec_id") != F.col("q_id"))
+        .withColumn("rk", F.row_number().over(w_ex))
+        .filter(F.col("rk") <= _TOPK)
+        .select("q_id", "vec_id", "rk")
+    )
+    return full, qfull, sq, top
+
+
 def ann_pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product quantization end to end — the memory-bound ANN path that
     IVF/LSH don't cover: each vector is stored as ``_PQ_M`` one-byte codes
@@ -1624,23 +1645,7 @@ def ann_pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # exact L2 ground truth over the full vectors
-    full = e.select("vec_id", "v", _dot(F.col("v"), F.col("v")).alias("n2"))
-    qfull = full.filter(F.col("vec_id") % _QUERY_MOD == 0).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("v").alias("qv"),
-        F.col("n2").alias("q_n2"),
-    )
-    sq_full = F.col("q_n2") + F.col("n2") - 2 * _dot(F.col("qv"), F.col("v"))
-    w_ex = Window.partitionBy("q_id").orderBy(
-        F.round(sq_full, 4).asc(), F.col("vec_id").asc()
-    )
-    ex_top = (
-        full.crossJoin(F.broadcast(qfull))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .withColumn("rk", F.row_number().over(w_ex))
-        .filter(F.col("rk") <= _TOPK)
-        .select("q_id", "vec_id", "rk")
-    )
+    _, _, _, ex_top = _exact_l2_truth(e)
 
     hits = pq_top.select("q_id", "vec_id").join(
         ex_top.select("q_id", "vec_id"), ["q_id", "vec_id"]
@@ -1798,24 +1803,7 @@ def ann_pq_refine_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    full = e.select("vec_id", "v", _dot(F.col("v"), F.col("v")).alias("n2"))
-    qfull = full.filter(F.col("vec_id") % _QUERY_MOD == 0).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("v").alias("qv"),
-        F.col("n2").alias("q_n2"),
-    )
-    # exact ground truth (same plan as ann_pq_adc_recall)
-    sq_full = F.col("q_n2") + F.col("n2") - 2 * _dot(F.col("qv"), F.col("v"))
-    w_ex = Window.partitionBy("q_id").orderBy(
-        F.round(sq_full, 4).asc(), F.col("vec_id").asc()
-    )
-    ex_top = (
-        full.crossJoin(F.broadcast(qfull))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .withColumn("rk", F.row_number().over(w_ex))
-        .filter(F.col("rk") <= _TOPK)
-        .select("q_id", "vec_id", "rk")
-    )
+    full, qfull, sq_full, ex_top = _exact_l2_truth(e)
 
     # stage 2: exact re-rank of the {m} nominated candidates only
     refined = (
@@ -1949,7 +1937,7 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     table. Raw vectors appear in exactly two bounded places: codebook
     training and the per-query LUT build."""
     e = _vectors(spark, sf_dir)
-    full = e.select("vec_id", "v", _dot(F.col("v"), F.col("v")).alias("n2"))
+    full, qfull, _, ex_top = _exact_l2_truth(e)
     coarse = full.filter(F.col("vec_id") < _N_CENTROIDS).select(
         F.col("vec_id").alias("ccid"),
         F.col("v").alias("ccv"),
@@ -1965,11 +1953,6 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("vec_id")
         .agg(F.min(F.struct(cell_sq.alias("k"), F.col("ccid"))).alias("mn"))
         .select("vec_id", F.col("mn.ccid").alias("cell"))
-    )
-    qfull = full.filter(F.col("vec_id") % _QUERY_MOD == 0).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("v").alias("qv"),
-        F.col("n2").alias("q_n2"),
     )
     probe_sq = F.round(
         F.col("q_n2") + F.col("cc_n2") - 2 * _dot(F.col("qv"), F.col("ccv")), 4
@@ -1999,18 +1982,6 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     top = adc.withColumn("rk", F.row_number().over(w_top)).filter(
         F.col("rk") <= _TOPK
-    )
-    # exact ground truth (full vectors)
-    sq_full = F.col("q_n2") + F.col("n2") - 2 * _dot(F.col("qv"), F.col("v"))
-    w_ex = Window.partitionBy("q_id").orderBy(
-        F.round(sq_full, 4).asc(), F.col("vec_id").asc()
-    )
-    ex_top = (
-        full.crossJoin(F.broadcast(qfull))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .withColumn("rk", F.row_number().over(w_ex))
-        .filter(F.col("rk") <= _TOPK)
-        .select("q_id", "vec_id", "rk")
     )
     n_total = full.agg(F.count(F.lit(1)).alias("n_corpus"))
     ncand = cands.groupBy("q_id").agg(F.count(F.lit(1)).alias("n_candidates"))
@@ -2120,14 +2091,16 @@ _IVFPQ_SQL = _ivfpq_oracle()
 
 def _residual_frames(spark: SparkSession, sf_dir: str):
     """Shared residual-IVF core for :func:`ann_residual_pq_recall` and the
-    quantization-error pytest: returns ``(full, coarse, cells, resv)`` where
-    ``coarse`` is the LLOYD-TRAINED coarse codebook (assign to the first
+    quantization-error pytest: returns ``(truth, coarse, cells, resv)``
+    where ``truth`` is :func:`_exact_l2_truth` of the corpus, ``coarse``
+    is the LLOYD-TRAINED coarse codebook (assign to the first
     ``_N_CENTROIDS`` seed vectors → re-center as per-dim means rounded 6 —
     the same deterministic recipe :func:`_pq_train` uses per subspace),
     ``cells`` the final assignment against it, and ``resv`` each vector's
     residual ``rv = v − centroid(cell)``."""
     e = _vectors(spark, sf_dir)
-    full = e.select("vec_id", "v", _dot(F.col("v"), F.col("v")).alias("n2"))
+    truth = _exact_l2_truth(e)
+    full, *_ = truth
     seeds = full.filter(F.col("vec_id") < _N_CENTROIDS).select(
         F.col("vec_id").alias("ccid"),
         F.col("v").alias("ccv"),
@@ -2179,7 +2152,7 @@ def _residual_frames(spark: SparkSession, sf_dir: str):
             F.zip_with("v", "ccv", lambda a, b: a - b).alias("rv"),
         )
     )
-    return full, coarse, cells, resv
+    return truth, coarse, cells, resv
 
 
 def ann_residual_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2208,18 +2181,15 @@ def ann_residual_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     code table against broadcast LUTs (nprobe×8×8 rows per query). The
     residual LUT is keyed by (q_id, cell): at serve time this is the small
     per-probe table FAISS precomputes before scanning each inverted list."""
-    full, coarse, cells, resv = _residual_frames(spark, sf_dir)
+    (_, qfull, _, ex_top), coarse, cells, resv = _residual_frames(
+        spark, sf_dir
+    )
     rsub = _pq_subvectors(resv, vcol="rv")
     rcent = _pq_train(rsub.select("vec_id", "m", "sv", "s_n2"))
     rcodes = materialize(
         _pq_assign(rsub.select("vec_id", "m", "sv", "s_n2"), rcent)
     )
     # query probes (nprobe nearest coarse cells)
-    qfull = full.filter(F.col("vec_id") % _QUERY_MOD == 0).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("v").alias("qv"),
-        F.col("n2").alias("q_n2"),
-    )
     probe_sq = F.round(
         F.col("q_n2") + F.col("cc_n2") - 2 * _dot(F.col("qv"), F.col("ccv")), 4
     )
@@ -2272,18 +2242,6 @@ def ann_residual_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("code") == F.col("cid"))
         .groupBy("q_id", "vec_id")
         .agg(F.sum("pd").alias("adc"))
-    )
-    # exact ground truth over full vectors
-    sq_full = F.col("q_n2") + F.col("n2") - 2 * _dot(F.col("qv"), F.col("v"))
-    w_ex = Window.partitionBy("q_id").orderBy(
-        F.round(sq_full, 4).asc(), F.col("vec_id").asc()
-    )
-    ex_top = (
-        full.crossJoin(F.broadcast(qfull))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .withColumn("rk", F.row_number().over(w_ex))
-        .filter(F.col("rk") <= _TOPK)
-        .select("q_id", "vec_id", "rk")
     )
 
     def topk(adc: DataFrame) -> DataFrame:
@@ -2548,12 +2506,7 @@ def ann_sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole calibrate→encode→decode→rank pipeline is value-checked."""
     e = _vectors(spark, sf_dir)
     recon = _sq8_recon(e)
-    full = e.select("vec_id", "v", _dot(F.col("v"), F.col("v")).alias("n2"))
-    qfull = full.filter(F.col("vec_id") % _QUERY_MOD == 0).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("v").alias("qv"),
-        F.col("n2").alias("q_n2"),
-    )
+    _, qfull, _, ex_top = _exact_l2_truth(e)
     sq_dist = F.col("q_n2") + F.col("rn2") - 2 * _dot(F.col("qv"), F.col("rv"))
     w_sq = Window.partitionBy("q_id").orderBy(
         F.round(sq_dist, 4).asc(), F.col("vec_id").asc()
@@ -2562,17 +2515,6 @@ def ann_sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         recon.crossJoin(F.broadcast(qfull))
         .filter(F.col("vec_id") != F.col("q_id"))
         .withColumn("rk", F.row_number().over(w_sq))
-        .filter(F.col("rk") <= _TOPK)
-        .select("q_id", "vec_id", "rk")
-    )
-    ex_dist = F.col("q_n2") + F.col("n2") - 2 * _dot(F.col("qv"), F.col("v"))
-    w_ex = Window.partitionBy("q_id").orderBy(
-        F.round(ex_dist, 4).asc(), F.col("vec_id").asc()
-    )
-    ex_top = (
-        full.crossJoin(F.broadcast(qfull))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .withColumn("rk", F.row_number().over(w_ex))
         .filter(F.col("rk") <= _TOPK)
         .select("q_id", "vec_id", "rk")
     )
@@ -2688,12 +2630,7 @@ def ann_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-rank is a bounded per-query window. At 100 TB either component can
     be swapped for its IVF-pruned variant without changing the fusion."""
     e = _vectors(spark, sf_dir)
-    full = e.select("vec_id", "v", _dot(F.col("v"), F.col("v")).alias("n2"))
-    qfull = full.filter(F.col("vec_id") % _QUERY_MOD == 0).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("v").alias("qv"),
-        F.col("n2").alias("q_n2"),
-    )
+    full, qfull, _, ex_top = _exact_l2_truth(e)
     # list A: truncated-dimension (Matryoshka) squared L2
     vt = F.slice(F.col("v"), 1, _TRUNC_DIMS)
     qt = F.slice(F.col("qv"), 1, _TRUNC_DIMS)
@@ -2746,18 +2683,6 @@ def ann_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     top_f = fused.withColumn("rk", F.row_number().over(w_f)).filter(
         F.col("rk") <= _TOPK
-    )
-    # exact ground truth
-    ex_dist = F.col("q_n2") + F.col("n2") - 2 * _dot(F.col("qv"), F.col("v"))
-    w_ex = Window.partitionBy("q_id").orderBy(
-        F.round(ex_dist, 4).asc(), F.col("vec_id").asc()
-    )
-    ex_top = (
-        full.crossJoin(F.broadcast(qfull))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .withColumn("rk", F.row_number().over(w_ex))
-        .filter(F.col("rk") <= _TOPK)
-        .select("q_id", "vec_id", "rk")
     )
 
     def recall_of(df: DataFrame, rk_col: str, name: str) -> DataFrame:
@@ -3037,17 +2962,6 @@ _PCA_ITERS = 12
 #: coordinate to 10 decimals each iteration, so sub-5e-11 float-association
 #: differences can never accumulate across steps.
 _PCA_SYNC_ROUND = 10
-
-
-def _round_half_up(x: float, nd: int) -> float:
-    """Round half AWAY FROM ZERO — matching Spark's ``F.round`` and DuckDB's
-    ``ROUND`` (Python's builtin ``round`` is banker's rounding and would
-    diverge exactly on .5 boundaries)."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    return float(
-        Decimal(repr(x)).quantize(Decimal(f"1e-{nd}"), rounding=ROUND_HALF_UP)
-    )
 
 
 def _pca_cov_collect(spark: SparkSession, sf_dir: str):

@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from datafusion_impl_spark.operators import (
+    _round_half_up,
     bounded_iteration,
     duck_md5_long,
     materialize,
@@ -3515,16 +3516,6 @@ _QCLF_LR = 4.0
 #: updated weights to 10 decimals each step, so float-association
 #: differences can never accumulate across steps.
 _QCLF_SYNC_ROUND = 10
-
-
-def _round_half_up(x: float, nd: int) -> float:
-    """Round half AWAY FROM ZERO — matching Spark ``F.round`` and DuckDB
-    ``ROUND`` (Python's builtin ``round`` is banker's and diverges on .5)."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    return float(
-        Decimal(repr(x)).quantize(Decimal(f"1e-{nd}"), rounding=ROUND_HALF_UP)
-    )
 
 
 def _logreg_z(w: list[float]) -> Column:

@@ -18,7 +18,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from datafusion_impl_spark.operators import duck_md5_long, materialize, md5_long
+from datafusion_impl_spark.operators import (
+    _dot,
+    duck_md5_long,
+    materialize,
+    md5_long,
+)
 from datafusion_impl_spark.operators.dedup import (
     _CORPUS_SQL,
     _DUCK_SHINGLES,
@@ -333,12 +338,6 @@ ORDER BY dim
 # --------------------------------------------------------------------------
 # 5. Hard-negative mining
 # --------------------------------------------------------------------------
-
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-
 
 def _l2(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))

@@ -17,9 +17,9 @@ def spark():
 
 
 @pytest.fixture(scope="session")
-def registry_audit(spark) -> dict[str, list[str]]:
-    """Plan-audit problems over every registered query, each query built once
-    per session and shared by the registry-wide audit tests."""
+def registry_audit(spark) -> dict[str, list]:
+    """Plan-audit problems and input files over every registered query, each
+    query built once per session and shared by the registry-wide tests."""
     from tests.test_plan_audit import audit_registry
 
     return audit_registry(spark)

@@ -3522,12 +3522,12 @@ def test_mel_filterbank_weights_and_census(spark):
     per-rate means' contribution."""
     import math
 
+    from datafusion_impl_spark.operators import _round_half_up
     from datafusion_impl_spark.operators.multimodal import (
         _MEL_BINS,
         _MEL_FILTERS,
         _MEL_ROUND,
         _mel_weights,
-        _round_half_up_f,
         _wav_encode,
         audio_mel_filterbank_stats,
         wav_spectrum_bins,
@@ -3553,7 +3553,7 @@ def test_mel_filterbank_weights_and_census(spark):
     )
     spec = wav_spectrum_bins(clip, _MEL_BINS).collect()[0]
     mels = [
-        _round_half_up_f(
+        _round_half_up(
             math.log10(
                 sum(w[m][k] * spec[f"p{k + 1}"] for k in range(_MEL_BINS)) + 1.0
             ),
@@ -3822,6 +3822,7 @@ def test_audio_resample_identity_and_lengths(spark):
     through EXACTLY (identity resample — every position lands on an input
     sample), output lengths follow (n-1)*R//r + 1 per planted clip, and
     upsampled clips keep their amplitude bounded by the source range."""
+    from datafusion_impl_spark.operators import _round_half_up
     from datafusion_impl_spark.operators.multimodal import (
         _RESAMPLE_RATE,
         _WAV_N_BASE,
@@ -3830,7 +3831,6 @@ def test_audio_resample_identity_and_lengths(spark):
         _WAV_RATE_MOD,
         _WAV_SAMPLE_MOD,
         _WAV_SAMPLE_RES,
-        _round_half_up_f,
         _wav_encode,
         audio_resample_linear,
         decode_wav,
@@ -3861,7 +3861,7 @@ def test_audio_resample_identity_and_lengths(spark):
                == _RESAMPLE_RATE)
     rate, s = decode_wav(_wav_encode(d16))
     assert rate == _RESAMPLE_RATE
-    mean_amp = _round_half_up_f(sum(float(x) for x in s) / len(s), 4)
+    mean_amp = _round_half_up(sum(float(x) for x in s) / len(s), 4)
     from datafusion_impl_spark.operators.multimodal import audio_resample_linear as _arl  # noqa: F401
     # replay the kernel formula at identity rate: pos = j exactly
     m = (len(s) - 1) * _RESAMPLE_RATE // rate + 1

@@ -179,7 +179,7 @@ _ALLOWED_PYTHON = {
     "python_datasource_scan",     # Python Data Source API demo source
     "python_datasource_write_roundtrip",  # custom Python sink under test
     "cogrouped_order_gap_stats",  # cogroup().applyInPandas IS the API under test
-    "multimodal_bmp_decode_stats",  # mapInPandas build + mapInArrow decode IS the operator
+    "multimodal_bmp_decode_stats",  # mapInArrow build + decode (_map_rows) IS the operator
     "multimodal_wav_decode_stats",  # same contract, audio (r7)
     "multimodal_y4m_decode_stats",  # same contract, video (r7)
     "multimodal_png_decode_stats",  # same contract, compressed image (r10)
@@ -369,14 +369,15 @@ def test_audit_catches_known_bad_plans(spark):
     assert not _audit_one("ok_grouped", ok_grouped)
 
 
-def audit_registry(spark) -> dict[str, list[str]]:
+def audit_registry(spark) -> dict[str, list]:
     """Builds every registered query once and audits that one build.
 
-    Returns the plan-rule problems under ``"plan"`` and the Python-node
-    problems under ``"python"``; only these strings outlive the loop, never
-    the built frames.
+    Returns the plan-rule problems under ``"plan"``, the Python-node
+    problems under ``"python"`` and each ``(query, file)`` pair of the
+    built plan's ``inputFiles()`` under ``"inputs"``; only these outlive
+    the loop, never the built frames.
     """
-    found: dict[str, list[str]] = {"plan": [], "python": []}
+    found: dict[str, list] = {"plan": [], "python": [], "inputs": []}
     for name, fn in entry.queries().items():
         try:
             df = fn(spark, SF_DIR)
@@ -385,6 +386,7 @@ def audit_registry(spark) -> dict[str, list[str]]:
             continue
         found["plan"].extend(_audit_one(name, df))
         found["python"].extend(_audit_python(name, _physical(df)))
+        found["inputs"].extend((name, f) for f in df.inputFiles())
     return found
 
 
