@@ -319,7 +319,7 @@ def main() -> None:
     # drift past the target now shows up as tws_within_target=false in
     # every bench artifact instead of needing a by-hand recomputation.
     # r14: the four full-corpus TWS queries share ONE consolidated stream
-    # run per session (streaming._tws_composite_view) so the subtotal pays
+    # run per session (streaming._tws_composite) so the subtotal pays
     # the ~3 s machinery floor twice (composite + warm-start initial-state
     # stream), not five times — the consolidation the r13 sweep proved was
     # the only remaining lever.

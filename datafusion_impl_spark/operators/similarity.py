@@ -1609,6 +1609,34 @@ def _exact_l2_truth(e: DataFrame):
     return full, qfull, sq, top
 
 
+def _seed_centroids(full: DataFrame) -> DataFrame:
+    """The seed coarse codebook of the IVF queries: the first
+    ``_N_CENTROIDS`` vectors of ``full`` (:func:`_exact_l2_truth`) as
+    (ccid, ccv, cc_n2)."""
+    return full.filter(F.col("vec_id") < _N_CENTROIDS).select(
+        F.col("vec_id").alias("ccid"),
+        F.col("v").alias("ccv"),
+        F.col("n2").alias("cc_n2"),
+    )
+
+
+def _assign_cells(full: DataFrame, cent: DataFrame) -> DataFrame:
+    """(vec_id, cell): each ``full`` row's nearest centroid of ``cent``
+    (ccid, ccv, cc_n2) by ``round(n2 + cc_n2 − 2·v·ccv, 4)``, ties to the
+    lower ccid — the winner of the rank-1 window of the DuckDB oracles.
+    A struct-min argmin: it partial-aggregates map-side, so the exchange
+    carries one row per vector, not one per (vector, cell)."""
+    sq = F.round(
+        F.col("n2") + F.col("cc_n2") - 2 * _dot(F.col("v"), F.col("ccv")), 4
+    )
+    return (
+        full.crossJoin(F.broadcast(cent))
+        .groupBy("vec_id")
+        .agg(F.min(F.struct(sq.alias("k"), F.col("ccid"))).alias("mn"))
+        .select("vec_id", F.col("mn.ccid").alias("cell"))
+    )
+
+
 def ann_pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product quantization end to end — the memory-bound ANN path that
     IVF/LSH don't cover: each vector is stored as ``_PQ_M`` one-byte codes
@@ -1938,22 +1966,8 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     training and the per-query LUT build."""
     e = _vectors(spark, sf_dir)
     full, qfull, _, ex_top = _exact_l2_truth(e)
-    coarse = full.filter(F.col("vec_id") < _N_CENTROIDS).select(
-        F.col("vec_id").alias("ccid"),
-        F.col("v").alias("ccv"),
-        F.col("n2").alias("cc_n2"),
-    )
-    cell_sq = F.round(
-        F.col("n2") + F.col("cc_n2") - 2 * _dot(F.col("v"), F.col("ccv")), 4
-    )
-    # struct-min argmin (same rounded-key + ccid-tiebreak winner as the
-    # rank-1 window it replaces; aggregates map-side instead of sorting)
-    cells = materialize(
-        full.crossJoin(F.broadcast(coarse))
-        .groupBy("vec_id")
-        .agg(F.min(F.struct(cell_sq.alias("k"), F.col("ccid"))).alias("mn"))
-        .select("vec_id", F.col("mn.ccid").alias("cell"))
-    )
+    coarse = _seed_centroids(full)
+    cells = materialize(_assign_cells(full, coarse))
     probe_sq = F.round(
         F.col("q_n2") + F.col("cc_n2") - 2 * _dot(F.col("qv"), F.col("ccv")), 4
     )
@@ -2101,28 +2115,9 @@ def _residual_frames(spark: SparkSession, sf_dir: str):
     e = _vectors(spark, sf_dir)
     truth = _exact_l2_truth(e)
     full, *_ = truth
-    seeds = full.filter(F.col("vec_id") < _N_CENTROIDS).select(
-        F.col("vec_id").alias("ccid"),
-        F.col("v").alias("ccv"),
-        F.col("n2").alias("cc_n2"),
-    )
-
-    def cell_assign(cent: DataFrame) -> DataFrame:
-        # struct-min argmin (same rounded-key + ccid-tiebreak winner as the
-        # rank-1 window it replaces): partial-aggregates map-side, so the
-        # exchange carries one row per vector, not one per (vector, cell)
-        sq = F.round(
-            F.col("n2") + F.col("cc_n2") - 2 * _dot(F.col("v"), F.col("ccv")), 4
-        )
-        return (
-            full.crossJoin(F.broadcast(cent))
-            .groupBy("vec_id")
-            .agg(F.min(F.struct(sq.alias("k"), F.col("ccid"))).alias("mn"))
-            .select("vec_id", F.col("mn.ccid").alias("cell"))
-        )
 
     # one Lloyd round on the COARSE quantizer: per (cell, dim) mean, rounded 6
-    cells0 = cell_assign(seeds)
+    cells0 = _assign_cells(full, _seed_centroids(full))
     tdims = (
         cells0.join(full.select("vec_id", "v"), "vec_id")
         .select(F.col("cell").alias("ccid"), F.posexplode("v").alias("dim", "x"))
@@ -2139,7 +2134,7 @@ def _residual_frames(spark: SparkSession, sf_dir: str):
         )
         .withColumn("cc_n2", _dot(F.col("ccv"), F.col("ccv")))
     )
-    cells = materialize(cell_assign(coarse))
+    cells = materialize(_assign_cells(full, coarse))
     resv = (
         cells.join(full.select("vec_id", "v"), "vec_id")
         .join(

@@ -146,7 +146,11 @@ def scoped_conf(spark: SparkSession, confs: dict[str, str]):
     restores first. What the lock does not cover: a query that another
     thread plans without a pin, while a pin is held, sees the pinned values.
     The package only pins plan-shape confs (partition counts, AQE, the state
-    store provider), which change how that query runs, never its result."""
+    store provider), which change how that query runs, never its result.
+    An empty pin sets nothing and takes no turn."""
+    if not confs:
+        yield
+        return
     with _CONF_LOCK:
         saved = {key: spark.conf.get(key, None) for key in confs}
         try:

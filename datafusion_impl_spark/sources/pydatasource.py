@@ -281,9 +281,18 @@ def python_datasource_stream_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     function of the generator arithmetic — identical to a batch scan of the
     same index range — so the DuckDB oracle value-checks the entire
     streaming path: offsets → micro-batch planning → Python iterators →
-    append sink. sf-independent by design (the source IS the fixture)."""
+    append sink. sf-independent by design (the source IS the fixture).
+
+    A Python stream source does not honour ``availableNow`` (on Spark 4.1.2
+    such a run reads 6000 of the 20000 rows), so this query cannot go
+    through ``streaming._drain``; its sink gets the same unique name and
+    dropped view."""
+    import uuid
+
+    from datafusion_impl_spark.streaming import _take_sink
+
     spark.dataSource.register(SyntheticEventsDataSource)
-    sink = "py_stream_sink"
+    sink = f"sink_{uuid.uuid4().hex}"
     q = (
         spark.readStream.format("synthetic_events")
         .option("n_rows", _STREAM_ROWS)
@@ -301,7 +310,7 @@ def python_datasource_stream_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.stop()
         q.awaitTermination()
     return (
-        spark.table(sink)
+        _take_sink(spark, sink)
         .groupBy("etype")
         .agg(
             F.count(F.lit(1)).alias("n_events"),

@@ -22,6 +22,20 @@ def method_calls(source: str, methods: tuple[str, ...]) -> list[ast.Call]:
     ]
 
 
+def by_function(source: str, lines: list[int]) -> list[tuple[str, int]]:
+    """(enclosing top-level function or ``<module>``, line) of each of
+    ``lines`` in ``source``, in line order."""
+    spans = [
+        (node.lineno, node.end_lineno, node.name)
+        for node in ast.parse(source).body
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+    ]
+    return [
+        (next((name for lo, hi, name in spans if lo <= ln <= hi), "<module>"), ln)
+        for ln in sorted(lines)
+    ]
+
+
 def package_hits(scan: Callable[[str], list]) -> dict[str, list]:
     """``scan(source)`` of every package module that has hits, keyed by its
     path relative to the checkout."""

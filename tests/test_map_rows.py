@@ -6,7 +6,6 @@ style of ``test_materialize.py``)."""
 
 from __future__ import annotations
 
-import ast
 import pathlib
 
 import pyarrow as pa
@@ -14,7 +13,7 @@ from pyspark.sql import Row
 
 from datafusion_impl_spark.operators import multimodal
 from datafusion_impl_spark.operators.multimodal import _map_rows
-from tests.static_scan import method_calls
+from tests.static_scan import by_function, method_calls
 
 #: the top-level functions of ``multimodal.py`` that may call the batch APIs
 #: themselves: the helper, and the demos whose contract IS the API they call
@@ -30,18 +29,8 @@ _ALLOWED = {
 def batch_api_calls(source: str) -> list[tuple[str, int]]:
     """(enclosing top-level function or ``<module>``, line) of each
     ``<x>.mapInArrow(...)``/``<x>.mapInPandas(...)`` call in ``source``."""
-    spans = [
-        (node.lineno, node.end_lineno, node.name)
-        for node in ast.parse(source).body
-        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
-    ]
-    lines = sorted(
-        c.lineno for c in method_calls(source, ("mapInArrow", "mapInPandas"))
-    )
-    return [
-        (next((name for lo, hi, name in spans if lo <= ln <= hi), "<module>"), ln)
-        for ln in lines
-    ]
+    calls = method_calls(source, ("mapInArrow", "mapInPandas"))
+    return by_function(source, [c.lineno for c in calls])
 
 
 def _disallowed(source: str) -> list[tuple[str, int]]:

@@ -1115,7 +1115,7 @@ def test_tws_same_batch_input_beats_expirable_timer(spark, tmp_path):
     from datafusion_impl_spark.streaming import (
         _TWS_GAP_MS,
         _TWS_WM_DELAY_MS,
-        _tws_composite_view,
+        _tws_composite,
         _tws_running_final,
     )
 
@@ -1152,7 +1152,7 @@ def test_tws_same_batch_input_beats_expirable_timer(spark, tmp_path):
         f"{sf_dir}/events.parquet",
     )
 
-    out = spark.table(_tws_composite_view(spark, sf_dir))
+    out = _tws_composite(spark, sf_dir)
     fired = {
         r.user_id: (r.n_events, r.value_micros)
         for r in out.filter(F.col("fired") == 1).collect()
@@ -1160,10 +1160,9 @@ def test_tws_same_batch_input_beats_expirable_timer(spark, tmp_path):
     # control fires with its full batch-1 totals; the raced user must NOT
     # fire — its same-batch input deleted the expirable timer first
     assert fired == {3: (2, 16_500_000 + 32_250_000)}
-    view = _tws_composite_view(spark, sf_dir)
     fin = {
         r.user_id: (r.fin.n_events, r.fin.value_micros)
-        for r in _tws_running_final(spark, view).collect()
+        for r in _tws_running_final(out).collect()
     }
     # the raced user's final running row is CUMULATIVE across both
     # batches — the input phase saw live (not timer-cleared) state
