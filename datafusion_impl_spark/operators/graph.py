@@ -31,12 +31,10 @@ only their per-round state.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datafusion_impl_spark.operators import (
-    _ROWS_PER_ITER_PARTITION,
-    _iteration_partitions,
     bounded_iteration as _bounded_iteration,
     materialize,
 )

@@ -754,15 +754,12 @@ def tablesample_repeatable_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (:func:`sample_documents_stratified`). Rows-only by design: DuckDB's
     sampler is a different RNG; the determinism-under-fixed-partitioning
     property is pinned by a pytest instead."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "docs_tablesample"
-    )
     return spark.sql("""
 SELECT lang, COUNT(*) AS n_sampled
-FROM docs_tablesample TABLESAMPLE (10 PERCENT) REPEATABLE (42)
+FROM {documents} TABLESAMPLE (10 PERCENT) REPEATABLE (42)
 GROUP BY lang
 ORDER BY lang
-""")
+""", documents=load_table(spark, sf_dir, "documents"))
 
 
 #: Poisson-bootstrap replicate count and the Poisson(1) CDF thresholds used

@@ -245,7 +245,6 @@ def udtf_polymorphic_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield tuple(toks[i] if i < len(toks) else None for i in range(n))
 
     spark.udtf.register("first_tokens", udtf(FirstTokens))
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("docs_poly")
     return spark.sql(f"""
 SELECT d.lang,
        COUNT(*) AS n_docs,
@@ -254,10 +253,10 @@ SELECT d.lang,
            f"CAST(SUM(length(t.tok_{i})) AS BIGINT) AS len_tok_{i}"
            for i in range(_POLY_N_TOKENS)
        )}
-FROM docs_poly d, LATERAL first_tokens(d.text, {_POLY_N_TOKENS}) t
+FROM {{documents}} d, LATERAL first_tokens(d.text, {_POLY_N_TOKENS}) t
 GROUP BY d.lang
 ORDER BY d.lang
-""")
+""", documents=load_table(spark, sf_dir, "documents"))
 
 
 _POLY_UDTF_SQL = rf"""

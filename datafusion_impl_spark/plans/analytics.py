@@ -280,25 +280,18 @@ GROUP BY CUBE (l_returnflag, l_linestatus)
 
 
 def grouping_sets_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events_gs")
-    return spark.sql(
-        """
-        SELECT event_type, CAST(ts AS DATE) AS day, COUNT(*) AS n,
-               CAST(GROUPING(event_type) AS INT) AS g_type,
-               CAST(GROUPING(CAST(ts AS DATE)) AS INT) AS g_day
-        FROM events_gs
-        GROUP BY GROUPING SETS ((event_type), (CAST(ts AS DATE)), ())
-        """
-    )
+    return spark.sql(_GROUPING_SETS_BODY, events=load_table(spark, sf_dir, "events"))
 
 
-_GROUPING_SETS_SQL = """
+_GROUPING_SETS_BODY = """
 SELECT event_type, CAST(ts AS DATE) AS day, COUNT(*) AS n,
        CAST(GROUPING(event_type) AS INT) AS g_type,
        CAST(GROUPING(CAST(ts AS DATE)) AS INT) AS g_day
-FROM events
+FROM {events}
 GROUP BY GROUPING SETS ((event_type), (CAST(ts AS DATE)), ())
 """
+
+_GROUPING_SETS_SQL = _GROUPING_SETS_BODY.format(events="events")
 
 
 # --------------------------------------------------------------------------
@@ -1791,33 +1784,22 @@ def events_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily aggregate — at 100 TB a single scan feeds every granularity
     instead of one scan per rollup level, and partial aggregation runs
     map-side before the one shuffle."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events_tr")
-    return spark.sql(
-        """
-        SELECT CAST(ts AS DATE) AS day, date_trunc('hour', ts) AS hour,
-               COUNT(*) AS n_events,
-               COUNT(DISTINCT user_id) AS n_users,
-               ROUND(SUM(value), 4) AS sum_value,
-               CAST(GROUPING(date_trunc('hour', ts)) AS INT) AS g_hour
-        FROM events_tr
-        GROUP BY GROUPING SETS (
-            (CAST(ts AS DATE)),
-            (CAST(ts AS DATE), date_trunc('hour', ts)))
-        """
-    )
+    return spark.sql(_TIME_ROLLUP_BODY, events=load_table(spark, sf_dir, "events"))
 
 
-_TIME_ROLLUP_SQL = """
+_TIME_ROLLUP_BODY = """
 SELECT CAST(ts AS DATE) AS day, date_trunc('hour', ts) AS hour,
        COUNT(*) AS n_events,
        COUNT(DISTINCT user_id) AS n_users,
        ROUND(SUM(value), 4) AS sum_value,
        CAST(GROUPING(date_trunc('hour', ts)) AS INT) AS g_hour
-FROM events
+FROM {events}
 GROUP BY GROUPING SETS (
     (CAST(ts AS DATE)),
     (CAST(ts AS DATE), date_trunc('hour', ts)))
 """
+
+_TIME_ROLLUP_SQL = _TIME_ROLLUP_BODY.format(events="events")
 
 
 #: (column, kind) spec shared by the Spark profiler and its oracle builder.
@@ -2729,15 +2711,14 @@ def rolling_distinct_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.collect_set("o_custkey").alias("custs"),
         F.count(F.lit(1)).alias("n_orders"),
     )
-    daily.createOrReplaceTempView("daily_custs_roll")
     return spark.sql("""
 SELECT day, n_orders,
        size(custs) AS n_cust_1d,
        size(array_distinct(flatten(collect_list(custs) OVER w))) AS n_cust_7d
-FROM daily_custs_roll
+FROM {daily}
 WINDOW w AS (ORDER BY day RANGE BETWEEN INTERVAL 6 DAYS PRECEDING AND CURRENT ROW)
 ORDER BY day
-""")
+""", daily=daily)
 
 
 _ROLLING_DISTINCT_SQL = """

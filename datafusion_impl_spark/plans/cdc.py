@@ -235,15 +235,14 @@ def range_frame_weekly_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = orders.groupBy(
         F.col("o_orderdate").cast("date").alias("day")
     ).agg(F.sum("o_totalprice").alias("rev"))
-    daily.createOrReplaceTempView("daily_rev_cdc")
     return spark.sql("""
 SELECT day, ROUND(rev, 2) AS rev,
        ROUND(SUM(rev) OVER w, 2) AS rev_7d,
        COUNT(*) OVER w AS n_days_7d
-FROM daily_rev_cdc
+FROM {daily}
 WINDOW w AS (ORDER BY day RANGE BETWEEN INTERVAL 6 DAYS PRECEDING AND CURRENT ROW)
 ORDER BY day
-""")
+""", daily=daily)
 
 
 _RANGE_SQL = """

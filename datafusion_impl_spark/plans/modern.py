@@ -6,9 +6,18 @@ SQL the same way, ``tests/regexp-tests.rs:83-125``).
 Each query here is deliberately authored as SQL (``spark.sql``) rather than
 DataFrame calls: the point is the SQL surface itself. DuckDB shares all
 three constructs, so the oracles replay the exact semantics.
+
+Frames go into the SQL text as ``spark.sql`` parameters (``{orders}`` in the
+text, ``orders=df`` in the call), never as named views: PySpark binds each
+under a unique name for the one call and drops it after analysis, so two
+threads on one session never read each other's tables. Where the text is
+the oracle's too, one body serves both (the oracle formats the placeholders
+with table names).
 """
 
 from __future__ import annotations
+
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -75,7 +84,6 @@ def recursive_cte_revenue_ema(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sort_array(F.collect_list(F.struct("i", "month", "revenue"))).alias("ms"))
         .coalesce(1)
     )
-    blocks.createOrReplaceTempView("blocks_rcte")
 
     def fold(init: str) -> str:
         """SQL fold of one block's months, carrying the running EMA in
@@ -96,15 +104,15 @@ def recursive_cte_revenue_ema(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(f"""
 WITH RECURSIVE ema_blocks AS (
   SELECT b, {fold('CAST(NULL AS DOUBLE)')} AS out
-  FROM blocks_rcte WHERE b = 1
+  FROM {{blocks}} WHERE b = 1
   UNION ALL
   SELECT m.b, {fold('element_at(e.out, -1).ema')} AS out
-  FROM ema_blocks e JOIN blocks_rcte m ON m.b = e.b + 1
+  FROM ema_blocks e JOIN {{blocks}} m ON m.b = e.b + 1
 )
 SELECT x.month AS month, ROUND(x.revenue, 2) AS revenue, ROUND(x.ema, 2) AS ema
 FROM ema_blocks LATERAL VIEW explode(out) t AS x
 ORDER BY month
-""")
+""", blocks=blocks)
 
 
 _RCTE_SQL = f"""
@@ -193,34 +201,27 @@ def lateral_top_orders_per_segment(spark: SparkSession, sf_dir: str) -> DataFram
     windowed top-k Catalyst produces for the DataFrame formulation, but the
     SQL shape (per-row subquery with ORDER BY/LIMIT) is what BI tools and
     migration workloads actually emit."""
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer_lat")
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_lat")
-    return spark.sql("""
-SELECT seg.c_mktsegment, t.o_orderkey, t.o_totalprice
-FROM (SELECT DISTINCT c_mktsegment FROM customer_lat) seg,
-LATERAL (
-  SELECT o.o_orderkey, o.o_totalprice
-  FROM orders_lat o JOIN customer_lat c ON o.o_custkey = c.c_custkey
-  WHERE c.c_mktsegment = seg.c_mktsegment
-  ORDER BY o.o_totalprice DESC, o.o_orderkey
-  LIMIT 2
-) t
-ORDER BY seg.c_mktsegment, t.o_totalprice DESC, t.o_orderkey
-""")
+    return spark.sql(
+        _LATERAL_BODY,
+        customer=load_table(spark, sf_dir, "customer"),
+        orders=load_table(spark, sf_dir, "orders"),
+    )
 
 
-_LATERAL_SQL = """
+_LATERAL_BODY = """
 SELECT seg.c_mktsegment, t.o_orderkey, t.o_totalprice
-FROM (SELECT DISTINCT c_mktsegment FROM customer) seg,
+FROM (SELECT DISTINCT c_mktsegment FROM {customer}) seg,
 LATERAL (
   SELECT o.o_orderkey, o.o_totalprice
-  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
+  FROM {orders} o JOIN {customer} c ON o.o_custkey = c.c_custkey
   WHERE c.c_mktsegment = seg.c_mktsegment
   ORDER BY o.o_totalprice DESC, o.o_orderkey
   LIMIT 2
 ) t
 ORDER BY seg.c_mktsegment, t.o_totalprice DESC, t.o_orderkey
 """
+
+_LATERAL_SQL = _LATERAL_BODY.format(customer="customer", orders="orders")
 
 
 def events_props_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -229,12 +230,11 @@ def events_props_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
     type. Versus the ``from_json``-struct path (structured.py), VARIANT
     needs no declared schema — the shredding happens at extraction, which is
     the right model for evolving event payloads at scale."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events_var")
     return spark.sql("""
 WITH parsed AS (
   SELECT event_type,
          variant_get(parse_json(props), '$.k', 'int') AS k
-  FROM events_var
+  FROM {events}
 )
 SELECT event_type, COUNT(*) AS n_events,
        CAST(SUM(k) AS BIGINT) AS sum_k,
@@ -242,7 +242,7 @@ SELECT event_type, COUNT(*) AS n_events,
 FROM parsed
 GROUP BY event_type
 ORDER BY event_type
-""")
+""", events=load_table(spark, sf_dir, "events"))
 
 
 _VARIANT_SQL = """
@@ -267,8 +267,7 @@ def group_by_all_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     compute conditional aggregates without CASE-NULL tricks), and
     ``ORDER BY ALL``. Spark 4 and DuckDB implement all three with matching
     semantics, so the oracle replays the query verbatim."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_gba")
-    return spark.sql(_GBA_BODY.format(table="orders_gba"))
+    return spark.sql(_GBA_BODY, table=load_table(spark, sf_dir, "orders"))
 
 
 _GBA_BODY = """
@@ -294,27 +293,35 @@ def sql_variables_threshold_report(spark: SparkSession, sf_dir: str) -> DataFram
     EXECUTE IMMEDIATE statement counts per-priority orders above it, with
     the final projection bound through a named parameter. The oracle
     inlines the same scalar subquery — the point is that variable binding
-    changes nothing semantically."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_var")
-    spark.sql(
-        "DECLARE OR REPLACE VARIABLE price_threshold DOUBLE DEFAULT 0.0"
-    )
-    spark.sql(
-        "SET VAR price_threshold = (SELECT AVG(o_totalprice) FROM orders_var)"
-    )
-    big = spark.sql(
-        """EXECUTE IMMEDIATE
+    changes nothing semantically.
+
+    The variable lives on the shared session, so each call declares its
+    own name and drops it once ``big`` is analyzed (the analyzed frame
+    keeps the value)."""
+    orders = load_table(spark, sf_dir, "orders")
+    var = f"price_threshold_{uuid.uuid4().hex}"
+    spark.sql(f"DECLARE VARIABLE {var} DOUBLE DEFAULT 0.0")
+    try:
+        spark.sql(
+            f"SET VAR {var} = (SELECT AVG(o_totalprice) FROM {{orders}})",
+            orders=orders,
+        )
+        big = spark.sql(
+            f"""EXECUTE IMMEDIATE
            'SELECT o_orderpriority, COUNT(*) AS n_above,
                    ROUND(MIN(o_totalprice) - ?, 2) AS min_gap
-            FROM orders_var WHERE o_totalprice > price_threshold
+            FROM {{orders}} WHERE o_totalprice > {var}
             GROUP BY o_orderpriority'
-           USING price_threshold"""
-    )
-    big.createOrReplaceTempView("above_var")
+           USING {var}""",
+            orders=orders,
+        )
+    finally:
+        spark.sql(f"DROP TEMPORARY VARIABLE {var}")
     return spark.sql(
-        "SELECT o_orderpriority, n_above, min_gap FROM above_var "
+        "SELECT o_orderpriority, n_above, min_gap FROM {big} "
         "WHERE n_above > :min_n ORDER BY o_orderpriority",
         args={"min_n": 0},
+        big=big,
     )
 
 
@@ -338,13 +345,12 @@ def collated_segment_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     is planted (odd customers initcap'd), grouped under the collation, and
     normalized to lowercase only for presentation. The oracle replays the
     semantics with lower()."""
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer_coll")
     return spark.sql("""
 WITH planted AS (
   SELECT CASE WHEN c_custkey % 2 = 1 THEN initcap(c_mktsegment)
               ELSE c_mktsegment END AS seg,
          c_acctbal
-  FROM customer_coll
+  FROM {customer}
 )
 SELECT lower(seg COLLATE UTF8_LCASE) AS segment,
        COUNT(*) AS n_customers,
@@ -353,7 +359,7 @@ SELECT lower(seg COLLATE UTF8_LCASE) AS segment,
 FROM planted
 GROUP BY seg COLLATE UTF8_LCASE
 ORDER BY segment
-""")
+""", customer=load_table(spark, sf_dir, "customer"))
 
 
 _COLLATION_SQL = """
@@ -393,7 +399,6 @@ def sql_udf_revenue_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     domain (max ~104,950) — every lineitem row lands in exactly one bin.
     Revenue sums go through DECIMAL(18,4) casts so the aggregate is
     addition-order-independent and engine-portable."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_sqludf")
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION disc_price_sqludf(p DOUBLE, d DOUBLE) "
         "RETURNS DOUBLE RETURN p * (1 - d)"
@@ -410,12 +415,13 @@ SELECT b.bin_lo, b.bin_hi,
        COUNT(*) AS n_items,
        ROUND(CAST(SUM(CAST(disc_price_sqludf(l_extendedprice, l_discount)
                            AS DECIMAL(18,4))) AS DOUBLE), 2) AS revenue
-FROM lineitem_sqludf l
+FROM {lineitem} l
 JOIN price_bins_sqludf(0, 100000, 10000) b
   ON l.l_extendedprice >= b.bin_lo AND l.l_extendedprice < b.bin_hi
 GROUP BY b.bin_lo, b.bin_hi
 ORDER BY b.bin_lo
-"""
+""",
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -444,20 +450,20 @@ def pipe_syntax_segment_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves the dialect ships, while the oracle checks the desugaring against
     classic SQL semantics. Revenue goes through DECIMAL so the aggregate is
     order-independent."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_pipe")
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer_pipe")
     return spark.sql(
         """
-FROM orders_pipe
+FROM {orders}
 |> WHERE o_orderstatus = 'O'
-|> JOIN customer_pipe ON o_custkey = c_custkey
+|> JOIN {customer} ON o_custkey = c_custkey
 |> AGGREGATE COUNT(*) AS n_orders,
              SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS rev
    GROUP BY c_mktsegment
 |> SELECT c_mktsegment AS segment, n_orders,
           ROUND(CAST(rev AS DOUBLE), 2) AS revenue
 |> ORDER BY segment
-"""
+""",
+        orders=load_table(spark, sf_dir, "orders"),
+        customer=load_table(spark, sf_dir, "customer"),
     )
 
 
@@ -486,14 +492,13 @@ def null_safe_segment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     VALUES relation; a null-safe equi-condition still plans as a
     BroadcastHashJoin in Spark (``<=>`` is hashable), so the 100 TB shape
     is one map-side join, no shuffle."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events_nsj")
     return spark.sql(
         """
 WITH dim(seg, seg_label) AS (VALUES
   (1, 'alpha'), (2, 'beta'), (3, 'gamma'), (4, 'delta'),
   (CAST(NULL AS INT), 'unassigned')),
 keyed AS (
-  SELECT NULLIF(CAST(user_id % 5 AS INT), 0) AS seg, value FROM events_nsj
+  SELECT NULLIF(CAST(user_id % 5 AS INT), 0) AS seg, value FROM {events}
 )
 SELECT d.seg_label,
        COUNT(*) AS n_events,
@@ -501,7 +506,8 @@ SELECT d.seg_label,
 FROM keyed k JOIN dim d ON k.seg <=> d.seg
 GROUP BY d.seg_label
 ORDER BY d.seg_label
-"""
+""",
+        events=load_table(spark, sf_dir, "events"),
     )
 
 
@@ -649,7 +655,6 @@ def holt_winters_monthly_forecast(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         .coalesce(1)
     )
-    blocks.createOrReplaceTempView("blocks_hw")
 
     e = _hw_exprs(
         y="x.revenue",
@@ -690,17 +695,17 @@ def holt_winters_monthly_forecast(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     return spark.sql(f"""
 WITH RECURSIVE hw_blocks AS (
-  SELECT b, {fold(seed)} AS st FROM blocks_hw WHERE b = 1
+  SELECT b, {fold(seed)} AS st FROM {{blocks}} WHERE b = 1
   UNION ALL
   SELECT m.b, {fold(carry)} AS st
-  FROM hw_blocks e JOIN blocks_hw m ON m.b = e.b + 1
+  FROM hw_blocks e JOIN {{blocks}} m ON m.b = e.b + 1
 )
 SELECT x.month AS month, ROUND(x.revenue, 2) AS revenue,
        ROUND(x.forecast, 2) AS forecast,
        ROUND(ABS(x.revenue - x.forecast), 2) AS abs_err
 FROM hw_blocks LATERAL VIEW explode(st.out) t AS x
 ORDER BY month
-""")
+""", blocks=blocks)
 
 
 def _hw_sql() -> str:
@@ -763,7 +768,7 @@ def sql_scripting_threshold_search(spark: SparkSession, sf_dir: str) -> DataFram
     Scale discipline: the script never loops over the fact table — the
     query pre-aggregates orders into a ${band} band histogram ONCE (two-
     phase groupBy, bounded by the price domain), and every WHILE iteration
-    re-checks a scalar subquery against that metadata-sized view. Doubling
+    re-checks a scalar subquery against that metadata-sized frame. Doubling
     means O(log(max_price)) iterations. Thresholds are band boundaries, so
     the band census answers ``price >= t`` exactly; the DuckDB oracle
     solves the same search in closed form (MIN over the doubling ladder),
@@ -772,17 +777,16 @@ def sql_scripting_threshold_search(spark: SparkSession, sf_dir: str) -> DataFram
     hist = orders.groupBy(
         F.floor(F.col("o_totalprice") / _SCRIPT_BAND).cast("long").alias("band")
     ).agg(F.count(F.lit(1)).alias("cnt"))
-    hist.createOrReplaceTempView("order_band_hist_script")
     return spark.sql(f"""
 BEGIN
   DECLARE n BIGINT;
   DECLARE t DOUBLE DEFAULT {float(_SCRIPT_BAND)!r};
   DECLARE frac DOUBLE DEFAULT 1.0;
   DECLARE n_above BIGINT DEFAULT 0;
-  SET n = (SELECT SUM(cnt) FROM order_band_hist_script);
+  SET n = (SELECT SUM(cnt) FROM {{hist}});
   WHILE frac > {_SCRIPT_FRAC!r} DO
     SET t = t * 2.0;
-    SET n_above = (SELECT COALESCE(SUM(cnt), 0) FROM order_band_hist_script
+    SET n_above = (SELECT COALESCE(SUM(cnt), 0) FROM {{hist}}
                    WHERE band >= CAST(t AS BIGINT) / {_SCRIPT_BAND});
     -- div-safe: n = COUNT(*) of orders, >= 1
     SET frac = n_above / CAST(n AS DOUBLE);
@@ -790,7 +794,7 @@ BEGIN
   SELECT n AS n_orders, t AS threshold, n_above,
          ROUND(frac, 6) AS frac_at_or_above;
 END
-""")
+""", hist=hist)
 
 
 sql_scripting_threshold_search.__doc__ = (

@@ -442,14 +442,13 @@ def weekly_seasonality_decomposition(spark: SparkSession, sf_dir: str) -> DataFr
     daily = orders.groupBy(
         F.col("o_orderdate").cast("date").alias("day")
     ).agg(F.round(F.sum("o_totalprice"), 2).alias("rev"))
-    daily.createOrReplaceTempView("daily_season")
     return spark.sql("""
 WITH trended AS (
   SELECT day, rev,
          ROUND(AVG(rev) OVER (ORDER BY day
            RANGE BETWEEN INTERVAL 14 DAYS PRECEDING AND INTERVAL 14 DAYS FOLLOWING), 2)
            AS trend
-  FROM daily_season
+  FROM {daily}
 ),
 detrended AS (
   SELECT dayofweek(day) AS dow, day, rev, trend,
@@ -464,7 +463,7 @@ SELECT dow, COUNT(*) AS n_days,
 FROM detrended
 GROUP BY dow
 ORDER BY dow
-""")
+""", daily=daily)
 
 
 _SEASONALITY_SQL = """

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from datafusion_impl_spark.plans.tpch import _REV_SQL, _dec, _revenue
+from datafusion_impl_spark.plans.tpch import _REV_SQL, _revenue
 from datafusion_impl_spark.sources.registry import load_table
 
 __all__ = ["QUERIES", "ORACLES"]

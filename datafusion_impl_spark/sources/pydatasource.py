@@ -178,9 +178,6 @@ ORDER BY etype
 # Custom SINK through the same API: a JSON-lines writer
 # --------------------------------------------------------------------------
 
-_SINK_ROOT = "/tmp/datafusion_impl_spark_pysink"
-
-
 class _JsonlWriter(DataSourceWriter):
     def __init__(self, options: dict):
         self.path = options["path"]
@@ -223,17 +220,15 @@ def python_datasource_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataF
     written partition-parallel by :class:`JsonlSinkDataSource`, read back
     with the builtin JSON reader, and aggregated; the oracle computes the
     same aggregate from the original parquet — equality proves the custom
-    writer loses nothing (encoding, nulls, row boundaries)."""
-    import os
-    import shutil
-
+    writer loses nothing (encoding, nulls, row boundaries). Each call
+    writes to its own ``streaming._scratch_dir()``."""
     from pyspark.sql import types as T
 
     from datafusion_impl_spark.sources.registry import load_table
+    from datafusion_impl_spark.streaming import _scratch_dir
 
     spark.dataSource.register(JsonlSinkDataSource)
-    path = os.path.join(_SINK_ROOT, os.path.basename(sf_dir.rstrip("/")))
-    shutil.rmtree(path, ignore_errors=True)
+    path = _scratch_dir()
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "n_chars"
     )

@@ -20,10 +20,13 @@ Every file-fed stream runs one way, through two helpers:
 
 - ``_stage_feed(*parts)`` writes each Arrow table as one parquet file of a
   fresh directory, in arrival order, with names whose lexical order is that
-  order (the file source takes files by modification time, then path). The
-  directories sit under one scratch root per process, removed when the
-  interpreter exits; a query that stages per call removes its feed once
-  drained, the two memoized feeds (TWS, ANN queries) live until exit.
+  order (the file source takes files by modification time, then path).
+  Each feed is a ``_scratch_dir()``: a fresh directory under one scratch
+  root per process, removed when the interpreter exits. A query that
+  stages per call removes its feed once drained; the two memoized feeds
+  (TWS, ANN queries) live until exit. The CDC stream (feed, state,
+  checkpoint) and the Python sink take a ``_scratch_dir()`` per call too,
+  so no call clears a directory another caller reads.
 - ``_drain(spark, stream, mode, confs)`` runs ``stream`` with
   ``availableNow`` into a memory sink under ``scoped_conf(spark, confs)``
   and returns the sink as a frame. The sink's name is unique per call and
@@ -699,9 +702,8 @@ ORDER BY lang
 
 
 #: streaming CDC fixture: feed subset (1-in-50 orders keeps the stream
-#: fast at any SF) and the ping-pong state root.
+#: fast at any SF).
 _CDC_FEED_MOD = 50
-_CDC_ROOT = "/tmp/datafusion_impl_spark_stream_cdc"
 
 
 def stream_cdc_merge_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -722,9 +724,7 @@ def stream_cdc_merge_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge → final state."""
     from datafusion_impl_spark.sources.registry import load_table
 
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    root = os.path.join(_CDC_ROOT, tag)
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch_dir()
     feed_dir = os.path.join(root, "feed")
     orders = (
         load_table(spark, sf_dir, "orders")
@@ -985,20 +985,26 @@ def _run_pinned(spark: SparkSession, writer, confs: dict[str, str]) -> None:
 
 
 @functools.cache
-def _feed_root() -> str:
-    """The process's scratch root for staged feeds, removed at exit."""
-    root = tempfile.mkdtemp(prefix="datafusion_impl_spark_feeds_")
+def _scratch_root() -> str:
+    """The process's scratch root, removed at exit."""
+    root = tempfile.mkdtemp(prefix="datafusion_impl_spark_scratch_")
     atexit.register(shutil.rmtree, root, ignore_errors=True)
     return root
 
 
+def _scratch_dir() -> str:
+    """A fresh directory under the process's scratch root: no other call
+    or process writes or clears it."""
+    return tempfile.mkdtemp(dir=_scratch_root())
+
+
 def _stage_feed(*parts: pa.Table) -> str:
-    """A fresh directory under the process's feed root holding ``parts[i]``
-    as ``part-{i:05d}.parquet``: written in order, so modification time and
+    """A fresh ``_scratch_dir()`` holding ``parts[i]`` as
+    ``part-{i:05d}.parquet``: written in order, so modification time and
     path agree on the arrival order."""
     import pyarrow.parquet as papq
 
-    feed = tempfile.mkdtemp(dir=_feed_root())
+    feed = _scratch_dir()
     for i, part in enumerate(parts):
         papq.write_table(part, os.path.join(feed, f"part-{i:05d}.parquet"))
     return feed

@@ -90,11 +90,11 @@ def test_iteration_parallelism_scales_with_graph(spark):
     measured edge count (r4 verdict: a literal 1 was the repo's one named
     100×-scale risk): tiny graphs → 1 partition (scheduling overhead
     dominates), tens of millions of edges → real parallelism."""
-    from datafusion_impl_spark.operators.graph import (
+    from datafusion_impl_spark.operators import (
         _ROWS_PER_ITER_PARTITION,
-        _bounded_iteration,
         _iteration_partitions,
     )
+    from datafusion_impl_spark.operators.graph import _bounded_iteration
 
     assert _iteration_partitions(0) == 1
     assert _iteration_partitions(5_000) == 1
