@@ -16,7 +16,9 @@
 
 Every operator is a declarative DataFrame plan (JVM-side, Catalyst-optimized)
 unless the semantics genuinely need Python (`multimodal` runs per-blob
-kernels through ``mapInArrow`` — that IS the operator's contract). Each has
+kernels, the source codecs encode and decode bytes). Such kernels run
+through two helpers here: :func:`_map_rows`, the package's one Arrow batch
+loop, and :func:`_shards`, its one shard assembly. Each has
 a DuckDB oracle; cross-engine determinism rests on portable primitives
 verified bit-exact, each defined once here:
 
@@ -39,7 +41,7 @@ from __future__ import annotations
 
 from contextlib import contextmanager
 
-from pyspark.sql import Column, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datafusion_impl_spark.session import scoped_conf
@@ -136,3 +138,53 @@ def materialize(df):
     corpus. This is the package's only checkpoint call, so that choice is
     made here and nowhere else."""
     return df.localCheckpoint(eager=True)
+
+
+def _map_rows(df: DataFrame, schema: str, fn) -> DataFrame:
+    """Run ``fn(*values of one input row)`` over ``df``'s Arrow batches with
+    ``mapInArrow``. ``fn`` returns an iterable of output tuples in
+    ``schema`` order: one tuple for a 1:1 kernel, any number (none
+    included) for a 1:n kernel. The output Arrow types are resolved once,
+    on the driver, from ``schema``."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    out = to_arrow_schema(StructType.fromDDL(schema))
+
+    def kernel(batches):
+        import pyarrow as pa
+
+        for b in batches:
+            rows = [
+                r for vals in zip(*b.to_pydict().values()) for r in fn(*vals)
+            ]
+            cols = list(zip(*rows)) or [()] * len(out)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, type=f.type) for c, f in zip(cols, out)],
+                schema=out,
+            )
+
+    return df.mapInArrow(kernel, schema)
+
+
+def _shards(df: DataFrame, order, encode) -> DataFrame:
+    """``(shard_id int, blob binary)``: one row per ``shard_id`` of ``df``,
+    its blob ``encode(shard_id, rows)``. ``rows`` are the group's rows
+    sorted by ``order`` (a column name or a list of them), as named tuples
+    of ``df``'s other columns in select order. The assembly is one shuffle
+    over the shard key, the shape of a distributed shard writer."""
+
+    def build(pdf):
+        import pandas as pd
+
+        sid = int(pdf["shard_id"].iloc[0])
+        rows = (
+            pdf.sort_values(order)
+            .drop(columns="shard_id")
+            .itertuples(index=False)
+        )
+        return pd.DataFrame({"shard_id": [sid], "blob": [encode(sid, rows)]})
+
+    return df.groupBy("shard_id").applyInPandas(
+        build, "shard_id int, blob binary"
+    )

@@ -523,8 +523,6 @@ def unimax_budget_allocation(spark: SparkSession,
     Scale shape: ONE corpus scan for per-source token counts (two-phase),
     then pure window arithmetic on the 20-row source table (bounded input
     — the same model-table pattern as the other mixers)."""
-    from datafusion_impl_spark.operators.text import tokens
-
     avail = (
         load_table(spark, sf_dir, "documents")
         .select("source", tokens("text").alias("t"))

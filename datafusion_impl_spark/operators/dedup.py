@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from datafusion_impl_spark.operators import (
+    _map_rows,
     bounded_iteration,
     duck_md5_long,
     materialize,
@@ -340,8 +341,10 @@ def _grouped_pairs(
     full table plus the join; this pays one groupBy of the table and goes
     straight to the pair distinct — measured 2.3× on the containment
     generator at sf0.1 with byte-identical output. The pair VOLUME is
-    unchanged (C(group, 2) either way), so the skew story is the same as
-    the self-join's; ``cap`` (the DF cap) is the structural bound, applied
+    unchanged (C(group, 2) either way), but its skew is not the
+    self-join's: each group's C(n, 2) pairs are built in ONE row, as one
+    array, before the explode, so a hot key's whole pair list sits in one
+    row of one task. ``cap`` (the DF cap) is the structural bound, applied
     here as an array-size filter identical to the old per-key COUNT filter
     because inputs are distinct per (key, id).
 
@@ -2293,6 +2296,13 @@ def _cdc_cuts(data: bytes) -> list[int]:
     return cuts
 
 
+def _cdc_chunks(doc_id: int, hx: str) -> list[tuple[int, int, int]]:
+    """``(doc_id, start, size)`` of each chunk of the hex-encoded bytes."""
+    data = bytes.fromhex(hx)
+    bounds = [0] + _cdc_cuts(data) + ([len(data)] if data else [])
+    return [(doc_id, a, b - a) for a, b in zip(bounds, bounds[1:])]
+
+
 def dedup_cdc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CONTENT-DEFINED CHUNKING census — the storage-dedup primitive for
     multimodal blobs (here exercised on document bytes): gear-hash cut
@@ -2312,24 +2322,10 @@ def dedup_cdc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "source", F.hex(F.encode("text", "UTF-8")).alias("hx")
     )
 
-    def cuts(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples():
-                data = bytes.fromhex(r.hx)
-                bounds = [0] + _cdc_cuts(data) + (
-                    [len(data)] if data else []
-                )
-                for a, b in zip(bounds, bounds[1:]):
-                    rows.append((int(r.doc_id), a, b - a))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "start", "size"]
-            )
-
-    manifests = docs.select("doc_id", "hx").mapInPandas(
-        cuts, "doc_id bigint, start long, size long"
+    manifests = _map_rows(
+        docs.select("doc_id", "hx"),
+        "doc_id bigint, start long, size long",
+        _cdc_chunks,
     )
     chunk_hex = F.substring(
         F.col("hx"), (F.col("start") * 2 + 1).cast("int"),

@@ -9,13 +9,14 @@ work, so the Spark-side contract is
         → mapInArrow(kernel, SCHEMA)   # Arrow batches
         → typed feature rows → normal relational ops
 
-Every planted-media query and every per-blob kernel goes through one
-helper, :func:`_map_rows`: it runs a per-row function over the Arrow
-batches and types the output rows from the declared schema. Only the
-four API demos — :func:`extract_media_features` (``mapInPandas``), its
-``mapInArrow`` twin :func:`extract_media_features_arrow`,
-:func:`sample_frames` and the tar/webdataset shard scan — call the batch
-APIs themselves.
+Every planted-media query and every per-blob kernel goes through the
+package's row-kernel helper, :func:`operators._map_rows`: it runs a
+per-row function over the Arrow batches and types the output rows from
+the declared schema; the tar/webdataset shards are assembled by
+:func:`operators._shards`. Only the three API demos —
+:func:`extract_media_features` (``mapInPandas``), its ``mapInArrow`` twin
+:func:`extract_media_features_arrow` and :func:`sample_frames` — call the
+batch APIs themselves.
 
 The decoders are real and need no external libs: BMP, PNG, GIF, JPEG,
 WAV and YUV4MPEG2 payloads are parsed from their bytes alone (e.g.
@@ -41,7 +42,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datafusion_impl_spark.operators import (
+    _map_rows,
     _round_half_up,
+    _shards,
     duck_md5_long,
     materialize,
 )
@@ -82,33 +85,6 @@ def media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.length("text").alias("n_chars"),
         ).alias("meta"),
     )
-
-
-def _map_rows(df: DataFrame, schema: str, fn) -> DataFrame:
-    """Run ``fn(*values of one input row)`` over ``df``'s Arrow batches with
-    ``mapInArrow``. ``fn`` returns an iterable of output tuples in
-    ``schema`` order: one tuple for a 1:1 kernel, any number (none
-    included) for a 1:n kernel. The output Arrow types are resolved once,
-    on the driver, from ``schema``."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType
-
-    out = to_arrow_schema(StructType.fromDDL(schema))
-
-    def kernel(batches):
-        import pyarrow as pa
-
-        for b in batches:
-            rows = [
-                r for vals in zip(*b.to_pydict().values()) for r in fn(*vals)
-            ]
-            cols = list(zip(*rows)) or [()] * len(out)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c, type=f.type) for c, f in zip(cols, out)],
-                schema=out,
-            )
-
-    return df.mapInArrow(kernel, schema)
 
 
 def _planted(spark: SparkSession, sf_dir: str, mod: int, res: int,
@@ -4149,6 +4125,25 @@ def _tar_scan(data: bytes) -> list[tuple[str, int]]:
     raise ValueError("unterminated tar archive")
 
 
+def _tar_encode_shard(shard_id: int, rows) -> bytes:
+    """One webdataset shard: two members per sample, ``<doc_id>.txt`` (the
+    text) and ``<doc_id>.cls`` (the source label)."""
+    members: list[tuple[str, bytes]] = []
+    for r in rows:
+        members.append((f"{r.doc_id}.txt", r.text.encode()))
+        members.append((f"{r.doc_id}.cls", r.source.encode()))
+    return _tar_build(members)
+
+
+def _tar_shard_stats(shard_id: int, tar: bytes):
+    """``[(shard_id, members, samples, payload bytes, archive bytes)]`` of
+    one shard, read back from its bytes alone."""
+    members = _tar_scan(tar)
+    samples = {n.rsplit(".", 1)[0] for n, _ in members}
+    return [(shard_id, len(members), len(samples),
+             sum(s for _, s in members), len(tar))]
+
+
 def multimodal_tar_webdataset_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WEBDATASET round-trip — the container format large multimodal
     training corpora actually ship in (tar shards whose consecutive
@@ -4163,8 +4158,8 @@ def multimodal_tar_webdataset_scan(spark: SparkSession, sf_dir: str) -> DataFram
     mis-written octal size field desyncs every later member, so the
     round-trip is self-proving).
 
-    Scale shape: shard assembly is ``applyInPandas`` over the shard key —
-    ONE shuffle of the payload (exactly what a distributed WebDataset
+    Scale shape: shard assembly (``_shards``) is ONE shuffle of the
+    payload over the shard key (exactly what a distributed WebDataset
     writer does); the scan is map-only over shard blobs; the final
     aggregate is {shards} rows."""
     docs = load_table(spark, sf_dir, "documents").select(
@@ -4172,49 +4167,14 @@ def multimodal_tar_webdataset_scan(spark: SparkSession, sf_dir: str) -> DataFram
         (F.col("doc_id") % _TAR_SHARDS).cast("int").alias("shard_id"),
     )
 
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id")
-        members: list[tuple[str, bytes]] = []
-        for r in pdf.itertuples():
-            members.append((f"{r.doc_id}.txt", r.text.encode()))
-            members.append((f"{r.doc_id}.cls", r.source.encode()))
-        return pd.DataFrame(
-            {"shard_id": [int(pdf["shard_id"].iloc[0])],
-             "tar": [_tar_build(members)]}
-        )
-
-    shards = docs.groupBy("shard_id").applyInPandas(
-        assemble, "shard_id int, tar binary"
-    )
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples():
-                members = _tar_scan(bytes(r.tar))
-                samples = {n.rsplit(".", 1)[0] for n, _ in members}
-                rows.append(
-                    (int(r.shard_id), len(members), len(samples),
-                     sum(s for _, s in members), len(bytes(r.tar)))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["shard_id", "n_members", "n_samples",
-                         "payload_bytes", "tar_bytes"],
-            )
-
-    stats = shards.mapInPandas(
-        scan,
+    stats = _map_rows(
+        _shards(docs, "doc_id", _tar_encode_shard),
         "shard_id int, n_members long, n_samples long, "
         "payload_bytes long, tar_bytes long",
+        _tar_shard_stats,
     )
-    return stats.select(
-        "shard_id",
-        "n_members",
-        "n_samples",
-        "payload_bytes",
-        "tar_bytes",
-        (F.col("tar_bytes") % 512 == 0).alias("block_aligned"),
+    return stats.withColumn(
+        "block_aligned", F.col("tar_bytes") % 512 == 0
     ).orderBy("shard_id")
 
 

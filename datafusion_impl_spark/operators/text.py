@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from datafusion_impl_spark.operators import (
+    _map_rows,
     _round_half_up,
     bounded_iteration,
     duck_md5_long,
@@ -329,8 +330,6 @@ def text_tokenize_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking then runs over the ≤K surviving rows only, where an
     un-partitioned window is a 64-row no-op rather than a billion-token
     shuffle-to-one (the r2 verdict's one remaining scale-killer)."""
-    from pyspark.sql import Window
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     tok = docs.select("doc_id", F.explode(tokens("text")).alias("token"))
     top = (
@@ -3110,6 +3109,14 @@ _NFC_SUFFIXES = {
 }
 
 
+def _nfc_delta(source: str, t: str) -> list[tuple[str, int, int]]:
+    """``[(source, changed, codepoints saved)]`` of ``t`` under NFC."""
+    import unicodedata
+
+    n = unicodedata.normalize("NFC", t)
+    return [(source, int(n != t), len(t) - len(n))]
+
+
 def text_nfc_normalization_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unicode NFC normalization QA — the canonicalization step every text
     pipeline runs before hashing/dedup (the same logical string must hash
@@ -3125,10 +3132,8 @@ def text_nfc_normalization_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     on every row is the point of the audit.
 
     Scale shape: pure map (plant + normalize fuse into the scan; the
-    kernel is Arrow-batched, not per-row Python) + one tiny per-source
-    aggregate."""
-    import pandas as pd  # noqa: F811 - kernel-local alias
-
+    kernel runs over Arrow batches, not as a per-row UDF) + one tiny
+    per-source aggregate."""
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "text"
     )
@@ -3140,23 +3145,8 @@ def text_nfc_normalization_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source", F.concat(F.col("text"), suffix).alias("t")
     )
 
-    def kernel(batches):
-        import unicodedata
-
-        for pdf in batches:
-            norm = pdf["t"].map(lambda s: unicodedata.normalize("NFC", s))
-            yield pd.DataFrame(
-                {
-                    "source": pdf["source"],
-                    "changed": (norm != pdf["t"]).astype("int64"),
-                    "delta": (
-                        pdf["t"].str.len() - norm.str.len()
-                    ).astype("int64"),
-                }
-            )
-
-    audited = planted.mapInPandas(
-        kernel, "source string, changed bigint, delta bigint"
+    audited = _map_rows(
+        planted, "source string, changed bigint, delta bigint", _nfc_delta
     )
     return (
         audited.groupBy("source")
@@ -5994,6 +5984,20 @@ def _varint_decode(data: bytes) -> list[int]:
     return out
 
 
+def _postings_codec(term: str, ids: list[int]) -> list[tuple]:
+    """``[(term, df, encoded bytes, decoded checksum)]``: ``ids`` (sorted)
+    delta-gap + varint encoded, then decoded back and checked."""
+    gaps = [ids[0]] + [b - a for a, b in zip(ids, ids[1:])] if ids else []
+    blob = _varint_encode(gaps)
+    out, acc = [], 0
+    for g in _varint_decode(blob):
+        acc += g
+        out.append(acc)
+    if out != ids:
+        raise ValueError(f"codec round-trip failed: {term}")
+    return [(term, len(ids), len(blob), sum(out) % _POSTINGS_HASH_MOD)]
+
+
 def postings_varint_roundtrip(spark: SparkSession,
                               sf_dir: str) -> DataFrame:
     """INVERTED-INDEX POSTINGS COMPRESSION — the bytes under the BM25
@@ -6017,35 +6021,10 @@ def postings_varint_roundtrip(spark: SparkSession,
         .agg(F.sort_array(F.collect_set("doc_id")).alias("ids"))
     )
 
-    def codec(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples():
-                ids = [int(x) for x in r.ids]
-                gaps = [ids[0]] + [
-                    b - a for a, b in zip(ids, ids[1:])
-                ] if ids else []
-                blob = _varint_encode(gaps)
-                dec = _varint_decode(blob)
-                out, acc = [], 0
-                for g in dec:
-                    acc += g
-                    out.append(acc)
-                if out != ids:
-                    raise ValueError(f"codec round-trip failed: {r.term}")
-                rows.append(
-                    (str(r.term), len(ids), len(blob),
-                     sum(out) % _POSTINGS_HASH_MOD)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["term", "df", "encoded_bytes", "decoded_sum"],
-            )
-
-    enc = postings.mapInPandas(
-        codec, "term string, df long, encoded_bytes long, decoded_sum long"
+    enc = _map_rows(
+        postings,
+        "term string, df long, encoded_bytes long, decoded_sum long",
+        _postings_codec,
     )
     bucket = (F.length(F.bin(F.col("df"))) - 1).cast("int")
     return (
@@ -6251,8 +6230,6 @@ def text_homoglyph_dedup_recovery(spark: SparkSession,
 
     Scale shape: translate() is codegen'd JVM string work; the census is
     one groupBy. No kernel anywhere."""
-    from datafusion_impl_spark.operators import md5_long
-
     lat = "".join(_HOMOGLYPHS)
     cyr = "".join(_HOMOGLYPHS.values())
     docs = (
@@ -6288,8 +6265,6 @@ text_homoglyph_dedup_recovery.__doc__ = (
 
 
 def _homoglyph_oracle() -> str:
-    from datafusion_impl_spark.operators import duck_md5_long
-
     lat = "".join(_HOMOGLYPHS)
     cyr = "".join(_HOMOGLYPHS.values())
     return f"""

@@ -728,8 +728,6 @@ def join_key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _skew_oracle() -> str:
-    from datafusion_impl_spark.operators import duck_md5_long
-
     h = duck_md5_long("CAST(user_id AS VARCHAR)")
     return f"""
 WITH per AS (

@@ -48,8 +48,6 @@ def table_checksum_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     The modular sum uses p = 1e9+7: 60-bit hash % p < 2^30, so even billions
     of rows per bucket stay far from BIGINT overflow — overflow-safe at
     100 TB, where a raw SUM of 60-bit hashes would wrap."""
-    from datafusion_impl_spark.operators import md5_long
-
     orders = load_table(spark, sf_dir, "orders")
     key = F.concat_ws(
         "|",
@@ -107,8 +105,6 @@ def table_checksum_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _checksum_oracle() -> str:
-    from datafusion_impl_spark.operators import duck_md5_long
-
     key = (
         "CAST(o_orderkey AS VARCHAR) || '|' || CAST(o_custkey AS VARCHAR) || '|' "
         "|| o_orderstatus || '|' || CAST(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT) AS VARCHAR)"
@@ -626,8 +622,6 @@ def ab_experiment_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "value"
     )
-    from datafusion_impl_spark.operators import md5_long
-
     arm = (md5_long(F.col("user_id").cast("string")) % 2 == 0)
     vdec = F.col("value").cast("decimal(18,6)")
     stats = (
@@ -681,8 +675,6 @@ def ab_experiment_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ab_oracle() -> str:
-    from datafusion_impl_spark.operators import duck_md5_long
-
     h = duck_md5_long("CAST(user_id AS VARCHAR)")
     return f"""
 WITH tagged AS (
@@ -833,8 +825,6 @@ def pseudonymize_join_preservation(spark: SparkSession, sf_dir: str) -> DataFram
 
     Map-side transform (hashing is codegen), one broadcast-dim join either
     way — pseudonymization adds zero shuffle cost at any scale."""
-    from datafusion_impl_spark.operators import md5_long
-
     cust = load_table(spark, sf_dir, "customer").select(
         md5_long(F.concat(F.lit("cust:"), F.col("c_custkey").cast("string")))
         .alias("surrogate"),
@@ -1757,8 +1747,6 @@ def dp_exponential_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         "b", F.coalesce("c", F.lit(0)).alias("c")
     )
     # bounded window: cum_below_i = #records in intervals < i (60 rows)
-    from pyspark.sql import Window
-
     cum = full.select(
         "b",
         F.coalesce(

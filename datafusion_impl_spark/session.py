@@ -42,7 +42,11 @@ memory-sink view that a stream in the child registered.
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
+import tempfile
 import threading
 from contextlib import contextmanager
 
@@ -163,3 +167,18 @@ def scoped_conf(spark: SparkSession, confs: dict[str, str]):
                     spark.conf.unset(key)
                 else:
                     spark.conf.set(key, value)
+
+
+@functools.cache
+def _scratch_root() -> str:
+    """The process's scratch root, removed at exit."""
+    root = tempfile.mkdtemp(prefix="datafusion_impl_spark_scratch_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
+
+
+def _scratch_dir() -> str:
+    """A fresh directory under the process's scratch root: no other call
+    or process writes or clears it. Every file a query writes to read
+    back goes in one."""
+    return tempfile.mkdtemp(dir=_scratch_root())

@@ -37,6 +37,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from datafusion_impl_spark.session import _scratch_dir
+
 __all__ = ["QUERIES", "ORACLES", "SyntheticEventsDataSource"]
 
 #: event-type vocabulary (index = row_index % 5).
@@ -221,11 +223,10 @@ def python_datasource_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataF
     with the builtin JSON reader, and aggregated; the oracle computes the
     same aggregate from the original parquet — equality proves the custom
     writer loses nothing (encoding, nulls, row boundaries). Each call
-    writes to its own ``streaming._scratch_dir()``."""
+    writes to its own ``session._scratch_dir()``."""
     from pyspark.sql import types as T
 
     from datafusion_impl_spark.sources.registry import load_table
-    from datafusion_impl_spark.streaming import _scratch_dir
 
     spark.dataSource.register(JsonlSinkDataSource)
     path = _scratch_dir()

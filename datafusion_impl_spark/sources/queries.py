@@ -31,7 +31,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from datafusion_impl_spark.operators import duck_md5_long, materialize, md5_long
+from datafusion_impl_spark.operators import (
+    _map_rows,
+    _shards,
+    duck_md5_long,
+    materialize,
+    md5_long,
+)
+from datafusion_impl_spark.session import _scratch_dir
 from datafusion_impl_spark.sources.registry import load_table, read_csv
 
 __all__ = ["QUERIES", "ORACLES"]
@@ -40,9 +47,10 @@ __all__ = ["QUERIES", "ORACLES"]
 #: module (transcribed in FIXTURES.md §F1) — read-only input.
 _REF_CSV = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data", "test-data.csv")
 
-#: Where the JSONL round-trip materializes. /tmp, never the read-only
-#: testdata tree; keyed by scale-factor directory name so concurrent
-#: harnesses at different SFs don't clobber each other.
+#: Where the compaction plan and the file-lineage query write, keyed by
+#: scale-factor directory name: their oracles read those files by path.
+#: Every other round-trip writes a fresh ``_scratch_dir()`` per call and
+#: its oracle reads the original parquet.
 _JSONL_ROOT = "/tmp/datafusion_impl_spark_jsonl"
 
 _DOCS_SCHEMA = T.StructType(
@@ -86,7 +94,7 @@ def jsonl_documents_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     so equality proves the JSONL cycle is lossless — including texts with
     embedded newlines, which the JSON writer escapes to keep one record per
     line."""
-    path = os.path.join(_JSONL_ROOT, os.path.basename(sf_dir.rstrip("/")), "documents")
+    path = _scratch_dir()
     docs = load_table(spark, sf_dir, "documents")
     docs.write.mode("overwrite").json(path)
     back = spark.read.schema(_DOCS_SCHEMA).json(path)
@@ -121,7 +129,7 @@ def orc_lineitem_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     l_shipdate and moves rows across the filter boundary) and doubles.
     ORC is columnar with predicate pushdown, so unlike the JSONL case the
     read-back side keeps scan pruning at scale."""
-    path = os.path.join(_JSONL_ROOT, os.path.basename(sf_dir.rstrip("/")), "li_orc")
+    path = _scratch_dir()
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_quantity", "l_extendedprice", "l_discount",
         "l_returnflag", "l_linestatus", "l_shipdate",
@@ -175,7 +183,7 @@ def xml_documents_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale note: like JSON, XML parsing is row-at-a-time Jackson/StAX — an
     ingest-boundary format, not a compute format. The explicit schema avoids
     the inference double-scan; downstream stages persist to parquet."""
-    path = os.path.join(_JSONL_ROOT, os.path.basename(sf_dir.rstrip("/")), "docs_xml")
+    path = _scratch_dir()
     docs = load_table(spark, sf_dir, "documents")
     (
         docs.write.mode("overwrite")
@@ -392,9 +400,7 @@ def parquet_schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFram
     millions of files, prefer a declared read schema (the merged schema is
     known once evolution lands); per-file column resolution at scan time is
     free either way because parquet is self-describing."""
-    path = os.path.join(
-        _JSONL_ROOT, os.path.basename(sf_dir.rstrip("/")), "docs_evo"
-    )
+    path = _scratch_dir()
     docs = load_table(spark, sf_dir, "documents")
     v1 = docs.filter(F.col("doc_id") % 2 == 0).select(
         "doc_id", "source", "n_chars"
@@ -598,9 +604,7 @@ def csv_documents_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale note: ``multiLine`` CSV is not splittable (a file is one task's
     work) — fine for modest exports, wrong for a 100 TB interchange; the
     newline-free alternative is escaping to \n before write, or parquet."""
-    path = os.path.join(
-        _JSONL_ROOT, os.path.basename(sf_dir.rstrip("/")), "docs_csv"
-    )
+    path = _scratch_dir()
     docs = load_table(spark, sf_dir, "documents")
     (
         docs.write.mode("overwrite")
@@ -661,13 +665,7 @@ def binaryfile_media_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet, so a mismatch pinpoints loss anywhere in write→scan. At
     100 TB the scan parallelizes per-file with ``maxPartitionBytes``
     packing many small objects per task; content is never shuffled."""
-    path = os.path.join(
-        _JSONL_ROOT, os.path.basename(sf_dir.rstrip("/")), "media_blobs"
-    )
-    import shutil
-
-    shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(path, exist_ok=True)
+    path = _scratch_dir()
     sample = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % _BLOB_MOD == 0)
@@ -727,6 +725,53 @@ _GZ_SHARDS = 16
 _GZ_HASH_MOD = 1000003
 
 
+def _jsonl_lines(rows) -> list[bytes]:
+    """Each document row as one ``\\n``-terminated JSON line: sorted keys,
+    non-ASCII text kept raw (UTF-8)."""
+    import json
+
+    return [
+        json.dumps(
+            {
+                "doc_id": int(r.doc_id),
+                "source": r.source,
+                "n_chars": int(r.n_chars),
+                "text": r.text,
+            },
+            ensure_ascii=False,
+            sort_keys=True,
+        ).encode()
+        + b"\n"
+        for r in rows
+    ]
+
+
+def _gz_encode_shard(shard_id: int, rows) -> bytes:
+    """One ``.jsonl.gz`` shard of the document rows."""
+    import gzip
+    import io
+
+    buf = io.BytesIO()
+    # mtime=0: deterministic gzip header (content equality is what the
+    # hash column checks; byte determinism keeps reruns identical)
+    with gzip.GzipFile(fileobj=buf, mode="wb", mtime=0) as gz:
+        gz.write(b"".join(_jsonl_lines(rows)))
+    return buf.getvalue()
+
+
+def _gz_lines(shard_id: int, blob: bytes) -> list[tuple[int, str]]:
+    """``(shard_id, JSON line)`` of each record in one gzip shard."""
+    import gzip
+
+    # gzip.decompress verifies the CRC32 + ISIZE trailer — a truncated or
+    # bit-flipped shard fails loudly here
+    text = gzip.decompress(blob).decode()
+    # split strictly on \n: splitlines() also splits on U+2028/U+0085,
+    # which json.dumps(ensure_ascii=False) leaves RAW inside string values
+    # (valid JSON) — a doc containing one would shear its record in two
+    return [(shard_id, line) for line in text.split("\n") if line]
+
+
 def source_gzip_jsonl_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GZIP-JSONL INGESTION round-trip — the wire format raw web corpora
     actually arrive in (Common-Crawl-style ``.jsonl.gz`` shards): hash-
@@ -741,72 +786,18 @@ def source_gzip_jsonl_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     line splitting (embedded newlines!) diverges the hash, which the
     oracle recomputes from the original parquet.
 
-    Scale shape: one shuffle to assemble shards (``applyInPandas`` over
-    the shard key — the distributed shard-writer shape), map-only decode,
+    Scale shape: one shuffle to assemble shards (``_shards`` over the
+    shard key — the distributed shard-writer shape), map-only decode,
     {shards}-row aggregate."""
-    import json
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars", "text",
         (F.col("doc_id") % _GZ_SHARDS).cast("int").alias("shard_id"),
     )
-
-    def build(pdf):
-        import gzip
-        import io
-
-        pdf = pdf.sort_values("doc_id")
-        buf = io.BytesIO()
-        # mtime=0: deterministic gzip header (content equality is what the
-        # hash column checks; byte determinism keeps reruns identical)
-        with gzip.GzipFile(fileobj=buf, mode="wb", mtime=0) as gz:
-            for r in pdf.itertuples():
-                gz.write(
-                    json.dumps(
-                        {
-                            "doc_id": int(r.doc_id),
-                            "source": r.source,
-                            "n_chars": int(r.n_chars),
-                            "text": r.text,
-                        },
-                        ensure_ascii=False,
-                        sort_keys=True,
-                    ).encode()
-                    + b"\n"
-                )
-        import pandas as pd
-
-        return pd.DataFrame(
-            {"shard_id": [int(pdf["shard_id"].iloc[0])],
-             "gz": [buf.getvalue()]}
-        )
-
-    shards = docs.groupBy("shard_id").applyInPandas(
-        build, "shard_id int, gz binary"
+    lines = _map_rows(
+        _shards(docs, "doc_id", _gz_encode_shard),
+        "shard_id int, line string",
+        _gz_lines,
     )
-
-    def gunzip_lines(batches):
-        import gzip
-
-        import pandas as pd
-
-        for pdf in batches:
-            sids, lines = [], []
-            for r in pdf.itertuples():
-                # gzip.decompress verifies the CRC32 + ISIZE trailer —
-                # a truncated or bit-flipped shard fails loudly here
-                text = gzip.decompress(bytes(r.gz)).decode()
-                # split strictly on \n: splitlines() also splits on
-                # U+2028/U+0085, which json.dumps(ensure_ascii=False)
-                # leaves RAW inside string values (valid JSON) — a doc
-                # containing one would shear its record in two
-                for line in text.split("\n"):
-                    if line:
-                        sids.append(int(r.shard_id))
-                        lines.append(line)
-            yield pd.DataFrame({"shard_id": sids, "line": lines})
-
-    lines = shards.mapInPandas(gunzip_lines, "shard_id int, line string")
     j = F.from_json(
         "line", "doc_id BIGINT, source STRING, n_chars BIGINT, text STRING"
     )
@@ -817,8 +808,6 @@ def source_gzip_jsonl_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("j.n_chars").alias("n_chars"),
         F.col("j.text").alias("text"),
     )
-    from datafusion_impl_spark.operators import md5_long
-
     return (
         parsed.groupBy("shard_id")
         .agg(
@@ -834,8 +823,6 @@ def source_gzip_jsonl_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _gzip_jsonl_oracle() -> str:
-    from datafusion_impl_spark.operators import duck_md5_long
-
     return f"""
 SELECT CAST(doc_id % {_GZ_SHARDS} AS INTEGER) AS shard_id,
        COUNT(*) AS n_docs,
@@ -945,6 +932,28 @@ def _zst_read_shard(blob: bytes):
     return chunks
 
 
+def _zst_encode_shard(shard_id: int, rows) -> bytes:
+    """One seekable ``.jsonl.zst`` shard of the document rows,
+    ``_ZST_FRAME_DOCS`` records per frame."""
+    lines = _jsonl_lines(rows)
+    return _zst_build_shard([
+        b"".join(lines[i:i + _ZST_FRAME_DOCS])
+        for i in range(0, len(lines), _ZST_FRAME_DOCS)
+    ])
+
+
+def _zst_lines(shard_id: int, blob: bytes) -> list[tuple[int, int, str]]:
+    """``(shard_id, frame index, JSON line)`` of each record in one seekable
+    zstd shard, split strictly on ``\\n`` (the gzip twin's rationale:
+    ``splitlines()`` shears records on a raw U+2028)."""
+    return [
+        (shard_id, i, line)
+        for i, chunk in enumerate(_zst_read_shard(blob))
+        for line in chunk.decode().split("\n")
+        if line
+    ]
+
+
 def source_zstd_seekable_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SEEKABLE-ZSTD JSONL ingestion round-trip — the shard layout modern
     LLM corpora actually ship (zstd-framed ``.jsonl.zst``, e.g.
@@ -968,71 +977,19 @@ def source_zstd_seekable_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     the round-tripped TEXT — any loss anywhere in compress/frame/seek-
     table/decode/line-split/JSON diverges the hash vs the parquet oracle.
 
-    Scale shape: one shuffle to assemble shards (``applyInPandas`` over
-    the shard key — the distributed shard-writer), map-only seek-table
+    Scale shape: one shuffle to assemble shards (``_shards`` over the
+    shard key — the distributed shard-writer), map-only seek-table
     decode, {shards}-row aggregate. At 100 TB, independent frames mean a
     reader can fetch doc ranges with HTTP range requests and decode only
     the frames it needs — the reason the seekable format exists."""
-    import json
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars", "text",
         (F.col("doc_id") % _ZST_SHARDS).cast("int").alias("shard_id"),
     )
-
-    def build(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values("doc_id")
-        lines = [
-            json.dumps(
-                {
-                    "doc_id": int(r.doc_id),
-                    "source": r.source,
-                    "n_chars": int(r.n_chars),
-                    "text": r.text,
-                },
-                ensure_ascii=False,
-                sort_keys=True,
-            ).encode()
-            + b"\n"
-            for r in pdf.itertuples()
-        ]
-        chunks = [
-            b"".join(lines[i:i + _ZST_FRAME_DOCS])
-            for i in range(0, len(lines), _ZST_FRAME_DOCS)
-        ]
-        return pd.DataFrame(
-            {
-                "shard_id": [int(pdf["shard_id"].iloc[0])],
-                "zst": [_zst_build_shard(chunks)],
-            }
-        )
-
-    shards = docs.groupBy("shard_id").applyInPandas(
-        build, "shard_id int, zst binary"
-    )
-
-    def unzstd_lines(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            sids, fidx, lines = [], [], []
-            for r in pdf.itertuples():
-                for i, chunk in enumerate(_zst_read_shard(bytes(r.zst))):
-                    # split strictly on \n (same rationale as the gzip
-                    # twin: splitlines() shears records on raw U+2028)
-                    for line in chunk.decode().split("\n"):
-                        if line:
-                            sids.append(int(r.shard_id))
-                            fidx.append(i)
-                            lines.append(line)
-            yield pd.DataFrame(
-                {"shard_id": sids, "frame_idx": fidx, "line": lines}
-            )
-
-    lines = shards.mapInPandas(
-        unzstd_lines, "shard_id int, frame_idx int, line string"
+    lines = _map_rows(
+        _shards(docs, "doc_id", _zst_encode_shard),
+        "shard_id int, frame_idx int, line string",
+        _zst_lines,
     )
     j = F.from_json(
         "line", "doc_id BIGINT, source STRING, n_chars BIGINT, text STRING"
@@ -1044,8 +1001,6 @@ def source_zstd_seekable_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("j.source").alias("source"),
         F.col("j.text").alias("text"),
     )
-    from datafusion_impl_spark.operators import md5_long
-
     return (
         parsed.groupBy("shard_id")
         .agg(
@@ -1067,8 +1022,6 @@ source_zstd_seekable_scan.__doc__ = source_zstd_seekable_scan.__doc__.format(
 
 
 def _zstd_seekable_oracle() -> str:
-    from datafusion_impl_spark.operators import duck_md5_long
-
     return f"""
 SELECT CAST(doc_id % {_ZST_SHARDS} AS INTEGER) AS shard_id,
        CAST(CEIL(COUNT(*) / {_ZST_FRAME_DOCS}.0) AS BIGINT) AS n_frames,
@@ -1100,8 +1053,6 @@ def _footer_stage(sf_dir: str) -> str:
     Spark jobs, so the footers are byte-deterministic). Sorted by
     ``o_orderkey``, every file and every row group carries a DISJOINT key
     range — the layout where min/max stats actually prune."""
-    import os
-
     import pyarrow.compute as pc
     import pyarrow.parquet as papq
 
@@ -1135,6 +1086,23 @@ _footer_stage.__doc__ = _footer_stage.__doc__.format(
 )
 
 
+def _footer_row_groups(file_idx: int, path: str):
+    """``(file_idx, rg_id, n_rows, kmin, kmax)`` of each row group of one
+    parquet file, from its footer alone (``o_orderkey``'s statistics)."""
+    import pyarrow.parquet as papq
+
+    md = papq.ParquetFile(path).metadata
+    col_idx = {
+        md.schema.column(j).name: j for j in range(md.num_columns)
+    }["o_orderkey"]
+    out = []
+    for g in range(md.num_row_groups):
+        rgm = md.row_group(g)
+        st = rgm.column(col_idx).statistics
+        out.append((file_idx, g, rgm.num_rows, int(st.min), int(st.max)))
+    return out
+
+
 def parquet_footer_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PARQUET FOOTER CENSUS — the metadata pass behind every stats-pruning
     decision (Delta/Iceberg OPTIMIZE audits, scan planners, the repo's own
@@ -1151,49 +1119,18 @@ def parquet_footer_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: footer reads parallelize over files (a 100 TB table's
     planning pass is exactly this: thousands of footers, zero data pages);
     staging is one pyarrow write, memoized per sf."""
-    import os
-
     stage = _footer_stage(sf_dir)
-    paths = [
-        os.path.join(stage, f"part-{i:02d}.parquet")
-        for i in range(_FOOTER_FILES)
-    ]
-    pdf_paths = spark.createDataFrame(
-        [(i, p) for i, p in enumerate(paths)], "file_idx int, path string"
+    files = spark.createDataFrame(
+        [
+            (i, os.path.join(stage, f"part-{i:02d}.parquet"))
+            for i in range(_FOOTER_FILES)
+        ],
+        "file_idx int, path string",
     )
-
-    def footers(batches):
-        import pandas as pd
-        import pyarrow.parquet as papq
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples():
-                md = papq.ParquetFile(r.path).metadata
-                col_idx = {
-                    md.schema.column(j).name: j
-                    for j in range(md.num_columns)
-                }["o_orderkey"]
-                for g in range(md.num_row_groups):
-                    rgm = md.row_group(g)
-                    st = rgm.column(col_idx).statistics
-                    rows.append(
-                        (
-                            int(r.file_idx),
-                            g,
-                            rgm.num_rows,
-                            int(st.min),
-                            int(st.max),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["file_idx", "rg_id", "n_rows", "kmin", "kmax"],
-            )
-
-    rgs = pdf_paths.mapInPandas(
-        footers,
+    rgs = _map_rows(
+        files,
         "file_idx int, rg_id int, n_rows long, kmin long, kmax long",
+        _footer_row_groups,
     )
     # prune predicate: o_orderkey <= half the global max (derived from the
     # same stats in both engines — no data pages read anywhere)
@@ -1247,8 +1184,6 @@ def _footer_census_oracle_staged() -> str:
     a missing/unreadable dataset degrades ONLY this oracle (DuckDB's
     ``parquet_metadata()`` errors on the absent files) instead of
     taking down the whole ``oracle_sql()`` registry (r15 advice)."""
-    import os
-
     sf_dir = os.environ.get(
         "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
     )
@@ -1427,6 +1362,20 @@ def _warc_scan(data: bytes):
             yield wtype, uri, payload, {}
 
 
+def _warc_records(shard_id: int, blob: bytes):
+    """``(shard_id, warc_type, doc_id, text)`` of each record of one shard;
+    a response's doc id comes from its target URI (others: -1 and "")."""
+    out = []
+    for wtype, uri, body, _h in _warc_scan(blob):
+        resp = wtype == "response"
+        out.append((
+            shard_id, wtype,
+            int(uri.rsplit("/", 1)[1]) if resp else -1,
+            body.decode() if resp else "",
+        ))
+    return out
+
+
 def source_warc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WARC INGESTION round-trip — the container web-scale corpora
     actually arrive in (Common Crawl ships WARC per ISO 28500): hash-shard
@@ -1443,64 +1392,19 @@ def source_warc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-tripped TEXT — any framing slip diverges the hash vs the
     parquet oracle.
 
-    Scale shape: one shuffle to assemble shards (``applyInPandas`` over
-    the shard key), map-only record walk, {shards}-row aggregate. At
+    Scale shape: one shuffle to assemble shards (``_shards`` over the
+    shard key), map-only record walk, {shards}-row aggregate. At
     100 TB: WARC shards are processed record-stream-wise exactly like
     this — the reader never loads more than one record's payload."""
     docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", "n_chars",
+        "doc_id", "text",
         (F.col("doc_id") % _WARC_SHARDS).cast("int").alias("shard_id"),
     )
-
-    def build(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values("doc_id")
-        return pd.DataFrame(
-            {
-                "shard_id": [int(pdf["shard_id"].iloc[0])],
-                "warc": [
-                    _warc_build_shard(
-                        int(pdf["shard_id"].iloc[0]), pdf.itertuples()
-                    )
-                ],
-            }
-        )
-
-    shards = docs.groupBy("shard_id").applyInPandas(
-        build, "shard_id int, warc binary"
+    records = _map_rows(
+        _shards(docs, "doc_id", _warc_build_shard),
+        "shard_id int, warc_type string, doc_id bigint, text string",
+        _warc_records,
     )
-
-    def scan(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            sids, types, ids, texts = [], [], [], []
-            for r in pdf.itertuples():
-                for wtype, uri, body, _h in _warc_scan(bytes(r.warc)):
-                    sids.append(int(r.shard_id))
-                    types.append(wtype)
-                    ids.append(
-                        int(uri.rsplit("/", 1)[1])
-                        if wtype == "response" else -1
-                    )
-                    texts.append(
-                        body.decode() if wtype == "response" else ""
-                    )
-            yield pd.DataFrame(
-                {
-                    "shard_id": sids,
-                    "warc_type": types,
-                    "doc_id": ids,
-                    "text": texts,
-                }
-            )
-
-    records = shards.mapInPandas(
-        scan, "shard_id int, warc_type string, doc_id bigint, text string"
-    )
-    from datafusion_impl_spark.operators import md5_long
-
     resp = F.col("warc_type") == "response"
     return (
         records.groupBy("shard_id")
@@ -1528,8 +1432,6 @@ source_warc_scan.__doc__ = source_warc_scan.__doc__.format(
 
 
 def _warc_oracle() -> str:
-    from datafusion_impl_spark.operators import duck_md5_long
-
     return f"""
 SELECT CAST(doc_id % {_WARC_SHARDS} AS INTEGER) AS shard_id,
        COUNT(*) + 1 AS n_records,
@@ -1754,90 +1656,71 @@ _warc_build_compliance_shard.__doc__ = (
 )
 
 
+def _compliance_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(shard_id, blob)``: the compliance crawl's WARC shards, documents
+    sharded by ``doc_id % {shards}``."""
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "text", "source",
+        (F.col("doc_id") % _WARC_SHARDS).cast("int").alias("shard_id"),
+    )
+    return _shards(docs, "doc_id", _warc_build_compliance_shard)
+
+
+_compliance_shards.__doc__ = _compliance_shards.__doc__.format(
+    shards=_WARC_SHARDS
+)
+
+
+def _robots_rows(blob: bytes) -> list[tuple]:
+    """The rule, crawl-delay and page records of one compliance shard, in
+    the column order of ``_robots_records``."""
+    rows = []
+    for wtype, uri, body, hdrs in _warc_scan(blob):
+        if wtype != "response":
+            continue
+        hostpart, _sep, path = uri.removeprefix("http://").partition("/")
+        host = int(hostpart.removeprefix("host").split(".")[0])
+        if path == "robots.txt":
+            for agent, is_allow, prefix in _robots_parse(body.decode()):
+                rows.append(
+                    ("rule", host, agent, is_allow, prefix, -1, "", "", 0, 0)
+                )
+            # Crawl-delay rows: the is_allow slot carries the delay
+            # seconds (kind discriminates)
+            for agent, delay in _robots_parse_delays(body.decode()):
+                rows.append(
+                    ("delay", host, agent, delay, "", -1, "", "", 0, 0)
+                )
+        else:
+            text = body.decode()
+            did = int(path.rsplit("/", 1)[1])
+            # meta detection is SCOPED to the plant arithmetic so corpus
+            # text containing the literal tag can never flip the flag; the
+            # substring check stays so a broken plant is still caught (flag
+            # would drop to 0 and the oracle would diverge).
+            rows.append((
+                "page", host, "", 0, "",
+                did,
+                hdrs.get("x-corpus-source", ""),
+                "/" + path,
+                int(hdrs.get("x-robots-tag", "") == "noindex"),
+                int(did % _NOINDEX_HDR_MOD == _NOINDEX_META_RES
+                    and _NOINDEX_META_TAG in text),
+            ))
+    return rows
+
+
 def _robots_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared byte-honest record extraction for the compliance gate and
     its streaming twin: build the compliance WARC shards, scan them, and
     return the mixed rule/page record frame (materialized —
     metadata-only rows, scanned once, consumed by several plans)."""
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", "source",
-        (F.col("doc_id") % _WARC_SHARDS).cast("int").alias("shard_id"),
-    )
-
-    def build(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values("doc_id")
-        sid = int(pdf["shard_id"].iloc[0])
-        return pd.DataFrame(
-            {
-                "shard_id": [sid],
-                "warc": [_warc_build_compliance_shard(sid, pdf.itertuples())],
-            }
-        )
-
-    shards = docs.groupBy("shard_id").applyInPandas(
-        build, "shard_id int, warc binary"
-    )
-
-    def scan(batches):
-        import pandas as pd
-
-        cols = ("kind", "host", "agent", "is_allow", "prefix",
-                "doc_id", "source", "path", "noindex_hdr", "noindex_meta")
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples():
-                for wtype, uri, body, hdrs in _warc_scan(bytes(r.warc)):
-                    if wtype != "response":
-                        continue
-                    hostpart, _sep, path = uri.removeprefix(
-                        "http://"
-                    ).partition("/")
-                    host = int(hostpart.removeprefix("host").split(".")[0])
-                    if path == "robots.txt":
-                        for agent, is_allow, prefix in _robots_parse(
-                            body.decode()
-                        ):
-                            rows.append((
-                                "rule", host, agent, is_allow, prefix,
-                                -1, "", "", 0, 0,
-                            ))
-                        # Crawl-delay rows: the is_allow slot carries the
-                        # delay seconds (kind discriminates)
-                        for agent, delay in _robots_parse_delays(
-                            body.decode()
-                        ):
-                            rows.append((
-                                "delay", host, agent, delay, "",
-                                -1, "", "", 0, 0,
-                            ))
-                    else:
-                        text = body.decode()
-                        did = int(path.rsplit("/", 1)[1])
-                        # meta detection is SCOPED to the plant
-                        # arithmetic so corpus text containing the
-                        # literal tag can never flip the flag; the
-                        # substring check stays so a broken plant is
-                        # still caught (flag would drop to 0 and the
-                        # oracle would diverge).
-                        rows.append((
-                            "page", host, "", 0, "",
-                            did,
-                            hdrs.get("x-corpus-source", ""),
-                            "/" + path,
-                            int(hdrs.get("x-robots-tag", "") == "noindex"),
-                            int(did % _NOINDEX_HDR_MOD
-                                == _NOINDEX_META_RES
-                                and _NOINDEX_META_TAG in text),
-                        ))
-            yield pd.DataFrame(rows, columns=list(cols))
-
-    records = shards.mapInPandas(
-        scan,
+    records = _map_rows(
+        _compliance_shards(spark, sf_dir).select("blob"),
         "kind string, host int, agent string, is_allow int, prefix string, "
         "doc_id bigint, source string, path string, "
         "noindex_hdr int, noindex_meta int",
+        _robots_rows,
     )
     return materialize(records)  # metadata-only rows; scanned once, consumed twice
 
@@ -2022,7 +1905,6 @@ def _iceberg_stage(sf_dir: str) -> str:
     JSON manifests under ``metadata/`` listing each file with its row
     count and key range — the stats a manifest-pruned planner needs."""
     import json
-    import os
 
     import pyarrow.compute as pc
     import pyarrow.parquet as papq
@@ -2088,7 +1970,6 @@ def _iceberg_read(spark: SparkSession, sf_dir: str, version: int):
     tombstone/merge logic: files are immutable, the manifest IS the
     table state."""
     import json
-    import os
 
     root = _iceberg_stage(sf_dir)
     with open(
@@ -2114,7 +1995,6 @@ def _iceberg_stage_v3(sf_dir: str) -> str:
     already-staged v1/v2 layout in place — data bytes are never touched,
     which IS the merge-on-read contract."""
     import json
-    import os
 
     import numpy as np
     import pyarrow as pa
@@ -2183,7 +2063,6 @@ def _iceberg_read_v3(spark: SparkSession, sf_dir: str,
     at 100 TB the read costs the data scan plus a broadcast, never a
     shuffle of the fact table."""
     import json
-    import os
 
     root = _iceberg_stage_v3(sf_dir)
     with open(os.path.join(root, "metadata", "v3.manifest.json")) as f:
@@ -2336,6 +2215,60 @@ ORDER BY host
 
 
 
+def _wet_rows(blob: bytes) -> list[tuple]:
+    """``(doc_id, source, unwrapped, text)`` of each page of one compliance
+    shard: its plain text extracted, written as a WET ``conversion`` record
+    and read back from the WET bytes."""
+    wrap_pre = "<html><head>" + _NOINDEX_META_TAG + "</head><body>"
+    wrap_post = "</body></html>"
+    wet_records = []
+    meta = []  # (doc_id, source, unwrapped)
+    for wtype, uri, body, hdrs in _warc_scan(blob):
+        if wtype != "response" or uri.endswith("/robots.txt"):
+            continue
+        doc_id = int(uri.rsplit("/", 1)[1])
+        html = body.decode()
+        # unwrap is SCOPED to the plant arithmetic: only docs the shard
+        # builder machine-wrapped are unwrapped (for those the frame always
+        # matches — it brackets the text), and corpus text containing
+        # '<html>' passes through untouched instead of raising, so operator
+        # behavior is never a function of corpus content.
+        if (doc_id % _NOINDEX_HDR_MOD == _NOINDEX_META_RES
+                and html.startswith(wrap_pre)
+                and html.endswith(wrap_post)):
+            text = html[len(wrap_pre):-len(wrap_post)]
+            unwrapped = 1
+        else:
+            text, unwrapped = html, 0
+        wet_records.append(
+            _warc_record(
+                [
+                    ("WARC-Type", "conversion"),
+                    ("WARC-Record-ID", f"<urn:uuid:conv-{doc_id}>"),
+                    ("WARC-Refers-To", f"<urn:uuid:page-{doc_id}>"),
+                    ("WARC-Date", _WARC_DATE),
+                    ("WARC-Target-URI", uri),
+                    ("Content-Type", "text/plain"),
+                ],
+                text.encode(),
+            )
+        )
+        meta.append((doc_id, hdrs.get("x-corpus-source", ""), unwrapped))
+    # the WET shard is real bytes; re-scan it with the same strict reader
+    # before emitting anything
+    back = {}
+    for wtype, uri, payload, _h in _warc_scan(b"".join(wet_records)):
+        if wtype != "conversion":
+            raise ValueError("non-conversion record in WET")
+        back[int(uri.rsplit("/", 1)[1])] = payload.decode()
+    if len(back) != len(meta):
+        raise ValueError("WET round-trip lost records")
+    return [
+        (doc_id, source, unwrapped, back[doc_id])
+        for doc_id, source, unwrapped in meta
+    ]
+
+
 def source_wet_conversion_scan(spark: SparkSession,
                                sf_dir: str) -> DataFrame:
     """WET CONVERSION SIDECAR — Common Crawl's text layer (``.wet``
@@ -2354,98 +2287,10 @@ def source_wet_conversion_scan(spark: SparkSession,
     Scale shape: one shuffle to assemble shards, then a single map-only
     kernel per shard does scan → extract → WET build → WET re-scan; the
     aggregate is one row per source."""
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", "source",
-        (F.col("doc_id") % _WARC_SHARDS).cast("int").alias("shard_id"),
-    )
-
-    def build(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values("doc_id")
-        sid = int(pdf["shard_id"].iloc[0])
-        return pd.DataFrame(
-            {
-                "shard_id": [sid],
-                "warc": [_warc_build_compliance_shard(sid, pdf.itertuples())],
-            }
-        )
-
-    shards = docs.groupBy("shard_id").applyInPandas(
-        build, "shard_id int, warc binary"
-    )
-
-    def kernel(batches):
-        import pandas as pd
-
-        wrap_pre = "<html><head>" + _NOINDEX_META_TAG + "</head><body>"
-        wrap_post = "</body></html>"
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples():
-                wet_records = []
-                meta = []  # (doc_id, source, unwrapped)
-                for wtype, uri, body, hdrs in _warc_scan(bytes(r.warc)):
-                    if wtype != "response" or uri.endswith("/robots.txt"):
-                        continue
-                    doc_id = int(uri.rsplit("/", 1)[1])
-                    html = body.decode()
-                    # unwrap is SCOPED to the plant arithmetic: only
-                    # docs the shard builder machine-wrapped are
-                    # unwrapped (for those the frame always matches —
-                    # it brackets the text), and corpus text containing
-                    # '<html>' passes through untouched instead of
-                    # raising, so operator behavior is never a function
-                    # of corpus content.
-                    if (doc_id % _NOINDEX_HDR_MOD == _NOINDEX_META_RES
-                            and html.startswith(wrap_pre)
-                            and html.endswith(wrap_post)):
-                        text = html[len(wrap_pre):-len(wrap_post)]
-                        unwrapped = 1
-                    else:
-                        text, unwrapped = html, 0
-                    wet_records.append(
-                        _warc_record(
-                            [
-                                ("WARC-Type", "conversion"),
-                                ("WARC-Record-ID",
-                                 f"<urn:uuid:conv-{doc_id}>"),
-                                ("WARC-Refers-To",
-                                 f"<urn:uuid:page-{doc_id}>"),
-                                ("WARC-Date", _WARC_DATE),
-                                ("WARC-Target-URI", uri),
-                                ("Content-Type", "text/plain"),
-                            ],
-                            text.encode(),
-                        )
-                    )
-                    meta.append(
-                        (doc_id, hdrs.get("x-corpus-source", ""), unwrapped)
-                    )
-                # the WET shard is real bytes; re-scan it with the same
-                # strict reader before emitting anything
-                wet = b"".join(wet_records)
-                back = {}
-                for wtype, uri, payload, _h in _warc_scan(wet):
-                    if wtype != "conversion":
-                        raise ValueError("non-conversion record in WET")
-                    back[int(uri.rsplit("/", 1)[1])] = payload.decode()
-                if len(back) != len(meta):
-                    raise ValueError("WET round-trip lost records")
-                for doc_id, source, unwrapped in meta:
-                    rows.append(
-                        (doc_id, source, unwrapped, back[doc_id])
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "source", "unwrapped", "text"],
-            )
-
-    from datafusion_impl_spark.operators import md5_long
-
-    recs = shards.mapInPandas(
-        kernel,
+    recs = _map_rows(
+        _compliance_shards(spark, sf_dir).select("blob"),
         "doc_id bigint, source string, unwrapped int, text string",
+        _wet_rows,
     )
     return (
         recs.groupBy("source")
@@ -2462,8 +2307,6 @@ def source_wet_conversion_scan(spark: SparkSession,
 
 
 def _wet_oracle() -> str:
-    from datafusion_impl_spark.operators import duck_md5_long
-
     return f"""
 SELECT source,
        COUNT(*) AS n_conversions,
@@ -2722,7 +2565,6 @@ def _iceberg_stage_v4(sf_dir: str) -> str:
     survivors as {n} fresh sorted data files plus a v4 manifest with no
     delete files. v1–v3 remain readable until expired."""
     import json
-    import os
 
     import pyarrow as pa
     import pyarrow.parquet as papq
@@ -2799,7 +2641,6 @@ def iceberg_snapshot_expiry_gc(spark: SparkSession,
     table driver-side from the JSON manifests exactly as an Iceberg
     catalog would, then aggregates relationally."""
     import json
-    import os
 
     root = _iceberg_stage_v4(sf_dir)
     manifests = {}
@@ -2906,7 +2747,6 @@ def _bloomrg_stage(sf_dir: str) -> str:
     ``blooms.parquet`` holding each row group's {m}-bit filter as 32-bit
     register blocks, and a JSON manifest with the layout arithmetic."""
     import json
-    import os
 
     import pyarrow as pa
     import pyarrow.parquet as papq
@@ -2981,7 +2821,6 @@ def parquet_bloom_rowgroup_skipping(spark: SparkSession,
     registers standing in for the spec's xxhash SBBF (pyarrow 16 cannot
     write those)."""
     import json
-    import os
 
     root = _bloomrg_stage(sf_dir)
     with open(os.path.join(root, "manifest.json")) as f:
@@ -3432,6 +3271,13 @@ def _pdf_extract(data: bytes) -> dict:
     }
 
 
+def _pdf_row(source: str, blob: bytes) -> list[tuple]:
+    """``[(source, is_flate, n_objects, n_chars, text)]`` of one PDF."""
+    m = _pdf_extract(blob)
+    return [(source, m["is_flate"], m["n_objects"], len(m["text"]),
+             m["text"])]
+
+
 def source_pdf_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PDF TEXT-EXTRACTION SCAN — the document-ingest layer next to
     WARC/Avro/protobuf/zstd: every document is written as a minimal-but-
@@ -3450,53 +3296,16 @@ def source_pdf_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "source", "text"
     )
 
-    def build(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "source": pdf["source"],
-                    "pdf": [
-                        _pdf_build(int(r.doc_id), str(r.text))
-                        for r in pdf.itertuples()
-                    ],
-                }
-            )
-
-    blobs = docs.mapInPandas(
-        build, "doc_id bigint, source string, pdf binary"
+    blobs = _map_rows(
+        docs,
+        "source string, pdf binary",
+        lambda doc_id, source, text: [(source, _pdf_build(doc_id, text))],
     )
-
-    def scan(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples():
-                m = _pdf_extract(bytes(r.pdf))
-                rows.append(
-                    (
-                        str(r.source),
-                        m["is_flate"],
-                        m["n_objects"],
-                        len(m["text"]),
-                        m["text"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["source", "is_flate", "n_objects",
-                         "n_chars", "text"],
-            )
-
-    from datafusion_impl_spark.operators import md5_long
-
-    recs = blobs.mapInPandas(
-        scan,
+    recs = _map_rows(
+        blobs,
         "source string, is_flate int, n_objects int, "
         "n_chars long, text string",
+        _pdf_row,
     )
     return (
         recs.groupBy("source")
@@ -3514,8 +3323,6 @@ def source_pdf_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pdf_oracle() -> str:
-    from datafusion_impl_spark.operators import duck_md5_long
-
     return f"""
 SELECT source,
        COUNT(*) AS n_pdfs,
@@ -3735,19 +3542,11 @@ def avro_lineitem_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     full write→read cycle preserves every varint, IEEE double, UTF-8
     string, union branch, and block boundary exactly.
 
-    Scale shape: the shard assembly is one shuffle (``applyInPandas`` over
-    the shard key — the distributed object-writer shape), the scan is
+    Scale shape: the shard assembly is one shuffle (``_shards`` over the
+    shard key — the distributed object-writer shape), the scan is
     per-file parallel with blobs never shuffling (decode happens in the
     scan stage; only typed rows reach the aggregate)."""
-    import shutil
-
-    import pandas as pd
-
-    path = os.path.join(
-        _JSONL_ROOT, os.path.basename(sf_dir.rstrip("/")), "li_avro"
-    )
-    shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(path, exist_ok=True)
+    path = _scratch_dir()
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice",
         "l_returnflag",
@@ -3757,54 +3556,27 @@ def avro_lineitem_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_orderkey") % _AVRO_SHARDS).cast("int").alias("shard_id"),
     )
 
-    def build(pdf):
-        pdf = pdf.sort_values(["l_orderkey", "l_linenumber"])
-        shard = int(pdf["shard_id"].iloc[0])
-        rows = zip(
-            pdf["l_orderkey"], pdf["l_linenumber"], pdf["l_quantity"],
-            pdf["l_extendedprice"], pdf["l_returnflag"],
-            (None if pd.isna(v) else v for v in pdf["l_linestatus"]),
-        )
-        return pd.DataFrame(
-            {"shard_id": [shard], "ocf": [_avro_encode_shard(shard, rows)]}
-        )
-
-    shards = li.groupBy("shard_id").applyInPandas(
-        build, "shard_id int, ocf binary"
-    )
-
     def write_files(rows) -> None:
         for r in rows:
             with open(
                 os.path.join(path, f"part_{r['shard_id']}.avro"), "wb"
             ) as f:
-                f.write(bytes(r["ocf"]))
+                f.write(bytes(r["blob"]))
 
-    shards.foreachPartition(write_files)
-
+    _shards(
+        li, ["l_orderkey", "l_linenumber"], _avro_encode_shard
+    ).foreachPartition(write_files)
     back_raw = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.avro")
         .load(path)
         .select("content")
     )
-
-    def decode(batches):
-        for pdf in batches:
-            for blob in pdf["content"]:
-                recs = list(_avro_decode(bytes(blob)))
-                yield pd.DataFrame(
-                    recs,
-                    columns=[
-                        "l_orderkey", "l_linenumber", "l_quantity",
-                        "l_extendedprice", "l_returnflag", "l_linestatus",
-                    ],
-                )
-
-    back = back_raw.mapInPandas(
-        decode,
+    back = _map_rows(
+        back_raw,
         "l_orderkey long, l_linenumber int, l_quantity double, "
         "l_extendedprice double, l_returnflag string, l_linestatus string",
+        _avro_decode,
     )
     return (
         back.groupBy("l_returnflag")
@@ -3963,6 +3735,15 @@ def _pb_decode_stream(data: bytes):
         yield doc_id, text, source, n_chars + _PB_SIGN_OFFSET
 
 
+def _pb_encode_shard(shard_id: int, rows) -> bytes:
+    """One length-delimited stream of the document rows' messages."""
+    out = bytearray()
+    for r in rows:
+        msg = _pb_encode_doc(int(r.doc_id), r.text, r.source, int(r.n_chars))
+        out += _pb_varint(len(msg)) + msg
+    return bytes(out)
+
+
 def source_protobuf_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PROTOBUF ingestion round-trip: hash-shard the documents, encode each
     shard as a length-delimited stream of wire-format messages (varints,
@@ -3975,57 +3756,17 @@ def source_protobuf_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: identical to the gzip-JSONL twin — one shuffle to
     assemble shards, map-only decode, {shards}-row aggregate."""
-    import pandas as pd
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars", "text",
         (F.col("doc_id") % _PB_SHARDS).cast("int").alias("shard_id"),
     )
-
-    def build(pdf):
-        pdf = pdf.sort_values("doc_id")
-        out = bytearray()
-        for r in pdf.itertuples():
-            msg = _pb_encode_doc(
-                int(r.doc_id), r.text, r.source, int(r.n_chars)
-            )
-            out += _pb_varint(len(msg)) + msg
-        return pd.DataFrame(
-            {"shard_id": [int(pdf["shard_id"].iloc[0])], "pb": [bytes(out)]}
-        )
-
-    shards = docs.groupBy("shard_id").applyInPandas(
-        build, "shard_id int, pb binary"
-    )
-
-    def decode(batches):
-        for pdf in batches:
-            sids, ids, texts, srcs, ncs = [], [], [], [], []
-            for r in pdf.itertuples():
-                for doc_id, text, source, n_chars in _pb_decode_stream(
-                    bytes(r.pb)
-                ):
-                    sids.append(int(r.shard_id))
-                    ids.append(doc_id)
-                    texts.append(text)
-                    srcs.append(source)
-                    ncs.append(n_chars)
-            yield pd.DataFrame(
-                {
-                    "shard_id": sids,
-                    "doc_id": ids,
-                    "text": texts,
-                    "source": srcs,
-                    "n_chars": ncs,
-                }
-            )
-
-    back = shards.mapInPandas(
-        decode,
+    back = _map_rows(
+        _shards(docs, "doc_id", _pb_encode_shard),
         "shard_id int, doc_id long, text string, source string, n_chars long",
+        lambda shard_id, blob: [
+            (shard_id, *doc) for doc in _pb_decode_stream(blob)
+        ],
     )
-    from datafusion_impl_spark.operators import md5_long
-
     return (
         back.groupBy("shard_id")
         .agg(
@@ -4042,8 +3783,6 @@ def source_protobuf_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _protobuf_oracle() -> str:
-    from datafusion_impl_spark.operators import duck_md5_long
-
     return f"""
 SELECT CAST(doc_id % {_PB_SHARDS} AS INTEGER) AS shard_id,
        COUNT(*) AS n_docs,

@@ -21,8 +21,8 @@ Every file-fed stream runs one way, through two helpers:
 - ``_stage_feed(*parts)`` writes each Arrow table as one parquet file of a
   fresh directory, in arrival order, with names whose lexical order is that
   order (the file source takes files by modification time, then path).
-  Each feed is a ``_scratch_dir()``: a fresh directory under one scratch
-  root per process, removed when the interpreter exits. A query that
+  Each feed is a ``session._scratch_dir()``: a fresh directory under one
+  scratch root per process, removed when the interpreter exits. A query that
   stages per call removes its feed once drained; the two memoized feeds
   (TWS, ANN queries) live until exit. The CDC stream (feed, state,
   checkpoint) and the Python sink take a ``_scratch_dir()`` per call too,
@@ -38,11 +38,9 @@ Every file-fed stream runs one way, through two helpers:
 
 from __future__ import annotations
 
-import atexit
 import functools
 import os
 import shutil
-import tempfile
 import uuid
 from typing import TYPE_CHECKING
 
@@ -60,7 +58,7 @@ from pyspark.sql.types import (
 )
 
 from datafusion_impl_spark.operators import duck_md5_long, materialize, md5_long
-from datafusion_impl_spark.session import scoped_conf
+from datafusion_impl_spark.session import _scratch_dir, scoped_conf
 
 if TYPE_CHECKING:
     import pyarrow as pa
@@ -984,20 +982,6 @@ def _run_pinned(spark: SparkSession, writer, confs: dict[str, str]) -> None:
         writer.start().awaitTermination()
 
 
-@functools.cache
-def _scratch_root() -> str:
-    """The process's scratch root, removed at exit."""
-    root = tempfile.mkdtemp(prefix="datafusion_impl_spark_scratch_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
-    return root
-
-
-def _scratch_dir() -> str:
-    """A fresh directory under the process's scratch root: no other call
-    or process writes or clears it."""
-    return tempfile.mkdtemp(dir=_scratch_root())
-
-
 def _stage_feed(*parts: pa.Table) -> str:
     """A fresh ``_scratch_dir()`` holding ``parts[i]`` as
     ``part-{i:05d}.parquet``: written in order, so modification time and
@@ -1692,7 +1676,6 @@ def _ann_serve_topk_scores(q: DataFrame, cell_codes: DataFrame,
     LUT build in ``similarity._pq_codes_lut``. Returns one row per
     (q_id, cand_id) with the rounded ADC distance — no window, no
     aggregation, so the plan is streaming-legal end to end."""
-    import functools
     import operator as op
 
     from datafusion_impl_spark.operators.similarity import (

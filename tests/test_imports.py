@@ -1,4 +1,5 @@
-"""No module-level import in the package goes unused (a static guard in the
+"""No module-level import in the package goes unused, and no function
+imports again a name its module already imports (static guards in the
 style of ``test_materialize.py``). A re-export counts as a use: a name
 listed in ``__all__``, or one an ``__init__.py`` imports from inside the
 package."""
@@ -7,19 +8,23 @@ from __future__ import annotations
 
 import ast
 
-from tests.static_scan import PACKAGE, REPO
+from tests.static_scan import PACKAGE, REPO, package_hits
 
 
-def _module_level(body: list[ast.stmt]):
+def _module_level(body: list[ast.stmt], runtime: bool = False):
     """The statements of ``body``, looking inside top-level ``if``/``try``
-    blocks but not into functions or classes."""
+    blocks but not into functions or classes. ``runtime`` skips the body of
+    ``if TYPE_CHECKING:``, which never runs."""
     for node in body:
         if isinstance(node, ast.If):
-            yield from _module_level(node.body + node.orelse)
+            if runtime and ast.unparse(node.test) == "TYPE_CHECKING":
+                yield from _module_level(node.orelse, runtime)
+            else:
+                yield from _module_level(node.body + node.orelse, runtime)
         elif isinstance(node, ast.Try):
             handlers = [s for h in node.handlers for s in h.body]
             yield from _module_level(
-                node.body + handlers + node.orelse + node.finalbody
+                node.body + handlers + node.orelse + node.finalbody, runtime
             )
         else:
             yield node
@@ -64,6 +69,42 @@ def unused_imports(source: str, is_init: bool = False) -> list[tuple[str, int]]:
     return hits
 
 
+def _bindings(node: ast.Import | ast.ImportFrom):
+    """(bound name, what it binds) of each alias of an import statement."""
+    for alias in node.names:
+        if isinstance(node, ast.ImportFrom):
+            source = ("." * node.level + (node.module or ""), alias.name)
+            yield alias.asname or alias.name, source
+        elif alias.asname:
+            yield alias.asname, (alias.name, None)
+        else:
+            # ``import a.b`` binds ``a`` but also loads ``a.b``: it repeats
+            # only an ``import a.b``
+            yield alias.name.split(".")[0], (alias.name, None)
+
+
+def redundant_imports(source: str) -> list[tuple[str, int]]:
+    """(name, line) of each import inside a function that binds a name to
+    what a module-level import of ``source`` already binds it to."""
+    tree = ast.parse(source)
+    module = {
+        name: what
+        for node in _module_level(tree.body, runtime=True)
+        if isinstance(node, (ast.Import, ast.ImportFrom))
+        for name, what in _bindings(node)
+    }
+    hits = {
+        (name, node.lineno)
+        for fn in ast.walk(tree)
+        if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef))
+        for node in ast.walk(fn)
+        if isinstance(node, (ast.Import, ast.ImportFrom))
+        for name, what in _bindings(node)
+        if module.get(name) == what
+    }
+    return sorted(hits, key=lambda h: (h[1], h[0]))
+
+
 def test_guard_catches_planted_unused_imports():
     src = (
         "from __future__ import annotations\n"
@@ -97,3 +138,35 @@ def test_package_has_no_unused_module_level_import():
         if (found := unused_imports(f.read_text(), f.name == "__init__.py"))
     }
     assert hits == {}
+
+
+def test_guard_catches_planted_redundant_imports():
+    src = (
+        "import os\n"
+        "import pyarrow.parquet as papq\n"
+        "from typing import TYPE_CHECKING\n"
+        "from datafusion_impl_spark.operators import md5_long\n"
+        "if TYPE_CHECKING:\n"
+        "    import pyarrow as pa\n"
+        "def f():\n"
+        "    import os\n"
+        "    import os.path\n"
+        "    import pyarrow as pa\n"
+        "    import pyarrow.parquet as papq\n"
+        "    from datafusion_impl_spark.operators import duck_md5_long, md5_long\n"
+        "    def g():\n"
+        "        from datafusion_impl_spark.operators import md5_long as h\n"
+        "        from pyarrow import parquet as papq\n"
+        "        import json\n"
+        "    return os, papq\n"
+    )
+    # a function may import what only type checkers see, load a
+    # submodule, bind a name under another alias, or bind one to another
+    # object
+    assert redundant_imports(src) == [
+        ("os", 8), ("papq", 11), ("md5_long", 12),
+    ]
+
+
+def test_package_has_no_redundant_function_local_import():
+    assert package_hits(redundant_imports) == {}

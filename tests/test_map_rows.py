@@ -1,40 +1,61 @@
-"""Media kernels have one batch loop: ``multimodal._map_rows`` runs a per-row
+"""Batch kernels have one path: ``operators._map_rows`` runs a per-row
 function over Arrow batches and types the output from the declared schema,
-for 1:1 and 1:n kernels alike; in ``multimodal.py`` only it and the four
-batch-API demos call ``mapInArrow``/``mapInPandas`` (static guard, in the
-style of ``test_materialize.py``)."""
+for 1:1 and 1:n kernels alike, and ``operators._shards`` assembles one blob
+per ``shard_id``. Anywhere in the package only these two and the six
+batch-API demos call ``mapInArrow``/``mapInPandas``/``applyInPandas``/
+``applyInArrow`` (static guard, in the style of ``test_materialize.py``)."""
 
 from __future__ import annotations
 
-import pathlib
+import ast
 
+import pandas as pd
 import pyarrow as pa
 from pyspark.sql import Row
 
-from datafusion_impl_spark.operators import multimodal
-from datafusion_impl_spark.operators.multimodal import _map_rows
-from tests.static_scan import by_function, method_calls
+from datafusion_impl_spark.operators import _map_rows, _shards
+from tests.static_scan import by_function, method_calls, package_hits
 
-#: the top-level functions of ``multimodal.py`` that may call the batch APIs
-#: themselves: the helper, and the demos whose contract IS the API they call
+_BATCH_APIS = ("mapInArrow", "mapInPandas", "applyInPandas", "applyInArrow")
+
+#: (module, top-level function) that may call the batch APIs themselves:
+#: the two helpers, and the demos whose contract IS the API they call
 _ALLOWED = {
-    "_map_rows",
-    "extract_media_features",        # mapInPandas
-    "extract_media_features_arrow",  # its mapInArrow twin
-    "sample_frames",                 # mapInPandas 1:n frame explode
-    "multimodal_tar_webdataset_scan",  # applyInPandas + mapInPandas shards
+    ("datafusion_impl_spark/operators/__init__.py", "_map_rows"),
+    ("datafusion_impl_spark/operators/__init__.py", "_shards"),
+    # mapInPandas, its mapInArrow twin, and a mapInPandas 1:n explode
+    ("datafusion_impl_spark/operators/multimodal.py", "extract_media_features"),
+    ("datafusion_impl_spark/operators/multimodal.py", "extract_media_features_arrow"),
+    ("datafusion_impl_spark/operators/multimodal.py", "sample_frames"),
+    # a per-batch partial aggregate, not a row kernel
+    ("datafusion_impl_spark/operators/text.py", "blocklist_aho_corasick"),
+    # groupBy().applyInPandas and cogroup().applyInPandas
+    ("datafusion_impl_spark/plans/analytics.py", "grouped_zscore_doclen"),
+    ("datafusion_impl_spark/plans/analytics.py", "cogrouped_order_gap_stats"),
 }
 
 
 def batch_api_calls(source: str) -> list[tuple[str, int]]:
     """(enclosing top-level function or ``<module>``, line) of each
-    ``<x>.mapInArrow(...)``/``<x>.mapInPandas(...)`` call in ``source``."""
-    calls = method_calls(source, ("mapInArrow", "mapInPandas"))
+    batch-API call ``<x>.mapInArrow(...)`` and friends in ``source``."""
+    calls = method_calls(source, _BATCH_APIS)
     return by_function(source, [c.lineno for c in calls])
 
 
-def _disallowed(source: str) -> list[tuple[str, int]]:
-    return [c for c in batch_api_calls(source) if c[0] not in _ALLOWED]
+def grouped_pandas_calls(source: str) -> list[tuple[str, int]]:
+    """(enclosing top-level function or ``<module>``, line) of each
+    ``<x>.groupBy(...).applyInPandas(...)`` call in ``source``."""
+    calls = [
+        c for c in method_calls(source, ("applyInPandas",))
+        if isinstance(c.func.value, ast.Call)
+        and isinstance(c.func.value.func, ast.Attribute)
+        and c.func.value.func.attr == "groupBy"
+    ]
+    return by_function(source, [c.lineno for c in calls])
+
+
+def _disallowed(path: str, source: str) -> list[tuple[str, int]]:
+    return [c for c in batch_api_calls(source) if (path, c[0]) not in _ALLOWED]
 
 
 def test_guard_catches_a_planted_batch_call():
@@ -45,17 +66,37 @@ def test_guard_catches_a_planted_batch_call():
         "    def fn(batches):\n"
         "        yield from batches\n"
         "    return images.mapInPandas(fn, 'doc_id bigint')\n"
+        "def build_x_shards(docs):\n"
+        "    return docs.groupBy('shard_id').applyInPandas(f, 'b binary')\n"
         "clips = docs.mapInArrow(build, 'doc_id bigint, media binary')\n"
         "mapInArrow(docs)\n"
     )
-    assert _disallowed(src) == [("decode_x_stats", 6), ("<module>", 7)]
+    init = "datafusion_impl_spark/operators/__init__.py"
+    assert _disallowed(init, src) == [
+        ("decode_x_stats", 6), ("build_x_shards", 8), ("<module>", 9),
+    ]
+    # the helper's name is exempt only in its own module
+    assert ("_map_rows", 2) in _disallowed("other.py", src)
+    assert grouped_pandas_calls(src) == [("build_x_shards", 8)]
 
 
-def test_media_batch_apis_are_called_only_by_map_rows_and_the_demos():
-    calls = batch_api_calls(pathlib.Path(multimodal.__file__).read_text())
-    assert [c for c in calls if c[0] not in _ALLOWED] == []
+def test_batch_apis_are_called_only_by_the_helpers_and_the_demos():
+    hits = package_hits(batch_api_calls)
+    calls = {(path, fn) for path, found in hits.items() for fn, _ in found}
+    assert calls - _ALLOWED == set()
     # every exemption is still used, so the list cannot go stale
-    assert {name for name, _ in calls} == _ALLOWED
+    assert calls == _ALLOWED
+    # one call each: eight batch-API calls in the package
+    assert sum(len(found) for found in hits.values()) == len(_ALLOWED)
+
+
+def test_shards_are_assembled_only_by_the_shard_helper():
+    hits = package_hits(grouped_pandas_calls)
+    calls = [(path, fn) for path, found in hits.items() for fn, _ in found]
+    assert calls == [
+        ("datafusion_impl_spark/operators/__init__.py", "_shards"),
+        ("datafusion_impl_spark/plans/analytics.py", "grouped_zscore_doclen"),
+    ]
 
 
 class _Probe:
@@ -122,4 +163,61 @@ def test_one_to_many_kernel_end_to_end_with_an_empty_partition(spark):
     )
     assert sorted(out.collect()) == [
         Row(id=4, k=0), Row(id=5, k=0), Row(id=5, k=1), Row(id=7, k=0),
+    ]
+
+
+class _GroupProbe:
+    """Stands in for a DataFrame: records the key and the function
+    ``_shards`` hands to ``groupBy(...).applyInPandas`` so the function can
+    run on local pandas groups."""
+
+    def groupBy(self, *keys):
+        self.keys = keys
+        return self
+
+    def applyInPandas(self, fn, schema):
+        self.fn, self.schema = fn, schema
+        return self
+
+
+def test_shards_hand_encode_the_shard_id_and_the_sorted_rows():
+    seen = []
+
+    def encode(shard_id, rows):
+        rows = list(rows)
+        seen.append((shard_id, rows))
+        return f"{shard_id}:{','.join(r.name for r in rows)}".encode()
+
+    probe = _shards(_GroupProbe(), ["k", "j"], encode)
+    assert probe.keys == ("shard_id",)
+    assert probe.schema == "shard_id int, blob binary"
+    group = pd.DataFrame({
+        "name": ["c", "a", "b"],
+        "shard_id": [7, 7, 7],
+        "k": [2, 1, 1],
+        "j": [0, 5, 3],
+    })
+    out = probe.fn(group)
+    assert out.to_dict("list") == {"shard_id": [7], "blob": [b"7:b,a,c"]}
+    ((shard_id, rows),) = seen
+    assert shard_id == 7 and type(shard_id) is int
+    # the other columns, in select order, sorted by (k, j)
+    assert [r._fields for r in rows] == [("name", "k", "j")] * 3
+    assert [tuple(r) for r in rows] == [("b", 1, 3), ("a", 1, 5), ("c", 2, 0)]
+
+
+def test_shards_end_to_end_one_row_per_shard(spark):
+    df = spark.createDataFrame(
+        [(i, i % 3, f"r{i}") for i in (5, 0, 4, 3, 1, 2, 6)],
+        "doc_id long, shard_id int, text string",
+    )
+    out = _shards(
+        df, "doc_id",
+        lambda sid, rows: " ".join(r.text for r in rows).encode(),
+    )
+    assert out.schema.simpleString() == "struct<shard_id:int,blob:binary>"
+    assert sorted(out.collect()) == [
+        Row(shard_id=0, blob=bytearray(b"r0 r3 r6")),
+        Row(shard_id=1, blob=bytearray(b"r1 r4")),
+        Row(shard_id=2, blob=bytearray(b"r2 r5")),
     ]

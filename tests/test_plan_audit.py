@@ -179,7 +179,7 @@ _ALLOWED_PYTHON = {
     "python_datasource_scan",     # Python Data Source API demo source
     "python_datasource_write_roundtrip",  # custom Python sink under test
     "cogrouped_order_gap_stats",  # cogroup().applyInPandas IS the API under test
-    "multimodal_bmp_decode_stats",  # mapInArrow build + decode (_map_rows) IS the operator
+    "multimodal_bmp_decode_stats",  # build + decode (operators._map_rows) IS the operator
     "multimodal_wav_decode_stats",  # same contract, audio (r7)
     "multimodal_y4m_decode_stats",  # same contract, video (r7)
     "multimodal_png_decode_stats",  # same contract, compressed image (r10)

@@ -211,6 +211,19 @@ def test_json_roundtrip(spark, tmp_path):
     assert sorted((r.id, r.val) for r in back.collect()) == [(1, "x"), (2, "y")]
 
 
+def test_two_builds_of_a_roundtrip_query_read_their_own_files(spark):
+    """Each build of a write-then-read query writes a fresh scratch
+    directory. With one fixed path per scale factor, the second build's
+    overwrite deleted the files the first build had planned to read, and
+    collecting the first afterwards failed with FILE_NOT_EXIST."""
+    from datafusion_impl_spark.sources.queries import jsonl_documents_roundtrip
+    from tests.conftest import SF_DIR
+
+    first = jsonl_documents_roundtrip(spark, SF_DIR)
+    second = jsonl_documents_roundtrip(spark, SF_DIR)
+    assert second.collect() == first.collect()
+
+
 def test_text_source(spark, tmp_path):
     """spark.read.text: one row per line, single `value` column."""
     p = tmp_path / "lines.txt"
