@@ -41,7 +41,7 @@ from __future__ import annotations
 
 from contextlib import contextmanager
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from datafusion_impl_spark.session import scoped_conf
@@ -103,8 +103,9 @@ def bounded_iteration(spark: SparkSession, n_rows: int):
     but with the session's core-count shuffle partitions every round schedules
     32-task stages whose fixed scheduling cost dwarfs the actual work. Heavy
     upstream plans are materialized at full parallelism BEFORE entering
-    this context, so only the tiny iterative stages are pinned, and the count
-    that sizes the pin is one cheap job over that checkpoint. Measured at
+    this context, so only the tiny iterative stages are pinned, and the row
+    count that sizes the pin is observed by that checkpoint's own job
+    (:func:`materialize`'s aggregates). Measured at
     sf0.1 (r13, graph family): components 5.7 s → ~2 s, PageRank 6.4 s → ~2 s.
 
     The pin goes through ``session.scoped_conf``: overlapping pins from
@@ -127,7 +128,7 @@ def bounded_iteration(spark: SparkSession, n_rows: int):
         yield
 
 
-def materialize(df):
+def materialize(df, **aggregates: Column):
     """Truncate lineage for a subtree consumed by multiple downstream
     branches (LSH tables self-joined for candidates, shingle sets reused by
     the verify pass, ...) or carried across the rounds of an iterative loop.
@@ -136,8 +137,21 @@ def materialize(df):
     is ``checkpoint()`` to reliable storage; the materialized frame is always
     the *bounded sketch* (signatures, buckets, shingle sets), never the raw
     corpus. This is the package's only checkpoint call, so that choice is
-    made here and nowhere else."""
-    return df.localCheckpoint(eager=True)
+    made here and nowhere else.
+
+    ``aggregates`` (name → aggregate column, e.g.
+    ``n=F.count(F.lit(1))``) are computed over the rows being checkpointed,
+    by the checkpoint's own job (``DataFrame.observe``), and the call then
+    returns ``(frame, values)`` with ``values`` a dict name → value. This is
+    how a loop learns its stop test or a frame's size: a ``count()`` or
+    ``first()`` on the checkpoint would be one more job (two with AQE on).
+    Over zero rows a count reads 0 and a sum/min/max reads None; ``observe``
+    rejects DISTINCT aggregates."""
+    if aggregates:
+        seen = Observation()
+        df = df.observe(seen, *[c.alias(name) for name, c in aggregates.items()])
+    out = df.localCheckpoint(eager=True)
+    return (out, seen.get) if aggregates else out
 
 
 def _map_rows(df: DataFrame, schema: str, fn) -> DataFrame:

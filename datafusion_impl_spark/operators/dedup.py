@@ -2252,13 +2252,6 @@ ORDER BY lang
 # blob re-chunks O(1) chunks instead of shifting every fixed-size block.
 # --------------------------------------------------------------------------
 
-#: 64-bit gear values (md5-derived, deterministic at import). 16-bit gear
-#: was measured at a 1/6 cut rate on this corpus (terms at shift >= 49
-#: lose their top bits to the modulus, starving bits 59..63 of entropy);
-#: full-width gear lands at the textbook 1/32. The oracle replays terms
-#: mod 2^64 via a hi/lo 32-bit split so every intermediate fits int128:
-#: max product (2^32-1)*2^95 = 2^127 - 2^95 < huge_int max.
-_GEAR_BITS = 64
 #: cut rule: 5 high bits of the rolling hash all zero — avg 32-byte chunks
 #: on this corpus (docs are ~300 bytes).
 _CDC_SHIFT, _CDC_MASK = 59, 31
@@ -2278,6 +2271,12 @@ def _gear_table() -> list[int]:
     ]
 
 
+#: 64-bit gear values (md5-derived, deterministic at import). 16-bit gear
+#: was measured at a 1/6 cut rate on this corpus (terms at shift >= 49
+#: lose their top bits to the modulus, starving bits 59..63 of entropy);
+#: full-width gear lands at the textbook 1/32. The oracle replays terms
+#: mod 2^64 via a hi/lo 32-bit split so every intermediate fits int128:
+#: max product (2^32-1)*2^95 = 2^127 - 2^95 < huge_int max.
 _GEAR = _gear_table()
 
 
@@ -2586,7 +2585,7 @@ def _sa_span_table(spark: SparkSession, sf_dir: str):
     # doubling START at k=32 (1-2 rounds to totality instead of 6) and the
     # lifting test window equality directly at levels 32/16, finishing the
     # <16 residual with one element-wise window compare.
-    toks = materialize(
+    toks, seen = materialize(
         docs.join(F.broadcast(offs), "doc_id")
         .select("doc_id", "tk", "off", F.posexplode("tk").alias("p", "token"))
         .select(
@@ -2596,9 +2595,10 @@ def _sa_span_table(spark: SparkSession, sf_dir: str):
             "token",
             F.slice("tk", F.col("p") + 1, 16).alias("pref16"),
             F.slice("tk", F.col("p") + 1, 32).alias("pref32"),
-        )
+        ),
+        n=F.count(F.lit(1)),
     )
-    n_sfx = toks.count()  # bounded planted corpus (cheap on a checkpoint)
+    n_sfx = seen["n"]
     # Every frame the doubling/lifting loops touch is one row per corpus
     # token, so the whole fixed-point section runs under the shared
     # bounded-iteration pin (operators.bounded_iteration — the graph-loop
@@ -2649,22 +2649,23 @@ def _sa_span_table(spark: SparkSession, sf_dir: str):
             # (identical rank values to a distinct → rank → join-back
             # shape, minus the distinct exchange and the join), sharded by
             # arithmetic on the dense major key — no sampling pass.
-            cur = materialize(
+            cur, seen = materialize(
                 _sa_dense_rank(
                     paired,
                     ["rank", "nrank"],
                     # div-safe: n_sfx >= 1 (non-empty corpus), a Python literal
                     F.expr(f"((rank - 1) * {_SA_RANK_PARTS}) div {n_sfx}"),
                     "nr",
-                ).select("gpos", F.col("nr").alias("rank"))
+                ).select("gpos", F.col("nr").alias("rank")),
+                top=F.max("rank"),
             )
             k *= 2
             tables[k] = cur
             # early exit (sound, not just fast): ranks total at k means
             # every k-token prefix is unique, so every LCP < k and the
             # remaining doubling rounds AND the lifting levels >= k are
-            # no-ops. One tiny agg over the fresh checkpoint per round.
-            if cur.agg(F.max("rank")).first()[0] == n_sfx:
+            # no-ops. The checkpoint's own job observed the top rank.
+            if seen["top"] == n_sfx:
                 break
         # cur = rank_k: total order (every LCP < k), so the dense rank IS
         # the suffix-array index; neighbors are rank i / i+1.

@@ -7,10 +7,9 @@ compression (pointer jumping), iterated TO A FIXED POINT. Each round (a)
 propagates the min label one hop along edges, then (b) compresses each
 node's label to its label's label — so reachable distance DOUBLES per round
 and ⌈log₂(diameter)⌉ rounds resolve any component. The loop stops when a
-round changes no label (one count() per round over the bounded label table —
-the standard iterate-and-check pattern; the count is against the same
-checkpoint the next round needs anyway, so the extra driver action
-costs one job over a tiny frame, never a corpus scan). A ``max_rounds``
+round changes no label: the propagation checkpoint counts the changed
+labels in its own job (``materialize``'s observed aggregates), so the stop
+test costs no action of its own. A ``max_rounds``
 backstop (default 16 ⇒ diameter 65536) bounds the loop on adversarial
 graphs; hitting it raises rather than returning silently-truncated
 components. The oracle computes the TRUE transitive closure with a
@@ -22,11 +21,13 @@ log-diameter rounds via compression is exactly the large/small-star
 connected-components recipe.
 
 Every query here reads the pair graph through :func:`_pair_graph`, which
-materializes it once. The four kernels (:func:`connected_components`,
-:func:`kcore_edges`, :func:`pagerank`, :func:`label_propagation`) share one
-input contract: the frame they are handed is a checkpoint or a cheap view
-of one (:func:`_symmetric`), they never checkpoint it, and they materialize
-only their per-round state.
+materializes it once and observes its size in the same job. The four
+kernels (:func:`connected_components`, :func:`kcore_edges`,
+:func:`pagerank`, :func:`label_propagation`) share one input contract: the
+frame they are handed is a checkpoint or a cheap view of one
+(:func:`_symmetric`), they never checkpoint it, they are told the row count
+of its symmetric edge list (it sizes their iteration pin, so they never
+count it), and they materialize only their per-round state.
 """
 
 from __future__ import annotations
@@ -49,11 +50,17 @@ __all__ = ["QUERIES", "ORACLES", "connected_components", "label_propagation"]
 _MAX_ROUNDS = 16
 
 
-def _pair_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _pair_graph(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
     """The MinHash near-dup pairs (``doc_a`` < ``doc_b``), materialized once:
     each graph query reads them more than once, and every read of the lazy
-    frame would re-run the whole MinHash pipeline."""
-    return materialize(dedup_documents_minhash(spark, sf_dir).select("doc_a", "doc_b"))
+    frame would re-run the whole MinHash pipeline. Also returns the row
+    count of their :func:`_symmetric` edge list, twice the pair count,
+    observed by the same job."""
+    pairs, seen = materialize(
+        dedup_documents_minhash(spark, sf_dir).select("doc_a", "doc_b"),
+        n=F.count(F.lit(1)),
+    )
+    return pairs, 2 * seen["n"]
 
 
 def _symmetric(pairs: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -69,46 +76,43 @@ def _symmetric(pairs: DataFrame, src: str = "src", dst: str = "dst") -> DataFram
     )
 
 
-def connected_components(pairs: DataFrame, max_rounds: int = _MAX_ROUNDS) -> DataFrame:
+def connected_components(pairs: DataFrame, n_edges: int,
+                         max_rounds: int = _MAX_ROUNDS) -> DataFrame:
     """Min-label propagation with path compression over an undirected pair
-    list (``doc_a``, ``doc_b``) → (``doc_id``, ``component``) where component
-    is the minimum doc_id in the node's connected component (exact: iterated
-    until no label changes; raises if ``max_rounds`` is hit first)."""
+    list (``doc_a``, ``doc_b``) with ``n_edges`` = 2 × its rows →
+    (``doc_id``, ``component``) where component is the minimum doc_id in
+    the node's connected component (exact: iterated until no label changes;
+    raises if ``max_rounds`` is hit first)."""
     edges = _symmetric(pairs)
-    with _bounded_iteration(edges.sparkSession, edges.count()):
+    with _bounded_iteration(edges.sparkSession, n_edges):
         labels = (
             edges.select(F.col("src").alias("doc_id"))
             .distinct()
             .withColumn("label", F.col("doc_id"))
         )
         for _ in range(max_rounds):
-            prev = labels
             # (a) one-hop propagation: each node also keeps its own label via
             # the union branch, so a single min-aggregate replaces
-            # join+left-join.
+            # join+left-join. That branch also carries the label into the
+            # round as ``prev`` (propagated rows have none), so the
+            # checkpoint's own job counts the labels the round changed.
             prop = edges.join(labels, edges.dst == labels.doc_id).select(
                 F.col("src").alias("doc_id"), "label"
             )
-            labels = (
-                labels.unionByName(prop)
+            labels, seen = materialize(
+                labels.withColumn("prev", F.col("label"))
+                .unionByName(prop, allowMissingColumns=True)
                 .groupBy("doc_id")
-                .agg(F.min("label").alias("label"))
+                .agg(F.min("label").alias("label"), F.min("prev").alias("prev")),
+                changed=F.count_if(F.col("label") != F.col("prev")),
             )
-            labels = materialize(labels)
             # Fixed-point check BEFORE paying the compression join: if one-hop
             # propagation changed nothing, then for every edge (u,v)
             # label(u) = label(v), i.e. each component already shares one label
-            # and compression would be the identity — return prev and skip the
-            # final round's self-join + checkpoint entirely. Both sides are
-            # bounded label tables, so this is one tiny join+count job.
-            changed = (
-                labels.select("doc_id", F.col("label").alias("new_label"))
-                .join(prev, "doc_id")
-                .filter(F.col("new_label") != F.col("label"))
-                .count()
-            )
-            if changed == 0:
-                return prev.select("doc_id", F.col("label").alias("component"))
+            # and compression would be the identity — skip the final round's
+            # self-join + checkpoint entirely.
+            if seen["changed"] == 0:
+                return labels.select("doc_id", F.col("label").alias("component"))
             # (b) path compression: label ← label's label. Every label IS a
             # node id present in `labels` (it starts as self and only ever
             # moves to a reachable node's id), so the inner join always
@@ -137,7 +141,7 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH pairs → connected components → cluster assignment
     (component id = minimum doc_id in the cluster, i.e. the canonical
     survivor an exact-keep-first policy would retain)."""
-    return connected_components(_pair_graph(spark, sf_dir)).orderBy("doc_id")
+    return connected_components(*_pair_graph(spark, sf_dir)).orderBy("doc_id")
 
 
 # Oracle: true transitive closure of the same pair graph via recursive CTE.
@@ -172,7 +176,7 @@ def dedup_near_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datafusion_impl_spark.operators.dedup import near_dup_corpus
 
     corpus = near_dup_corpus(spark, sf_dir).select("doc_id", "lang")
-    comp = connected_components(_pair_graph(spark, sf_dir))
+    comp = connected_components(*_pair_graph(spark, sf_dir))
     dropped = comp.filter(F.col("doc_id") != F.col("component")).select("doc_id")
     return (
         corpus.join(dropped, "doc_id", "left_anti")
@@ -229,46 +233,37 @@ _KCORE_KS = (2, 3)
 _KCORE_ROUNDS = 8
 
 
-def kcore_edges(spark: SparkSession, edges_sym: DataFrame, k: int,
+def kcore_edges(edges_sym: DataFrame, n_edges: int, k: int,
                 max_rounds: int = _KCORE_ROUNDS) -> DataFrame:
-    """Peel the symmetric edge list to its k-core: repeatedly drop nodes
-    with degree < k (and their edges) until a fixpoint. Returns the
-    surviving symmetric edges. Each round is one groupBy + two semi-joins
-    over the BOUNDED pair graph; the loop runs under the measured-size
+    """Peel the symmetric edge list (``n_edges`` rows) to its k-core:
+    repeatedly drop nodes with degree < k (and their edges) until a
+    fixpoint. Returns the surviving symmetric edges. Each round is one
+    groupBy + two semi-joins over the BOUNDED pair graph, checkpointed with
+    its row count observed; a round that keeps every edge is the fixpoint.
+    Round ``max_rounds + 1`` only verifies the budget: if it still drops
+    edges, the loop raises. Runs under the measured-size
     iteration-partition context like every fixed-point loop here."""
-    edges, n_edges = edges_sym, edges_sym.count()
-    with _bounded_iteration(spark, n_edges):
-        for _ in range(max_rounds):
+    edges = edges_sym
+    with _bounded_iteration(edges.sparkSession, n_edges):
+        for _ in range(max_rounds + 1):
             keep = (
                 edges.groupBy("s")
                 .agg(F.count(F.lit(1)).alias("deg"))
                 .filter(F.col("deg") >= k)
                 .select("s")
             )
-            nxt = materialize(
+            nxt, seen = materialize(
                 edges.join(keep, "s", "left_semi")
                 .join(keep.withColumnRenamed("s", "d"), "d", "left_semi")
-                .select("s", "d")
+                .select("s", "d"),
+                n=F.count(F.lit(1)),
             )
-            n_nxt = nxt.count()
-            if n_nxt == n_edges:
+            if seen["n"] == n_edges:
                 return edges
-            edges, n_edges = nxt, n_nxt
-        # one verification round past the budget
-        keep = (
-            edges.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
-            .filter(F.col("deg") >= k).select("s")
-        )
-        n_final = (
-            edges.join(keep, "s", "left_semi")
-            .join(keep.withColumnRenamed("s", "d"), "d", "left_semi")
-            .count()
-        )
-        if n_final != n_edges:  # pragma: no cover - adversarial graphs only
-            raise RuntimeError(
-                f"k-core (k={k}) not converged in {max_rounds} rounds"
-            )
-    return edges
+            edges, n_edges = nxt, seen["n"]
+    raise RuntimeError(  # pragma: no cover - adversarial graphs only
+        f"k-core (k={k}) not converged in {max_rounds} rounds"
+    )
 
 
 def dedup_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -284,11 +279,12 @@ def dedup_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus is never touched after candidate generation); each round is a
     degree count + two semi-joins, log-ish rounds on real graphs, with the
     same raise-don't-truncate convergence contract as components."""
-    edges = _symmetric(_pair_graph(spark, sf_dir), "s", "d")
+    pairs, n_edges = _pair_graph(spark, sf_dir)
+    edges = _symmetric(pairs, "s", "d")
     n_nodes_total = edges.select("s").distinct().count()
     outs = []
     for k in _KCORE_KS:
-        core = kcore_edges(spark, edges, k)
+        core = kcore_edges(edges, n_edges, k)
         stats = core.agg(
             F.count_distinct("s").cast("long").alias("n_core_nodes"),
             (F.count(F.lit(1)) / 2).cast("long").alias("n_core_edges"),
@@ -383,8 +379,8 @@ def split_group_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     corpus = near_dup_corpus(spark, sf_dir).select("doc_id", "lang")
-    pairs = _pair_graph(spark, sf_dir)
-    comp = connected_components(pairs)
+    pairs, n_edges = _pair_graph(spark, sf_dir)
+    comp = connected_components(pairs, n_edges)
     grouped = corpus.join(comp, "doc_id", "left").select(
         "doc_id",
         F.coalesce("component", "doc_id").alias("grp"),
@@ -494,7 +490,7 @@ def dedup_token_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = near_dup_corpus(spark, sf_dir).select(
         "doc_id", "lang", F.size(tokens("text")).cast("long").alias("n_tok")
     )
-    comp = connected_components(_pair_graph(spark, sf_dir))
+    comp = connected_components(*_pair_graph(spark, sf_dir))
     keep = corpus.join(comp, "doc_id", "left").withColumn(
         "survives",
         F.coalesce("component", "doc_id") == F.col("doc_id"),
@@ -579,10 +575,10 @@ _PR_DAMPING = 0.85
 _PR_ITERS = 5
 
 
-def pagerank(edges_sym: DataFrame, iters: int = _PR_ITERS,
+def pagerank(edges_sym: DataFrame, n_edges: int, iters: int = _PR_ITERS,
              damping: float = _PR_DAMPING) -> DataFrame:
     """Fixed-iteration PageRank over a symmetric (``src``, ``dst``) edge
-    list → (``doc_id``, ``degree``, ``rank``).
+    list of ``n_edges`` rows → (``doc_id``, ``degree``, ``rank``).
 
     Spark shape per iteration: one equi-join of the (``doc_id``,
     ``degree``, ``rank``) table with the edge list on ``src`` and one
@@ -594,12 +590,12 @@ def pagerank(edges_sym: DataFrame, iters: int = _PR_ITERS,
     as chained CTEs — no convergence test, no engine-specific stopping rule.
     A symmetric graph has no dangling nodes, so no teleport-mass correction
     term is needed."""
-    with _bounded_iteration(edges_sym.sparkSession, edges_sym.count()):
+    with _bounded_iteration(edges_sym.sparkSession, n_edges):
         deg = edges_sym.groupBy(F.col("src").alias("doc_id")).agg(
             F.count(F.lit(1)).alias("degree")
         )
         # n (node count) is a driver scalar: one job over the bounded node
-        # table, same pattern as connected_components' convergence count.
+        # table.
         n = deg.count()
         # div-safe: n = COUNT of pair-graph nodes, > 0 (planted dups
         # guarantee a non-empty graph); Python-side raise, not a NULL/inf
@@ -627,7 +623,8 @@ def dedup_pagerank_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     each duplicate cluster as canonical (a doc near-duplicating many others
     is the template; the one-off variants hang off it). Output: every node
     of the pair graph with its degree and 5-iteration PageRank."""
-    pr = pagerank(_symmetric(_pair_graph(spark, sf_dir)))
+    pairs, n_edges = _pair_graph(spark, sf_dir)
+    pr = pagerank(_symmetric(pairs), n_edges)
     return pr.select(
         "doc_id", "degree", F.round("rank", 6).alias("rank")
     ).orderBy("doc_id")
@@ -680,9 +677,11 @@ _PAGERANK_SQL = _pagerank_oracle()
 _LPA_ITERS = 3
 
 
-def label_propagation(edges_sym: DataFrame, iters: int = _LPA_ITERS) -> DataFrame:
+def label_propagation(edges_sym: DataFrame, n_edges: int,
+                      iters: int = _LPA_ITERS) -> DataFrame:
     """Synchronous label propagation (community detection) over a symmetric
-    (``src``, ``dst``) edge list → (``doc_id``, ``community``).
+    (``src``, ``dst``) edge list of ``n_edges`` rows → (``doc_id``,
+    ``community``).
 
     Each of the fixed ``iters`` rounds re-labels every node with the label
     most frequent among its neighbors (tie → minimum label) — the
@@ -693,7 +692,7 @@ def label_propagation(edges_sym: DataFrame, iters: int = _LPA_ITERS) -> DataFram
     with the edge list and one (src, label) count — both keyed on the
     bounded pair graph."""
     spark = edges_sym.sparkSession
-    with _bounded_iteration(spark, edges_sym.count()):
+    with _bounded_iteration(spark, n_edges):
         labels = (
             edges_sym.select(F.col("src").alias("doc_id"))
             .distinct()
@@ -731,7 +730,8 @@ def dedup_label_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     connected components when borderline LSH edges chain unrelated docs
     together: LPA keeps densely-linked clone groups in one community while
     a thin bridge between two groups does not merge them."""
-    return label_propagation(_symmetric(_pair_graph(spark, sf_dir))).orderBy("doc_id")
+    pairs, n_edges = _pair_graph(spark, sf_dir)
+    return label_propagation(_symmetric(pairs), n_edges).orderBy("doc_id")
 
 
 def dedup_community_bridges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -742,8 +742,8 @@ def dedup_community_bridges(spark: SparkSession, sf_dir: str) -> DataFrame:
     unrelated content (low isolation → tighten the LSH threshold before
     deduping). Composes :func:`label_propagation` with one edge⋈community
     join; a bridging edge counts toward BOTH endpoint communities."""
-    pairs = _pair_graph(spark, sf_dir)
-    comm = label_propagation(_symmetric(pairs))
+    pairs, n_edges = _pair_graph(spark, sf_dir)
+    comm = label_propagation(_symmetric(pairs), n_edges)
     ca = comm.select(F.col("doc_id").alias("doc_a"), F.col("community").alias("c_a"))
     cb = comm.select(F.col("doc_id").alias("doc_b"), F.col("community").alias("c_b"))
     tagged = pairs.join(ca, "doc_a").join(cb, "doc_b")
@@ -867,7 +867,7 @@ def graph_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     *bounded pair table* (near-dup volume, not corpus volume); wedge counts
     come from the symmetric degree table, sum of C(deg, 2). No step touches
     the corpus — this runs entirely on the dedup pipeline's output."""
-    pairs = _pair_graph(spark, sf_dir)
+    pairs, _ = _pair_graph(spark, sf_dir)
     e1 = pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
     e2 = pairs.select(F.col("doc_a").alias("b2"), F.col("doc_b").alias("c"))
     e3 = pairs.select(F.col("doc_a").alias("a3"), F.col("doc_b").alias("c3"))
@@ -961,7 +961,7 @@ def graph_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     horizon with a depth-bounded recursive CTE and takes MIN(d).
 
     No division anywhere; counts are exact integers."""
-    edges = _symmetric(_pair_graph(spark, sf_dir), "s", "d")
+    edges = _symmetric(_pair_graph(spark, sf_dir)[0], "s", "d")
     seeds = (
         edges.select(F.col("s").alias("node"))
         .distinct()

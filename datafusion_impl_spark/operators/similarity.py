@@ -75,12 +75,6 @@ def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     return e.withColumn("nrm", _norm(F.col("v")))
 
 
-def _cos(a: Column, b: Column) -> Column:
-    """Cosine from scratch (used only where norms aren't pre-joined)."""
-    # div-safe: unit-norm embeddings / nonzero centroid norms (data contract)
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
 # --------------------------------------------------------------------------
 # 1. Brute-force cosine top-k (exact baseline)
 # --------------------------------------------------------------------------

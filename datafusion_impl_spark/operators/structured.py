@@ -10,6 +10,8 @@ no Python anywhere).
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -207,19 +209,9 @@ ORDER BY event_type
 _POLY_N_TOKENS = 3
 
 
-def udtf_polymorphic_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """POLYMORPHIC Python UDTF (Spark 4): the output schema is computed at
-    analysis time by a static ``analyze`` method from the constant argument
-    — ``first_tokens(text, 3)`` materializes columns tok_0..tok_2, and
-    changing the literal re-plans a different width with no code change.
-    This is the table-function analogue of the reference's statically-typed
-    scalar UDF contract (``src/regexp-extract.rs:29``): types are fixed per
-    query, but derived from the call site.
-
-    The aggregate hashes every emitted cell per language, so the oracle
-    (list_extract in DuckDB) checks the full expansion, padding NULLs
-    included. Python in the dataflow is the point here (the API under
-    test); the production-path equivalent is a slice of ``split()``."""
+def _first_tokens():
+    """The polymorphic UDTF ``first_tokens(text, n)``: the first ``n``
+    whitespace tokens of ``text`` as columns tok_0..tok_{n-1}, NULL-padded."""
     from pyspark.sql.functions import udtf
     from pyspark.sql.types import StringType, StructField, StructType
 
@@ -244,8 +236,28 @@ def udtf_polymorphic_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
             toks = (text or "").split()
             yield tuple(toks[i] if i < len(toks) else None for i in range(n))
 
-    spark.udtf.register("first_tokens", udtf(FirstTokens))
-    return spark.sql(f"""
+    return udtf(FirstTokens)
+
+
+def udtf_polymorphic_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """POLYMORPHIC Python UDTF (Spark 4): the output schema is computed at
+    analysis time by a static ``analyze`` method from the constant argument
+    — ``first_tokens(text, 3)`` materializes columns tok_0..tok_2, and
+    changing the literal re-plans a different width with no code change.
+    This is the table-function analogue of the reference's statically-typed
+    scalar UDF contract (``src/regexp-extract.rs:29``): types are fixed per
+    query, but derived from the call site.
+
+    The aggregate hashes every emitted cell per language, so the oracle
+    (list_extract in DuckDB) checks the full expansion, padding NULLs
+    included. Python in the dataflow is the point here (the API under
+    test); the production-path equivalent is a slice of ``split()``."""
+    # a per-call name, dropped once the query is analyzed: the function
+    # would otherwise stay registered on the shared session
+    name = f"first_tokens_{uuid.uuid4().hex}"
+    spark.udtf.register(name, _first_tokens())
+    try:
+        return spark.sql(f"""
 SELECT d.lang,
        COUNT(*) AS n_docs,
        {", ".join(
@@ -253,10 +265,12 @@ SELECT d.lang,
            f"CAST(SUM(length(t.tok_{i})) AS BIGINT) AS len_tok_{i}"
            for i in range(_POLY_N_TOKENS)
        )}
-FROM {{documents}} d, LATERAL first_tokens(d.text, {_POLY_N_TOKENS}) t
+FROM {{documents}} d, LATERAL {name}(d.text, {_POLY_N_TOKENS}) t
 GROUP BY d.lang
 ORDER BY d.lang
 """, documents=load_table(spark, sf_dir, "documents"))
+    finally:
+        spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {name}")
 
 
 _POLY_UDTF_SQL = rf"""

@@ -3508,14 +3508,63 @@ _QCLF_LR = 4.0
 _QCLF_SYNC_ROUND = 10
 
 
-def _logreg_z(w: list[float]) -> Column:
-    """Linear score ``w0 + w1*x1 + w2*x2 + w3*x3`` over feature columns."""
-    return (
-        F.lit(w[0])
-        + F.lit(w[1]) * F.col("x1")
-        + F.lit(w[2]) * F.col("x2")
-        + F.lit(w[3]) * F.col("x3")
-    )
+#: the classifier's feature columns, in the order of their weights.
+_QCLF_XS = ("x1", "x2", "x3")
+
+
+def _logreg_z(w: list[float], xs: tuple[str, ...] = _QCLF_XS) -> Column:
+    """Linear score ``w0 + w1*x1 + w2*x2 + ...``, summed left to right."""
+    z = F.lit(w[0])
+    for wk, x in zip(w[1:], xs):
+        z = z + F.lit(wk) * F.col(x)
+    return z
+
+
+def _gd_fit(
+    frame: DataFrame,
+    ws: list[list[float]],
+    xs: tuple[str, ...] = _QCLF_XS,
+    ys: tuple[str, ...] = ("y",),
+    steps: int = _QCLF_STEPS,
+    lr: float = _QCLF_LR,
+) -> list[list[float]]:
+    """Full-batch logistic-regression GD, one model per label column of
+    ``ys`` (one-vs-rest) over the features ``xs``, from the weights ``ws``
+    (per model: bias, then one per feature). Each step is ONE distributed
+    aggregate whose result is a bounded gradient (``len(ws)·(len(xs)+1)``
+    doubles, the only ``.collect()``), the weight update happens
+    driver-side, and the next step ships the weights back as literals —
+    the broadcast-sufficient-statistics shape that runs unchanged at
+    100 TB (K passes over a persisted feature table, no driver-side data).
+    Gradient components and weights round half-away-from-zero at
+    ``_QCLF_SYNC_ROUND`` so DuckDB's WITH RECURSIVE replay of the same
+    schedule is bit-identical."""
+    # Every step is one single-row aggregate over the caller's checkpointed
+    # frame, so it runs under the shared bounded-iteration pin (see
+    # operators.bounded_iteration). A global aggregate's exchange has one
+    # partition whatever the pin's partition count, so only the pin's AQE
+    # half matters here and no row count sizes it.
+    with bounded_iteration(frame.sparkSession, 0):
+        for _ in range(steps):
+            grads = []
+            for y, w in zip(ys, ws):
+                # div-safe: 1 + exp(-z) >= 1
+                p = F.lit(1.0) / (F.lit(1.0) + F.exp(-_logreg_z(w, xs)))
+                r = p - F.col(y)
+                grads += [r, *(r * F.col(x) for x in xs)]
+            g = iter(
+                frame.agg(
+                    *[
+                        F.round(F.avg(c), _QCLF_SYNC_ROUND).alias(f"g{j}")
+                        for j, c in enumerate(grads)
+                    ]
+                ).collect()[0]  # bounded collect: one gradient per step
+            )
+            ws = [
+                [_round_half_up(wk - lr * next(g), _QCLF_SYNC_ROUND) for wk in w]
+                for w in ws
+            ]
+    return ws
 
 
 def _logreg_fit(
@@ -3524,37 +3573,10 @@ def _logreg_fit(
     lr: float = _QCLF_LR,
     init: list[float] | None = None,
 ) -> list[float]:
-    """Full-batch logistic-regression GD over a (x1, x2, x3, y) frame:
-    each step is ONE distributed aggregate whose result is a bounded
-    4-double gradient (the only ``.collect()``), the weight update happens
-    driver-side, and the next step ships the weights back as literals —
-    the broadcast-sufficient-statistics shape that runs unchanged at
-    100 TB (K passes over a persisted feature table, no driver-side data).
-    Gradient components and weights round half-away-from-zero at
-    ``_QCLF_SYNC_ROUND`` so DuckDB's WITH RECURSIVE replay of the same
-    schedule is bit-identical. ``init`` warm-starts from existing weights
+    """The classifier's 4 weights, fitted by :func:`_gd_fit` over a
+    (x1, x2, x3, y) frame. ``init`` warm-starts from existing weights
     (model refresh) instead of zeros."""
-    w = list(init) if init is not None else [0.0, 0.0, 0.0, 0.0]
-    # Every step is one single-row aggregate over the caller's checkpointed
-    # feature frame — a fixed-point loop over bounded state, so it runs
-    # under the shared bounded-iteration pin (see operators.bounded_iteration;
-    # callers materialize feats at full parallelism first).
-    with bounded_iteration(feats.sparkSession, feats.count()):
-        for _ in range(steps):
-            # div-safe: 1 + exp(-z) >= 1
-            p = F.lit(1.0) / (F.lit(1.0) + F.exp(-_logreg_z(w)))
-            r = p - F.col("y")
-            g = feats.agg(
-                F.round(F.avg(r), _QCLF_SYNC_ROUND).alias("g0"),
-                F.round(F.avg(r * F.col("x1")), _QCLF_SYNC_ROUND).alias("g1"),
-                F.round(F.avg(r * F.col("x2")), _QCLF_SYNC_ROUND).alias("g2"),
-                F.round(F.avg(r * F.col("x3")), _QCLF_SYNC_ROUND).alias("g3"),
-            ).collect()[0]  # bounded collect: one 4-double gradient per step
-            w = [
-                _round_half_up(w[j] - lr * g[j], _QCLF_SYNC_ROUND)
-                for j in range(4)
-            ]
-    return w
+    return _gd_fit(feats, [init or [0.0] * 4], steps=steps, lr=lr)[0]
 
 
 def quality_feature_frame(df: DataFrame, keep: list[str]) -> DataFrame:
@@ -3724,64 +3746,6 @@ _TIER_CUTS = (0.5, 0.65)
 _TIER_NAMES = ("c_low", "b_mid", "a_high")
 
 
-def _logreg_fit_multi(
-    feats: DataFrame,
-    n_classes: int,
-    steps: int = _QCLF_STEPS,
-    lr: float = _QCLF_LR,
-) -> list[list[float]]:
-    """One-vs-rest logistic regression over one-hot label columns
-    ``y0..y{n-1}``: each GD step is STILL one distributed aggregate — it
-    just carries ``4·n_classes`` rounded gradient components — so the
-    multiclass upgrade costs zero extra passes over the data. Same
-    10-dp re-sync discipline as :func:`_logreg_fit`."""
-    ws = [[0.0] * 4 for _ in range(n_classes)]
-    xs = ("x1", "x2", "x3")
-    return _logreg_fit_multi_inner(feats, n_classes, steps, lr, ws, xs)
-
-
-def _logreg_fit_multi_inner(feats, n_classes, steps, lr, ws, xs):
-    # same bounded-iteration discipline as _logreg_fit: K single-row
-    # aggregates over the caller's checkpointed feature frame.
-    with bounded_iteration(feats.sparkSession, feats.count()):
-        return _logreg_steps_multi(feats, n_classes, steps, lr, ws, xs)
-
-
-def _logreg_steps_multi(feats, n_classes, steps, lr, ws, xs):
-    for _ in range(steps):
-        aggs = []
-        for c in range(n_classes):
-            z = (
-                F.lit(ws[c][0])
-                + F.lit(ws[c][1]) * F.col("x1")
-                + F.lit(ws[c][2]) * F.col("x2")
-                + F.lit(ws[c][3]) * F.col("x3")
-            )
-            # div-safe: 1 + exp(-z) >= 1
-            p = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
-            r = p - F.col(f"y{c}")
-            aggs.append(
-                F.round(F.avg(r), _QCLF_SYNC_ROUND).alias(f"g{c}_0")
-            )
-            for k, x in enumerate(xs, start=1):
-                aggs.append(
-                    F.round(F.avg(r * F.col(x)), _QCLF_SYNC_ROUND).alias(
-                        f"g{c}_{k}"
-                    )
-                )
-        row = feats.agg(*aggs).collect()[0]  # bounded: 4*n_classes doubles
-        ws = [
-            [
-                _round_half_up(
-                    ws[c][k] - lr * row[f"g{c}_{k}"], _QCLF_SYNC_ROUND
-                )
-                for k in range(4)
-            ]
-            for c in range(n_classes)
-        ]
-    return ws
-
-
 def tier_classifier_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MULTICLASS model-based curation: one-vs-rest logistic regression
     distills the 3-tier curriculum labeler (the fixed score cutoffs of
@@ -3819,14 +3783,15 @@ def tier_classifier_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
             ],
         )
     )
-    ws = _logreg_fit_multi(feats, len(_TIER_NAMES))
-    zs = [
-        F.lit(w[0])
-        + F.lit(w[1]) * F.col("x1")
-        + F.lit(w[2]) * F.col("x2")
-        + F.lit(w[3]) * F.col("x3")
-        for w in ws
-    ]
+    # one-vs-rest: every GD step is STILL one distributed aggregate, it
+    # just carries 4 gradient components per class, so the multiclass
+    # upgrade costs zero extra passes over the data
+    ws = _gd_fit(
+        feats,
+        [[0.0] * 4 for _ in _TIER_NAMES],
+        ys=tuple(f"y{c}" for c in range(len(_TIER_NAMES))),
+    )
+    zs = [_logreg_z(w) for w in ws]
     best = F.array_max(
         F.array(
             *[
@@ -4217,30 +4182,6 @@ _PLATT_STEPS = 8
 _PLATT_LR = 2.0
 
 
-def _platt_fit(held: DataFrame, steps: int = _PLATT_STEPS,
-               lr: float = _PLATT_LR) -> tuple[float, float]:
-    """Fit Platt scaling ``sigma(a·z + b)`` on a (z, y) frame by the same
-    broadcast-sufficient-statistics GD as :func:`_logreg_fit`: each step
-    is one distributed aggregate returning a 2-double gradient, weights
-    update driver-side, 10-dp sync rounding keeps the DuckDB WITH
-    RECURSIVE replay bit-identical. Init (1, 0) = the identity map, so
-    every step is a strict recalibration move."""
-    a, b = 1.0, 0.0
-    for _ in range(steps):
-        # div-safe: 1 + exp(-t) >= 1
-        p = F.lit(1.0) / (
-            F.lit(1.0) + F.exp(-(F.lit(a) * F.col("z") + F.lit(b)))
-        )
-        r = p - F.col("y")
-        g = held.agg(
-            F.round(F.avg(r * F.col("z")), _QCLF_SYNC_ROUND).alias("ga"),
-            F.round(F.avg(r), _QCLF_SYNC_ROUND).alias("gb"),
-        ).collect()[0]  # bounded collect: one 2-double gradient per step
-        a = _round_half_up(a - lr * g["ga"], _QCLF_SYNC_ROUND)
-        b = _round_half_up(b - lr * g["gb"], _QCLF_SYNC_ROUND)
-    return a, b
-
-
 def classifier_platt_recalibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PLATT SCALING — the remediation step for what
     :func:`classifier_calibration_audit` diagnoses: train the classifier
@@ -4267,7 +4208,12 @@ def classifier_platt_recalibration(spark: SparkSession, sf_dir: str) -> DataFram
             F.round(_logreg_z(w), _QCLF_SYNC_ROUND).alias("z"), "y"
         )
     )
-    a, b = _platt_fit(held)
+    # Platt scaling sigma(a·z + b) is logistic regression on the one
+    # feature z: weights (b, a), from (0, 1) = the identity map, so every
+    # step is a strict recalibration move. Its score b + a·z is the same
+    # double as the oracle's a·z + b (a two-term sum commutes exactly).
+    [(b, a)] = _gd_fit(held, [[0.0, 1.0]], xs=("z",), steps=_PLATT_STEPS,
+                       lr=_PLATT_LR)
     # div-safe: 1 + exp(-t) >= 1 (both stages)
     p_raw = F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("z")))
     p_cal = F.lit(1.0) / (

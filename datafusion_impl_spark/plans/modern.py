@@ -398,31 +398,41 @@ def sql_udf_revenue_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     gaps), and the spine spans [0, 110000) which covers TPC-H's price
     domain (max ~104,950) — every lineitem row lands in exactly one bin.
     Revenue sums go through DECIMAL(18,4) casts so the aggregate is
-    addition-order-independent and engine-portable."""
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION disc_price_sqludf(p DOUBLE, d DOUBLE) "
-        "RETURNS DOUBLE RETURN p * (1 - d)"
-    )
-    spark.sql(
-        """CREATE OR REPLACE TEMPORARY FUNCTION price_bins_sqludf(lo INT, hi INT, step INT)
+    addition-order-independent and engine-portable.
+
+    The functions live on the shared session, so each call gives them its
+    own names and drops them once the query is analyzed (the analyzed
+    frame keeps their bodies)."""
+    tag = uuid.uuid4().hex
+    disc, bins = f"disc_price_sqludf_{tag}", f"price_bins_sqludf_{tag}"
+    try:
+        spark.sql(
+            f"CREATE TEMPORARY FUNCTION {disc}(p DOUBLE, d DOUBLE) "
+            "RETURNS DOUBLE RETURN p * (1 - d)"
+        )
+        spark.sql(
+            f"""CREATE TEMPORARY FUNCTION {bins}(lo INT, hi INT, step INT)
 RETURNS TABLE(bin_lo INT, bin_hi INT)
 RETURN SELECT t.b AS bin_lo, t.b + step AS bin_hi
        FROM (SELECT explode(sequence(lo, hi, step)) AS b) t"""
-    )
-    return spark.sql(
-        """
+        )
+        return spark.sql(
+            f"""
 SELECT b.bin_lo, b.bin_hi,
        COUNT(*) AS n_items,
-       ROUND(CAST(SUM(CAST(disc_price_sqludf(l_extendedprice, l_discount)
+       ROUND(CAST(SUM(CAST({disc}(l_extendedprice, l_discount)
                            AS DECIMAL(18,4))) AS DOUBLE), 2) AS revenue
-FROM {lineitem} l
-JOIN price_bins_sqludf(0, 100000, 10000) b
+FROM {{lineitem}} l
+JOIN {bins}(0, 100000, 10000) b
   ON l.l_extendedprice >= b.bin_lo AND l.l_extendedprice < b.bin_hi
 GROUP BY b.bin_lo, b.bin_hi
 ORDER BY b.bin_lo
 """,
-        lineitem=load_table(spark, sf_dir, "lineitem"),
-    )
+            lineitem=load_table(spark, sf_dir, "lineitem"),
+        )
+    finally:
+        for fn in (disc, bins):
+            spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {fn}")
 
 
 _SQL_UDF_SQL = """
@@ -581,8 +591,7 @@ WHERE l_quantity >= 25
 # --------------------------------------------------------------------------
 
 _HW_ALPHA, _HW_BETA, _HW_GAMMA = 0.3, 0.1, 0.2
-#: seasonal period (months) and the block size of the blocked recursion.
-_HW_SEASON = 12
+#: block size of the blocked recursion: one seasonal period (12 months).
 _HW_BLOCK = 12
 
 #: step expressions, inlined identically in BOTH engines (sub-expressions

@@ -40,11 +40,6 @@ TABLES = (
     "embeddings",
 )
 
-#: Small dimension tables that should always be broadcast in joins: at any
-#: scale factor these stay tiny (region=5, nation=25 rows) or grow far slower
-#: than the fact tables.
-BROADCAST_DIMS = frozenset({"region", "nation"})
-
 #: Reader options per format; the schema cache is keyed by format alone, so
 #: a format always reads with the same options.
 _OPTIONS = {"csv": {"header": True, "inferSchema": True}, "parquet": {}}

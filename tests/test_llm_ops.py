@@ -81,7 +81,7 @@ def test_connected_components_chain_and_islands(spark):
         [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22), (20, 22)],
         schema="doc_a long, doc_b long",
     )
-    got = {r.doc_id: r.component for r in connected_components(pairs).collect()}
+    got = {r.doc_id: r.component for r in connected_components(pairs, 14).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
 
 
@@ -122,7 +122,7 @@ def test_pagerank_star_hub_and_mass_conservation(spark):
     edges = pairs.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     ).union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-    got = {r.doc_id: r.rank for r in pagerank(edges).collect()}
+    got = {r.doc_id: r.rank for r in pagerank(edges, 8).collect()}
     assert set(got) == {1, 2, 3, 4, 5}
     assert got[1] > max(got[i] for i in (2, 3, 4, 5))
     leaf_ranks = [got[i] for i in (2, 3, 4, 5)]
@@ -452,17 +452,24 @@ def test_tablesample_repeatable_is_stable_for_fixed_partitioning(spark):
 def test_polymorphic_udtf_width_follows_argument(spark):
     """The analyze()-computed schema must track the constant argument: the
     same UDTF called with n=2 and n=4 plans 2 and 4 token columns."""
-    from datafusion_impl_spark.operators.structured import udtf_polymorphic_tokens
+    from datafusion_impl_spark.operators.structured import (
+        _first_tokens,
+        udtf_polymorphic_tokens,
+    )
     from tests.conftest import SF_DIR
 
-    # registering via the query also registers the function for reuse
     df = udtf_polymorphic_tokens(spark, SF_DIR)
     assert sum(c.startswith("n_tok_") for c in df.columns) == 3
-    two = spark.sql("SELECT t.* FROM LATERAL first_tokens('a b c', 2) t")
-    four = spark.sql("SELECT t.* FROM LATERAL first_tokens('a b c', 4) t")
-    assert two.columns == ["tok_0", "tok_1"]
-    assert four.columns == ["tok_0", "tok_1", "tok_2", "tok_3"]
-    assert [tuple(r) for r in four.collect()] == [("a", "b", "c", None)]
+    # the query drops its own registration, so register the same UDTF here
+    spark.udtf.register("first_tokens_width", _first_tokens())
+    try:
+        two = spark.sql("SELECT t.* FROM LATERAL first_tokens_width('a b c', 2) t")
+        four = spark.sql("SELECT t.* FROM LATERAL first_tokens_width('a b c', 4) t")
+        assert two.columns == ["tok_0", "tok_1"]
+        assert four.columns == ["tok_0", "tok_1", "tok_2", "tok_3"]
+        assert [tuple(r) for r in four.collect()] == [("a", "b", "c", None)]
+    finally:
+        spark.sql("DROP TEMPORARY FUNCTION IF EXISTS first_tokens_width")
 
 
 def test_pq_adc_distances_track_exact_distances(spark):
@@ -749,7 +756,7 @@ def test_label_propagation_communities_on_toy_graphs(spark):
     edges = pairs.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     ).union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-    got = {r.doc_id: r.community for r in label_propagation(edges).collect()}
+    got = {r.doc_id: r.community for r in label_propagation(edges, 14).collect()}
     assert set(got) == {1, 2, 3, 10, 11, 12}
     left = {got[i] for i in (1, 2, 3)}
     right = {got[i] for i in (10, 11, 12)}
@@ -2098,10 +2105,10 @@ def test_kcore_planted_graph_peels_correctly(spark):
     edges = spark.createDataFrame(
         [(a, b) for a, b in pairs] + [(b, a) for a, b in pairs], ["s", "d"]
     )
-    core2 = kcore_edges(spark, edges, 2)
+    core2 = kcore_edges(edges, 2 * len(pairs), 2)
     nodes2 = {r.s for r in core2.select("s").distinct().collect()}
     assert nodes2 == {1, 2, 3, 4, 10, 11, 12, 13}
-    core3 = kcore_edges(spark, edges, 3)
+    core3 = kcore_edges(edges, 2 * len(pairs), 3)
     nodes3 = {r.s for r in core3.select("s").distinct().collect()}
     assert nodes3 == {1, 2, 3, 4}
 

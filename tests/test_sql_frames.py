@@ -2,7 +2,8 @@
 parameters (``spark.sql(text, orders=df)``), which PySpark registers under a
 unique name for the one call and drops after analysis. No query names a
 view in the shared session, so two threads at two scale factors read their
-own tables, and no call leaves a view or a session variable behind.
+own tables, and no call leaves a view, a session variable or a temporary
+function behind.
 ``registry.register_all`` stays the one place that names views: its
 contract is to name them."""
 
@@ -132,3 +133,16 @@ def test_sql_queries_leave_no_view_or_variable_behind(spark):
     assert sorted(t.name for t in session.catalog.listTables()) == before
     catalogs = session._jsparkSession.sessionState().catalogManager()
     assert catalogs.tempVariableManager().isEmpty()
+
+
+def test_sql_queries_leave_no_temporary_function_behind(spark):
+    session = spark.newSession()
+
+    def temporary_functions():
+        return sorted(f.name for f in session.catalog.listFunctions() if f.isTemporary)
+
+    before = temporary_functions()
+    for name in ("sql_udf_revenue_bins", "udtf_polymorphic_tokens"):
+        # the analyzed frame still runs once its functions are dropped
+        assert _QUERIES[name](session, SF_DIR).count() > 0
+    assert temporary_functions() == before
